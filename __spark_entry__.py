@@ -36,13 +36,35 @@ def entry(spark: SparkSession) -> DataFrame:
 # (BASELINE.md "sweep rotation") so every query converges to at least one
 # all-green CORRECTNESS_r*.json row across rounds.
 _SWEEP_FIRST = (
+    # graph-kernel rotation: every operator whose Spark path now runs
+    # through queries/kernels.py (or whose cached intermediates moved
+    # from persist() to checkpoints) goes first, so the driver re-checks
+    # it this round.
+    "kg_graph_closure",
+    "kg_graph_call_chain",
+    "kg_graph_pagerank",
+    "kg_graph_ppr",
+    "kg_graph_hits",
+    "kg_graph_label_prop",
+    "kg_graph_eigenvector",
+    "kg_graph_katz",
+    "kg_graph_lpa",
+    "kg_graph_conductance",
+    "kg_graph_closeness",
+    "kg_entity_subgraph",
+    "kg_graph_neighborhood",
+    "kg_graph_bowtie",
+    "kg_graph_scc",
+    "kg_graph_anf_hll",
+    "kg_pipeline_lineage",
+    "kg_call_chain",
+    "kg_closure_from_spark",
     # round-5 rotation (VERDICT r04 item 2): every name below lacks an
     # all-green driver CORRECTNESS row across r01-r04. Order: the new
     # round-5 query first, then the 66-name kg_* family (the oldest
     # uncovered family), then the remaining uncovered names by family.
     # The ~50-query sweep window walks this head; names already green
     # hold rows in CORRECTNESS_r01-r04.
-    "kg_graph_anf_hll",
     "kg_search_fuzzy",
     "kg_search_fuzzy_idx",
     "kg_search_stem",
@@ -55,7 +77,6 @@ _SWEEP_FIRST = (
     "kg_incremental_delete_counts",
     "kg_graph_schema_summary",
     "kg_graph_triads",
-    "kg_graph_closeness",
     "kg_graph_weighted_path",
     "kg_graph_truss",
     "kg_triple_pr",
@@ -75,13 +96,9 @@ _SWEEP_FIRST = (
     "kg_metapath_census",
     "kg_domain_graph",
     "kg_template_stats",
-    "kg_graph_eigenvector",
     "kg_gnn_export",
     "kg_graph_modularity",
-    "kg_graph_scc",
     "kg_graph_edge_timeline",
-    "kg_graph_lpa",
-    "kg_graph_katz",
     "kg_edge_confidence",
     "kg_fact_conflicts",
     "kg_transitive_reduction",
@@ -99,13 +116,9 @@ _SWEEP_FIRST = (
     "kg_fact_sources",
     "kg_qa_unanswerable",
     "kg_gnn_neighbor_sample",
-    "kg_pipeline_lineage",
-    "kg_entity_subgraph",
     "kg_triple_pr_by_pred",
     "kg_graph_butterflies",
     "kg_graph_brokerage",
-    "kg_graph_bowtie",
-    "kg_graph_neighborhood",
     "kg_anchor_texts",
     "kg_graph_richclub",
     "kg_entity_hash_embed",

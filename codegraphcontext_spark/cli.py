@@ -90,114 +90,44 @@ def _entity_ids(nodes, name):
     ).select("node_id")
 
 
+def _seeds(ids):
+    """A node_id frame as frontier_bfs seeds, all under one source key."""
+    return ids.select(F.lit(0).alias("source"), F.col("node_id").alias("node"))
+
+
 def _closure(edges, nodes, seed, forward: bool, depth: int):
     """Bounded transitive closure over open-relation edges (Q15/Q16 analog,
-    reference ``code_finder.py:449-493`` ``[:CALLS*]``). BFS driver loop:
-    each hop is a broadcast semi-join frontier expansion with a visited-set
-    anti-join; ``localCheckpoint`` per hop cuts lineage. The frontier is
-    entity-dictionary-sized, so the broadcasts stay small at any corpus
-    scale."""
-    open_e = edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
+    reference ``code_finder.py:449-493`` ``[:CALLS*]``): the kernel's
+    frontier BFS from the seed entities, forward or backward. Returns the
+    reached nodes (seeds excluded) with their first-visit depth."""
+    from .queries.kernels import frontier_bfs
+
     src, dst = ("subj_id", "obj_id") if forward else ("obj_id", "subj_id")
-    frontier = seed.localCheckpoint()
-    reached = None
-    for hop in range(1, depth + 1):
-        step = (
-            open_e.join(
-                F.broadcast(frontier.withColumnRenamed("node_id", src)),
-                on=src,
-            )
-            .select(F.col(dst).alias("node_id"))
-            .distinct()
-            .withColumn("depth", F.lit(hop))
-        )
-        if reached is not None:
-            step = step.join(
-                reached.select("node_id"), on="node_id", how="left_anti"
-            )
-        step = step.join(seed, on="node_id", how="left_anti").localCheckpoint()
-        if step.isEmpty():
-            break
-        reached = step if reached is None else (
-            reached.unionByName(step).localCheckpoint()
-        )
-        frontier = step.select("node_id")
-    if reached is None:
-        return nodes.select(
-            "node_id", "name", F.lit(0).alias("depth")
-        ).limit(0)
+    adj = edges.where(~F.col("pred").isin(*_CLOSED_PREDS)).select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    )
+    reached = frontier_bfs(adj, _seeds(seed), depth).where(F.col("depth") > 0)
     return (
-        reached.join(nodes.select("node_id", "name"), on="node_id")
+        reached.select(F.col("node").alias("node_id"), "depth")
+        .join(nodes.select("node_id", "name"), on="node_id")
         .select("node_id", "name", "depth")
         .orderBy("depth", "name", "node_id")
     )
 
 
-def _call_chain(edges, nodes, start, end, depth: int):
-    """Bounded chains start->end over open relations, shortest first (Q17
-    analog, reference ``code_finder.py:495-520`` shortestPath with maxd).
-    BFS keeps a ``path`` array column of node ids; cycles are pruned with
-    ``array_contains``; chains that land on the target stop extending.
-    Output is the chain rendered through entity names."""
-    # distinct pairs: parallel edges (same endpoints, different predicates)
-    # must not multiply paths
-    open_e = edges.where(~F.col("pred").isin(*_CLOSED_PREDS)).select(
-        "subj_id", "obj_id"
-    ).distinct().localCheckpoint()
-    targets = F.broadcast(
-        end.withColumnRenamed("node_id", "_target")
+def _ball(edges, seed, hops: int):
+    """Node ids within ``hops`` undirected hops of ``seed`` (node_id),
+    seeds included — the kernel's frontier BFS over both edge
+    directions."""
+    from .queries.kernels import frontier_bfs
+
+    und = edges.select(
+        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
+    ).unionByName(
+        edges.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
     )
-    paths = start.select(
-        F.array("node_id").alias("path"), F.col("node_id").alias("tip")
-    ).localCheckpoint()
-    hits = None
-    for _ in range(depth):
-        grown = (
-            open_e.join(
-                F.broadcast(paths.withColumnRenamed("tip", "subj_id")),
-                on="subj_id",
-            )
-            .where(~F.array_contains(F.col("path"), F.col("obj_id")))
-            .select(
-                F.concat(F.col("path"), F.array("obj_id")).alias("path"),
-                F.col("obj_id").alias("tip"),
-            )
-            .localCheckpoint()
-        )
-        found = grown.join(
-            targets, grown.tip == F.col("_target"), "left_semi"
-        )
-        hits = found if hits is None else hits.unionByName(found)
-        # chains that reached the target stop extending (simple paths)
-        paths = grown.join(
-            targets, grown.tip == F.col("_target"), "left_anti"
-        ).localCheckpoint()
-        if paths.isEmpty():
-            break
-    if hits is None:
-        return nodes.select(
-            F.lit("").alias("chain"), F.lit(0).alias("length")
-        ).limit(0)
-    id2name = nodes.select("node_id", "name")
-    exploded = hits.dropDuplicates(["path"]).select(
-        F.col("path"), F.posexplode("path").alias("pos", "node_id")
-    ).join(id2name, on="node_id")
-    return (
-        exploded.groupBy("path")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "name"))
-                    ),
-                    lambda s: s["name"],
-                ),
-                " -> ",
-            ).alias("chain"),
-            F.max("pos").alias("length"),
-        )
-        .select("chain", "length")
-        .orderBy("length", "chain")
+    return frontier_bfs(und, _seeds(seed), hops).select(
+        F.col("node").alias("node_id")
     )
 
 
@@ -403,7 +333,7 @@ def cmd_query(args) -> int:
         # personalized-PageRank relatedness from the seed entity (the
         # seed-conditioned upgrade of cooccurrence; random walk with
         # restart, all restart/dangling mass back to the seed)
-        from .queries.graph_queries import ppr_ranks
+        from .queries.graph_queries import pagerank_ranks
 
         seed = _entity_ids(nodes, name).head()
         if seed is None:
@@ -411,7 +341,7 @@ def cmd_query(args) -> int:
                   file=sys.stderr)
             return 2
         res = (
-            ppr_ranks(nodes, edges, seed.node_id)
+            pagerank_ranks(nodes, edges, seed.node_id)
             .where((F.col("rank") > 0) & (F.col("node_id") != seed.node_id))
             .join(
                 nodes.select("node_id", "name", "node_type"), on="node_id"
@@ -656,43 +586,23 @@ def cmd_query(args) -> int:
     elif args.query == "subgraph":
         # 2-hop undirected induced edge set around the entity — the
         # GraphRAG evidence cut (kg_entity_subgraph is the oracle twin).
-        # Driver loop of broadcast frontier joins; frontier stays
-        # dictionary-sized.
-        t = (
+        # Frontier BFS; the frontier stays dictionary-sized.
+        from .queries.kernels import pin
+
+        t = pin(
             edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
             .select("subj_id", "pred", "obj_id")
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        und = (
-            t.select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
-            .unionByName(
-                t.select(
-                    F.col("obj_id").alias("a"), F.col("subj_id").alias("b")
-                )
-            )
-            .distinct()
-        )
-        frontier = _entity_ids(nodes, name).select(
-            F.col("node_id").alias("id")
-        )
-        seen = frontier
-        for _ in range(args.depth or 2):
-            frontier = (
-                und.join(F.broadcast(frontier), on=und["a"] == F.col("id"))
-                .select(F.col("b").alias("id"))
-                .distinct()
-            )
-            seen = seen.unionByName(frontier).distinct()
-        keep = F.broadcast(seen)
+        keep = F.broadcast(_ball(t, _entity_ids(nodes, name), args.depth or 2))
         names_df = nodes.select("node_id", "name")
         res = (
             t.join(
-                keep.withColumnRenamed("id", "subj_id"), on="subj_id",
+                keep.withColumnRenamed("node_id", "subj_id"), on="subj_id",
                 how="left_semi",
             )
             .join(
-                keep.withColumnRenamed("id", "obj_id"), on="obj_id",
+                keep.withColumnRenamed("node_id", "obj_id"), on="obj_id",
                 how="left_semi",
             )
             .join(
@@ -716,8 +626,10 @@ def cmd_query(args) -> int:
                 "example": "acme corp->globex",
             }), file=sys.stderr)
             return 2
+        from .queries.graph_queries import call_chain
+
         a, b = (s.strip().lower() for s in args.arg.split("->", 1))
-        res = _call_chain(
+        res = call_chain(
             edges, nodes, _entity_ids(nodes, a), _entity_ids(nodes, b),
             args.depth,
         ).limit(args.limit)
@@ -985,25 +897,7 @@ def _subgraph(spark, workdir: str, seed_substring: str, hops: int, limit: int):
         )
         .select("node_id")
     )
-    frontier = seed
-    member_ids = seed
-    for _ in range(hops):
-        touched = (
-            edges.join(
-                F.broadcast(frontier.withColumnRenamed("node_id", "subj_id")),
-                on="subj_id", how="left_semi",
-            )
-            .select(F.col("obj_id").alias("node_id"))
-            .unionByName(
-                edges.join(
-                    F.broadcast(frontier.withColumnRenamed("node_id", "obj_id")),
-                    on="obj_id", how="left_semi",
-                ).select(F.col("subj_id").alias("node_id"))
-            )
-            .distinct()
-        )
-        frontier = touched.join(member_ids, on="node_id", how="left_anti")
-        member_ids = member_ids.unionByName(frontier).distinct().localCheckpoint()
+    member_ids = _ball(edges, seed, hops)
     sub_edges = (
         edges.join(
             F.broadcast(member_ids.withColumnRenamed("node_id", "subj_id")),

@@ -262,8 +262,7 @@ class PipelineRunner:
             "wall_ms": wall_ms,
             "extractor_version": EXTRACTOR_VERSION,
         }
-        with open(os.path.join(d, "manifest.json"), "w") as f:
-            json.dump(manifest, f)
+        self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
         return committed
 
@@ -301,17 +300,20 @@ class PipelineRunner:
                 ) >> 1
             ids.append(idx)
             counts.append(meta.num_rows)
+        # tmp-then-rename, like _write_json_atomic: a crash mid-write leaves
+        # the previous lineage file in place, never a missing or torn one.
+        # The _-prefixed temp name is invisible to parquet directory readers.
         lineage_dir = os.path.join(stage_dir, "lineage")
         os.makedirs(lineage_dir, exist_ok=True)
-        for old in os.listdir(lineage_dir):
-            os.remove(os.path.join(lineage_dir, old))
+        tmp = os.path.join(lineage_dir, "_lineage.parquet.tmp")
         pq.write_table(
             pa.table({
                 "partition_id": pa.array(ids, pa.int64()),
                 "n_rows": pa.array(counts, pa.int64()),
             }),
-            os.path.join(lineage_dir, "lineage.parquet"),
+            tmp,
         )
+        os.replace(tmp, os.path.join(lineage_dir, "lineage.parquet"))
         return sum(counts)
 
     def _load(self, stage: str) -> DataFrame:
@@ -528,8 +530,7 @@ class PipelineRunner:
             "extractor_version": EXTRACTOR_VERSION,
             "incremental": True,
         }
-        with open(os.path.join(d, "manifest.json"), "w") as f:
-            json.dump(manifest, f)
+        self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
         return committed
 

@@ -21,6 +21,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .kernels import frontier_bfs, pin, simple_paths
+
 # closed term dictionary — the E11-analog entity dictionary over documents
 DICT_TERMS = [
     "spark", "join", "filter", "window", "hash",
@@ -462,23 +464,13 @@ def kg_term_adjacency(spark, sf_dir):
 )
 def kg_closure_from_spark(spark, sf_dir):
     """Transitive closure analog (Q15-Q17, code_finder.py:449-520): BFS to
-    depth 3 from 'spark' over the adjacency graph — driver loop of frontier
-    joins with min-depth accumulation."""
-    adj = _adjacency(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-    spark_sess = spark
-    frontier = spark_sess.createDataFrame(
-        [("spark", 0)], "term string, depth int"
+    depth 3 from 'spark' over the adjacency graph — the kernel's
+    frontier_bfs, whose first-visit depth is the min depth."""
+    adj = pin(_adjacency(_t(spark, sf_dir, "documents")))
+    seed = spark.createDataFrame([(0, "spark")], "source int, node string")
+    return frontier_bfs(adj, seed, 3).select(
+        F.col("node").alias("term"), F.col("depth").alias("min_depth")
     )
-    seen = frontier
-    for depth in range(1, 4):
-        frontier = (
-            adj.join(frontier.where(F.col("depth") == depth - 1),
-                     on=adj["src"] == F.col("term"))
-            .select(F.col("dst").alias("term"), F.lit(depth).alias("depth"))
-            .distinct()
-        )
-        seen = seen.unionByName(frontier)
-    return seen.groupBy("term").agg(F.min("depth").alias("min_depth"))
 
 
 # =============================================================================
@@ -1671,35 +1663,23 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
 def kg_call_chain(spark, sf_dir):
     """Bounded simple-path enumeration 'spark' -> 'scan' over the term
     adjacency graph (reference ``code_finder.py:495-520`` shortestPath with
-    depth cap, ordered by length, LIMIT 10). Driver loop of frontier joins
-    carrying the path as an array column; cycle-free via array_contains.
-    The frontier is tiny (dictionary-sized) regardless of corpus size — the
-    scale-bearing work is the adjacency derivation, which localCheckpoint
-    materializes exactly once (otherwise each of the 3 frontier joins and
-    3 hit branches would recompute the full corpus scan)."""
-    adj = _adjacency(_t(spark, sf_dir, "documents")).localCheckpoint(eager=True)
-    frontier = spark.createDataFrame(
-        [(["spark"], "spark", 0)], "path array<string>, term string, hops int"
+    depth cap, ordered by length, LIMIT 10): the kernel's simple_paths,
+    which carries the path as an array column and prunes cycles with
+    array_contains. The frontier is tiny (dictionary-sized) regardless of
+    corpus size — the scale-bearing work is the adjacency derivation, which
+    is checkpointed exactly once (otherwise each of the 3 frontier joins
+    would recompute the full corpus scan)."""
+    adj = pin(_adjacency(_t(spark, sf_dir, "documents")))
+    term = lambda t: spark.createDataFrame([(t,)], "node string")  # noqa: E731
+    return (
+        simple_paths(adj, term("spark"), term("scan"), 3)
+        .select(
+            F.array_join("path", "->").alias("path"),
+            (F.size("path") - 1).alias("hops"),
+        )
+        .orderBy(F.asc("hops"), F.asc("path"))
+        .limit(10)
     )
-    done = None
-    for _ in range(3):
-        frontier = (
-            adj.join(
-                F.broadcast(frontier.where(F.col("term") != "scan")),
-                on=adj["src"] == F.col("term"),
-            )
-            .where(~F.array_contains("path", F.col("dst")))
-            .select(
-                F.concat("path", F.array("dst")).alias("path"),
-                F.col("dst").alias("term"),
-                (F.col("hops") + 1).alias("hops"),
-            )
-        )
-        hit = frontier.where(F.col("term") == "scan").select(
-            F.array_join("path", "->").alias("path"), "hops"
-        )
-        done = hit if done is None else done.unionByName(hit)
-    return done.orderBy(F.asc("hops"), F.asc("path")).limit(10)
 
 
 # =============================================================================

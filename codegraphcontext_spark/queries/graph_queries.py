@@ -26,6 +26,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .driver_queries import _q
+from .kernels import (
+    _unrolled,
+    frontier_bfs,
+    iterate,
+    l1_normalise,
+    label_round,
+    lazy,
+    matvec,
+    pin,
+    simple_paths,
+)
 
 # Bump when the pipeline's node/edge schema or semantics change — stale /tmp
 # caches from older code versions are ignored, not reused.
@@ -350,32 +361,18 @@ def kg_graph_closure(spark, sf_dir):
     once-checkpointed adjacency; the frontier stays entity-dictionary-sized
     regardless of corpus scale."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    adj = (
+    adj = pin(
         edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "obj_id")
+        .select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     seed = nodes.where(
         (F.col("node_type") == "Entity") & (F.col("name") == "acme corp")
-    ).select(F.col("node_id").alias("id"), F.lit(0).alias("depth"))
-    frontier = seed
-    seen = seed
-    for depth in range(1, 4):
-        frontier = (
-            adj.join(
-                F.broadcast(frontier.where(F.col("depth") == depth - 1)),
-                on=adj["subj_id"] == F.col("id"),
-            )
-            .select(F.col("obj_id").alias("id"), F.lit(depth).alias("depth"))
-            .distinct()
-        )
-        seen = seen.unionByName(frontier)
+    ).select(F.lit(0).alias("source"), F.col("node_id").alias("node"))
     return (
-        seen.groupBy("id")
-        .agg(F.min("depth").alias("min_depth"))
-        .join(nodes.withColumnRenamed("node_id", "id"), on="id")
-        .select("name", "min_depth")
+        frontier_bfs(adj, seed, 3)
+        .join(nodes.withColumnRenamed("node_id", "node"), on="node")
+        .select("name", F.col("depth").alias("min_depth"))
         .orderBy(F.asc("min_depth"), F.asc("name"))
     )
 
@@ -600,19 +597,54 @@ def kg_graph_call_chain(spark, sf_dir):
     """call chains over the MATERIALIZED graph (Q17, reference
     code_finder.py:495-520 shortestPath + the '->' dispatcher parse at
     :679-692): all simple paths acme corp -> globex industries over open
-    relation edges, depth <= 3, shortest first. Reuses the CLI dispatcher's
-    BFS helper (cli._call_chain), so the spark-submit query path itself is
+    relation edges, depth <= 3, shortest first. Shares call_chain with the
+    CLI's call_chain handler, so the spark-submit query path itself is
     oracle-checked here against a DuckDB recursive CTE with identical
     cycle-pruning and stop-at-target semantics."""
-    from ..cli import _call_chain
-
     nodes, edges = ensure_graph(spark, sf_dir)
     ent = lambda name: nodes.where(  # noqa: E731
         (F.col("node_type") == "Entity") & (F.col("name") == name)
     ).select("node_id")
-    return _call_chain(
+    return call_chain(
         edges, nodes, ent("acme corp"), ent("globex industries"), 3
     ).select("chain", F.col("length").cast("int").alias("length"))
+
+
+def call_chain(edges, nodes, start, end, depth: int) -> DataFrame:
+    """Bounded chains start->end over open relations, shortest first (Q17
+    analog, reference ``code_finder.py:495-520`` shortestPath with maxd):
+    the kernel's simple_paths over the distinct open-relation pairs
+    (parallel edges with different predicates must not multiply paths),
+    rendered through entity names as (chain, length)."""
+    adj = pin(
+        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
+        .select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+        .distinct()
+    )
+    hits = simple_paths(
+        adj,
+        start.select(F.col("node_id").alias("node")),
+        end.select(F.col("node_id").alias("node")),
+        depth,
+    )
+    exploded = hits.dropDuplicates(["path"]).select(
+        F.col("path"), F.posexplode("path").alias("pos", "node_id")
+    ).join(nodes.select("node_id", "name"), on="node_id")
+    return (
+        exploded.groupBy("path")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "name"))),
+                    lambda s: s["name"],
+                ),
+                " -> ",
+            ).alias("chain"),
+            F.max("pos").alias("length"),
+        )
+        .select("chain", "length")
+        .orderBy("length", "chain")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -629,23 +661,10 @@ def _pagerank_oracle_sql() -> str:
     is integer (scaled ranks, floor division), so Spark and DuckDB produce
     bit-identical values — no float summation-order hazard."""
     s, dn, dd = _PR_SCALE, _PR_DAMP_NUM, _PR_DAMP_DEN
-    parts = [
-        f"""WITH
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges),
-    deg AS (SELECT subj_id, COUNT(*) AS outdeg FROM adj GROUP BY subj_id),
-    adjdeg AS (SELECT adj.subj_id, adj.obj_id, deg.outdeg
-               FROM adj JOIN deg USING (subj_id)),
-    ids AS (SELECT node_id FROM nodes),
-    n AS (SELECT COUNT(*) AS n FROM nodes),
-    base AS (SELECT ({dd - dn} * {s}) // ({dd} * n) AS b, {s} // n AS r FROM n),
-    r0 AS (SELECT node_id, base.r AS rank FROM ids CROSS JOIN base)"""
-    ]
-    for i in range(1, _PR_ITERS + 1):
+
+    def step(i: int) -> str:
         p = i - 1
-        parts.append(
-            f"""    c{i} AS (SELECT a.obj_id AS node_id,
+        return f"""    c{i} AS (SELECT a.obj_id AS node_id,
                  SUM(r{p}.rank // a.outdeg) AS inc
           FROM adjdeg a JOIN r{p} ON r{p}.node_id = a.subj_id
           GROUP BY a.obj_id),
@@ -657,62 +676,82 @@ def _pagerank_oracle_sql() -> str:
                                    + d{i}.dang // n.n)) // {dd} AS rank
           FROM ids CROSS JOIN base CROSS JOIN d{i} CROSS JOIN n
           LEFT JOIN c{i} USING (node_id))"""
-        )
-    parts.append(
-        f"""    SELECT r{_PR_ITERS}.node_id, nodes.name, nodes.node_type,
+
+    return _unrolled(
+        f"""WITH
+    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
+    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges),
+    deg AS (SELECT subj_id, COUNT(*) AS outdeg FROM adj GROUP BY subj_id),
+    adjdeg AS (SELECT adj.subj_id, adj.obj_id, deg.outdeg
+               FROM adj JOIN deg USING (subj_id)),
+    ids AS (SELECT node_id FROM nodes),
+    n AS (SELECT COUNT(*) AS n FROM nodes),
+    base AS (SELECT ({dd - dn} * {s}) // ({dd} * n) AS b, {s} // n AS r FROM n),
+    r0 AS (SELECT node_id, base.r AS rank FROM ids CROSS JOIN base)""",
+        step,
+        _PR_ITERS,
+        f"""
+    SELECT r{_PR_ITERS}.node_id, nodes.name, nodes.node_type,
            CAST(r{_PR_ITERS}.rank AS BIGINT) AS rank
     FROM r{_PR_ITERS} JOIN nodes USING (node_id)
-    ORDER BY rank DESC, node_id ASC LIMIT 20"""
+    ORDER BY rank DESC, node_id ASC LIMIT 20""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
-def _pagerank_ranks(nodes, edges):
-    """The full scaled-integer rank vector (node_id, rank) — shared by the
-    kg_graph_pagerank query (top-20 view) and the mass-conservation test."""
-    adj = edges.select("subj_id", "obj_id").distinct()
-    deg = adj.groupBy("subj_id").agg(F.count(F.lit(1)).alias("outdeg"))
-    adjdeg = adj.join(deg, "subj_id").localCheckpoint(eager=True)
-    non_dangling = deg.select(F.col("subj_id").alias("node_id"))
-    ids = nodes.select("node_id").localCheckpoint(eager=True)
-    n = ids.count()
-    base = ((_PR_DAMP_DEN - _PR_DAMP_NUM) * _PR_SCALE) // (_PR_DAMP_DEN * n)
-    ranks = ids.select("node_id", F.lit(_PR_SCALE // n).alias("rank"))
-    for _ in range(_PR_ITERS):
-        # ranks feeds two branches (contribs + dangling sum); the LAZY
-        # checkpoint keeps lineage linear instead of 2^iters WITHOUT a
-        # blocking job per iteration — materialization happens once, at
-        # the single final action (the fused-stage runner discipline).
-        ranks = ranks.localCheckpoint(eager=False)
-        contribs = (
-            adjdeg.join(
-                ranks.withColumnRenamed("node_id", "subj_id"), "subj_id"
-            )
-            .select("obj_id", F.expr("rank div outdeg").alias("contrib"))
-            .groupBy(F.col("obj_id").alias("node_id"))
-            .agg(F.sum("contrib").alias("inc"))
+def pagerank_ranks(nodes, edges, seed_id: str | None = None):
+    """The full scaled-integer rank vector (node_id, rank) — shared by
+    kg_graph_pagerank (top-20 view), the mass-conservation test,
+    kg_graph_ppr and the CLI's ``related`` handler. Without a seed the
+    restart and dangling mass spread uniformly over all nodes (PageRank);
+    with one, all of it returns to the seed (personalized PageRank)."""
+    dn, dd = _PR_DAMP_NUM, _PR_DAMP_DEN
+    adj = edges.select(
+        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
+    ).distinct()
+    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    adjdeg = pin(adj.join(deg, "src"))
+    non_dangling = deg.select(F.col("src").alias("node_id"))
+    ids = pin(nodes.select("node_id"))
+    if seed_id is None:
+        n = ids.count()
+        r0 = F.lit(_PR_SCALE // n)
+        restart = F.lit(((dd - dn) * _PR_SCALE) // (dd * n))
+        dang_share = f"dang div {n}L"
+    else:
+        is_seed = F.col("node_id") == F.lit(seed_id)
+        r0 = F.when(is_seed, F.lit(_PR_SCALE)).otherwise(F.lit(0)).cast("long")
+        restart = F.when(
+            is_seed, F.lit(((dd - dn) * _PR_SCALE) // dd)
+        ).otherwise(F.lit(0))
+        dang_share = f"IF(node_id = '{seed_id}', dang, 0L)"
+
+    def step(ranks):
+        # ranks feeds two branches (contribs + dangling sum); iterate's
+        # lazy checkpoint keeps lineage linear instead of 2^iters without
+        # a blocking job per iteration.
+        contribs = matvec(adjdeg, ranks, F.expr("rank div outdeg"), "inc")
+        # dangling-node mass: ONE scalar agg row, cross-joined (broadcast
+        # single row) so the driver never collects.
+        dang = ranks.join(non_dangling, "node_id", "left_anti").agg(
+            F.coalesce(F.sum("rank"), F.lit(0).cast("long")).alias("dang")
         )
-        # dangling-node mass, redistributed uniformly: ONE scalar agg row,
-        # cross-joined (broadcast single row) so the driver never collects.
-        dang = (
-            ranks.join(non_dangling, "node_id", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0).cast("long")).alias("dang"))
-        )
-        ranks = (
+        return (
             ids.join(contribs, "node_id", "left")
             .crossJoin(dang)
             .select(
                 "node_id",
                 (
-                    F.lit(base)
+                    restart
                     + F.expr(
-                        f"({_PR_DAMP_NUM} * (coalesce(inc, 0L)"
-                        f" + dang div {n}L)) div {_PR_DAMP_DEN}"
+                        f"({dn} * (coalesce(inc, 0L) + {dang_share}))"
+                        f" div {dd}"
                     )
                 ).alias("rank"),
             )
         )
-    return ranks
+
+    return iterate(ids.select("node_id", r0.alias("rank")), step, _PR_ITERS)
 
 
 @_q("kg_graph_pagerank", _pagerank_oracle_sql())
@@ -738,7 +777,7 @@ def kg_graph_pagerank(spark, sf_dir):
     narrow columns per node; edge blobs never enter the loop. Driver holds
     only the node COUNT — no collect of rows."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    ranks = _pagerank_ranks(nodes, edges)
+    ranks = pagerank_ranks(nodes, edges)
     return (
         ranks.join(nodes, "node_id")
         .select(
@@ -1060,17 +1099,10 @@ def _hits_oracle_sql() -> str:
     """Unrolled-CTE DuckDB twin of the Spark HITS iteration — all-integer
     arithmetic (floor division) so both engines agree bit-exactly."""
     s = _HITS_SCALE
-    parts = [
-        f"""{_G_CTE},
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges),
-    ids AS (SELECT node_id FROM nodes),
-    n AS (SELECT COUNT(*) AS n FROM nodes),
-    h0 AS (SELECT node_id, {s} // n.n AS hub FROM ids CROSS JOIN n)"""
-    ]
-    for i in range(1, _HITS_ITERS + 1):
+
+    def step(i: int) -> str:
         p = i - 1
-        parts.append(
-            f"""    ar{i} AS (SELECT adj.obj_id AS node_id, SUM(h{p}.hub) AS raw
+        return f"""    ar{i} AS (SELECT adj.obj_id AS node_id, SUM(h{p}.hub) AS raw
            FROM adj JOIN h{p} ON h{p}.node_id = adj.subj_id
            GROUP BY adj.obj_id),
     at{i} AS (SELECT GREATEST(COALESCE(SUM(raw), 0), 1) AS tot FROM ar{i}),
@@ -1084,16 +1116,23 @@ def _hits_oracle_sql() -> str:
     h{i} AS (SELECT ids.node_id,
                 COALESCE(hr{i}.raw, 0) * {s} // ht{i}.tot AS hub
           FROM ids CROSS JOIN ht{i} LEFT JOIN hr{i} USING (node_id))"""
-        )
+
     k = _HITS_ITERS
-    parts.append(
-        f"""    SELECT a{k}.node_id, nodes.name, nodes.node_type,
+    return _unrolled(
+        f"""{_G_CTE},
+    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges),
+    ids AS (SELECT node_id FROM nodes),
+    n AS (SELECT COUNT(*) AS n FROM nodes),
+    h0 AS (SELECT node_id, {s} // n.n AS hub FROM ids CROSS JOIN n)""",
+        step,
+        k,
+        f"""
+    SELECT a{k}.node_id, nodes.name, nodes.node_type,
            CAST(a{k}.auth AS BIGINT) AS auth,
            CAST(h{k}.hub AS BIGINT) AS hub
     FROM a{k} JOIN h{k} USING (node_id) JOIN nodes USING (node_id)
-    ORDER BY auth DESC, hub DESC, node_id ASC LIMIT 20"""
+    ORDER BY auth DESC, hub DESC, node_id ASC LIMIT 20""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
 @_q("kg_graph_hits", _hits_oracle_sql())
@@ -1115,47 +1154,20 @@ def kg_graph_hits(spark, sf_dir):
     broadcast by AQE). The score vector is 2 narrow columns; the driver
     holds only the node count."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    adj = edges.select("subj_id", "obj_id").distinct().localCheckpoint(eager=True)
-    ids = nodes.select("node_id").localCheckpoint(eager=True)
+    adj = pin(
+        edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+        .distinct()
+    )
+    radj = adj.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ids = pin(nodes.select("node_id"))
     n = ids.count()
     s = _HITS_SCALE
     hub = ids.select("node_id", F.lit(s // n).cast("long").alias("hub"))
     auth = None
     for _ in range(_HITS_ITERS):
-        hub = hub.localCheckpoint(eager=False)
-        auth_raw = (
-            adj.join(hub.withColumnRenamed("node_id", "subj_id"), "subj_id")
-            .groupBy(F.col("obj_id").alias("node_id"))
-            .agg(F.sum("hub").alias("raw"))
-        )
-        tot_a = auth_raw.agg(
-            F.greatest(F.coalesce(F.sum("raw"), F.lit(0)), F.lit(1)).alias("tot")
-        )
-        auth = (
-            ids.join(auth_raw, "node_id", "left")
-            .crossJoin(tot_a)
-            .select(
-                "node_id",
-                F.expr(f"coalesce(raw, 0L) * {s}L div tot").alias("auth"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        hub_raw = (
-            adj.join(auth.withColumnRenamed("node_id", "obj_id"), "obj_id")
-            .groupBy(F.col("subj_id").alias("node_id"))
-            .agg(F.sum("auth").alias("raw"))
-        )
-        tot_h = hub_raw.agg(
-            F.greatest(F.coalesce(F.sum("raw"), F.lit(0)), F.lit(1)).alias("tot")
-        )
-        hub = (
-            ids.join(hub_raw, "node_id", "left")
-            .crossJoin(tot_h)
-            .select(
-                "node_id",
-                F.expr(f"coalesce(raw, 0L) * {s}L div tot").alias("hub"),
-            )
-        )
+        hub = lazy(hub)
+        auth = lazy(l1_normalise(ids, matvec(adj, hub, "hub", "raw"), "auth", s))
+        hub = l1_normalise(ids, matvec(radj, auth, "auth", "raw"), "hub", s)
     return (
         auth.join(hub, "node_id")
         .join(nodes.select("node_id", "name", "node_type"), "node_id")
@@ -1183,20 +1195,10 @@ def _label_prop_oracle_sql() -> str:
     Labels are node_id strings; the winner rule (max neighbor-label count,
     ties -> lexicographically smallest label) is deterministic and identical
     in both engines (plain byte-wise string comparison on hex ids)."""
-    parts = [
-        f"""{_G_CTE},
-    und AS (SELECT DISTINCT a, b FROM (
-              SELECT subj_id AS a, obj_id AS b FROM edges
-              UNION ALL
-              SELECT obj_id AS a, subj_id AS b FROM edges)
-            WHERE a <> b),
-    ids AS (SELECT node_id FROM nodes),
-    l0 AS (SELECT node_id, node_id AS label FROM ids)"""
-    ]
-    for i in range(1, _LP_ROUNDS + 1):
+
+    def step(i: int) -> str:
         p = i - 1
-        parts.append(
-            f"""    c{i} AS (SELECT und.a AS node_id, l{p}.label, COUNT(*) AS c
+        return f"""    c{i} AS (SELECT und.a AS node_id, l{p}.label, COUNT(*) AS c
           FROM und JOIN l{p} ON l{p}.node_id = und.b
           GROUP BY und.a, l{p}.label),
     w{i} AS (SELECT node_id, label FROM (
@@ -1206,16 +1208,26 @@ def _label_prop_oracle_sql() -> str:
              FROM c{i}) WHERE rn = 1),
     l{i} AS (SELECT l{p}.node_id, COALESCE(w{i}.label, l{p}.label) AS label
           FROM l{p} LEFT JOIN w{i} USING (node_id))"""
-        )
+
     k = _LP_ROUNDS
-    parts.append(
-        f"""    SELECT l{k}.label AS community, nodes.name AS community_name,
+    return _unrolled(
+        f"""{_G_CTE},
+    und AS (SELECT DISTINCT a, b FROM (
+              SELECT subj_id AS a, obj_id AS b FROM edges
+              UNION ALL
+              SELECT obj_id AS a, subj_id AS b FROM edges)
+            WHERE a <> b),
+    ids AS (SELECT node_id FROM nodes),
+    l0 AS (SELECT node_id, node_id AS label FROM ids)""",
+        step,
+        k,
+        f"""
+    SELECT l{k}.label AS community, nodes.name AS community_name,
            CAST(COUNT(*) AS BIGINT) AS n_members
     FROM l{k} JOIN nodes ON nodes.node_id = l{k}.label
     GROUP BY l{k}.label, nodes.name
-    ORDER BY n_members DESC, community ASC LIMIT 20"""
+    ORDER BY n_members DESC, community ASC LIMIT 20""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
 @_q("kg_graph_label_prop", _label_prop_oracle_sql())
@@ -1233,43 +1245,23 @@ def kg_graph_label_prop(spark, sf_dir):
     parallelism, so the DuckDB unrolled-CTE twin matches exactly.
 
     Scale shape: the undirected adjacency is built once and
-    localCheckpoint'ed; each round is ONE shuffle join (label vector x
-    adjacency on the neighbor key) + a map-side-combinable
-    groupBy(node,label) + a per-node window whose partition is bounded by
-    the node's distinct-neighbor-label count (the standard LPA shape; AQE
-    skew-join splits hub partitions). Labels are 2 narrow columns; nothing
-    is collected to the driver."""
-    from pyspark.sql import Window
-
+    localCheckpoint'ed; each round is the kernel's label_round — ONE
+    shuffle join (label vector x adjacency on the neighbor key) + a
+    map-side-combinable groupBy(node,label) + a min-struct argmax
+    aggregate (no window). Labels are 2 narrow columns; nothing is
+    collected to the driver."""
     nodes, edges = ensure_graph(spark, sf_dir)
     e = edges.select("subj_id", "obj_id").where(F.col("subj_id") != F.col("obj_id"))
-    und = (
-        e.select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
-        .unionAll(e.select(F.col("obj_id").alias("a"), F.col("subj_id").alias("b")))
+    und = pin(
+        e.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+        .unionAll(e.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = nodes.select("node_id", F.col("node_id").alias("label"))
-    win = Window.partitionBy("node_id").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(_LP_ROUNDS):
-        labels = labels.localCheckpoint(eager=True)
-        counts = (
-            und.join(labels.withColumnRenamed("node_id", "b"), "b")
-            .groupBy(F.col("a").alias("node_id"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        winners = (
-            counts.withColumn("rn", F.row_number().over(win))
-            .where(F.col("rn") == 1)
-            .select("node_id", F.col("label").alias("new_label"))
-        )
-        labels = (
-            labels.join(winners, "node_id", "left")
-            .select(
-                "node_id",
-                F.coalesce("new_label", "label").alias("label"),
-            )
-        )
+    labels = iterate(
+        nodes.select("node_id", F.col("node_id").alias("label")),
+        lambda lab: label_round(und, lab),
+        _LP_ROUNDS,
+    )
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -1426,24 +1418,28 @@ _KCORE_ROUNDS = 5
 
 
 def _kcore_oracle() -> str:
-    sql = f"""{_G_CTE},
-    rel AS (SELECT DISTINCT subj_id AS s, obj_id AS d FROM edges
-            WHERE subj_id <> obj_id),
-    e AS (SELECT s, d FROM rel UNION SELECT d, s FROM rel),
-    a0 AS (SELECT DISTINCT s AS n FROM e)"""
-    for r in range(1, _KCORE_ROUNDS + 1):
+    def step(r: int) -> str:
         p = r - 1
-        sql += f""",
-    d{r} AS (SELECT e.s AS n, COUNT(*) AS c FROM e
+        return f"""    d{r} AS (SELECT e.s AS n, COUNT(*) AS c FROM e
              JOIN a{p} x ON e.s = x.n JOIN a{p} y ON e.d = y.n
              GROUP BY e.s),
     a{r} AS (SELECT n FROM d{r} WHERE c >= {_KCORE_K})"""
+
     R = _KCORE_ROUNDS
-    return sql + f"""
+    return _unrolled(
+        f"""{_G_CTE},
+    rel AS (SELECT DISTINCT subj_id AS s, obj_id AS d FROM edges
+            WHERE subj_id <> obj_id),
+    e AS (SELECT s, d FROM rel UNION SELECT d, s FROM rel),
+    a0 AS (SELECT DISTINCT s AS n FROM e)""",
+        step,
+        R,
+        f"""
     SELECT d.n AS node_id, nodes.name, CAST(d.c AS BIGINT) AS core_deg
     FROM d{R} d JOIN a{R} a ON d.n = a.n
     JOIN nodes ON nodes.node_id = d.n
-    ORDER BY core_deg DESC, node_id ASC LIMIT 50"""
+    ORDER BY core_deg DESC, node_id ASC LIMIT 50""",
+    )
 
 
 @_q("kg_graph_kcore", _kcore_oracle())
@@ -1512,26 +1508,10 @@ def _ppr_oracle_sql() -> str:
     of spreading uniformly; otherwise identical scaled-integer arithmetic
     to _pagerank_oracle_sql, so the two engines match bit-for-bit."""
     s, dn, dd = _PR_SCALE, _PR_DAMP_NUM, _PR_DAMP_DEN
-    parts = [
-        f"""WITH
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges),
-    deg AS (SELECT subj_id, COUNT(*) AS outdeg FROM adj GROUP BY subj_id),
-    adjdeg AS (SELECT adj.subj_id, adj.obj_id, deg.outdeg
-               FROM adj JOIN deg USING (subj_id)),
-    ids AS (SELECT node_id FROM nodes),
-    seed AS (SELECT node_id AS seed_id FROM nodes
-             WHERE node_type = 'Entity' AND name = '{_PPR_SEED_NAME}'),
-    r0 AS (SELECT ids.node_id,
-                  CASE WHEN ids.node_id = seed.seed_id
-                       THEN {s} ELSE 0 END AS rank
-           FROM ids CROSS JOIN seed)"""
-    ]
-    for i in range(1, _PR_ITERS + 1):
+
+    def step(i: int) -> str:
         p = i - 1
-        parts.append(
-            f"""    c{i} AS (SELECT a.obj_id AS node_id,
+        return f"""    c{i} AS (SELECT a.obj_id AS node_id,
                  SUM(r{p}.rank // a.outdeg) AS inc
           FROM adjdeg a JOIN r{p} ON r{p}.node_id = a.subj_id
           GROUP BY a.obj_id),
@@ -1546,15 +1526,31 @@ def _ppr_oracle_sql() -> str:
                                    THEN d{i}.dang ELSE 0 END)) // {dd} AS rank
           FROM ids CROSS JOIN seed CROSS JOIN d{i}
           LEFT JOIN c{i} USING (node_id))"""
-        )
-    parts.append(
-        f"""    SELECT r{_PR_ITERS}.node_id, nodes.name,
+
+    return _unrolled(
+        f"""WITH
+    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
+    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges),
+    deg AS (SELECT subj_id, COUNT(*) AS outdeg FROM adj GROUP BY subj_id),
+    adjdeg AS (SELECT adj.subj_id, adj.obj_id, deg.outdeg
+               FROM adj JOIN deg USING (subj_id)),
+    ids AS (SELECT node_id FROM nodes),
+    seed AS (SELECT node_id AS seed_id FROM nodes
+             WHERE node_type = 'Entity' AND name = '{_PPR_SEED_NAME}'),
+    r0 AS (SELECT ids.node_id,
+                  CASE WHEN ids.node_id = seed.seed_id
+                       THEN {s} ELSE 0 END AS rank
+           FROM ids CROSS JOIN seed)""",
+        step,
+        _PR_ITERS,
+        f"""
+    SELECT r{_PR_ITERS}.node_id, nodes.name,
            CAST(r{_PR_ITERS}.rank AS BIGINT) AS rank
     FROM r{_PR_ITERS} JOIN nodes USING (node_id)
     WHERE r{_PR_ITERS}.rank > 0
-    ORDER BY rank DESC, node_id ASC LIMIT 20"""
+    ORDER BY rank DESC, node_id ASC LIMIT 20""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
 @_q("kg_graph_ppr", _ppr_oracle_sql())
@@ -1582,7 +1578,7 @@ def kg_graph_ppr(spark, sf_dir):
         .head()
         .node_id
     )
-    ranks = ppr_ranks(nodes, edges, seed_id)
+    ranks = pagerank_ranks(nodes, edges, seed_id)
     return (
         ranks.where(F.col("rank") > 0)
         .join(nodes.select("node_id", "name"), "node_id")
@@ -1590,54 +1586,6 @@ def kg_graph_ppr(spark, sf_dir):
         .orderBy(F.desc("rank"), F.asc("node_id"))
         .limit(20)
     )
-
-
-def ppr_ranks(nodes, edges, seed_id):
-    """The personalized rank vector (node_id, rank) for one seed — shared
-    by the kg_graph_ppr query and the CLI's ``related`` handler."""
-    adj = edges.select("subj_id", "obj_id").distinct()
-    deg = adj.groupBy("subj_id").agg(F.count(F.lit(1)).alias("outdeg"))
-    adjdeg = adj.join(deg, "subj_id").localCheckpoint(eager=True)
-    non_dangling = deg.select(F.col("subj_id").alias("node_id"))
-    ids = nodes.select("node_id").localCheckpoint(eager=True)
-    base = ((_PR_DAMP_DEN - _PR_DAMP_NUM) * _PR_SCALE) // _PR_DAMP_DEN
-    is_seed = F.col("node_id") == F.lit(seed_id)
-    ranks = ids.select(
-        "node_id",
-        F.when(is_seed, F.lit(_PR_SCALE))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    for _ in range(_PR_ITERS):
-        ranks = ranks.localCheckpoint(eager=False)
-        contribs = (
-            adjdeg.join(
-                ranks.withColumnRenamed("node_id", "subj_id"), "subj_id"
-            )
-            .select("obj_id", F.expr("rank div outdeg").alias("contrib"))
-            .groupBy(F.col("obj_id").alias("node_id"))
-            .agg(F.sum("contrib").alias("inc"))
-        )
-        dang = ranks.join(non_dangling, "node_id", "left_anti").agg(
-            F.coalesce(F.sum("rank"), F.lit(0).cast("long")).alias("dang")
-        )
-        ranks = (
-            ids.join(contribs, "node_id", "left")
-            .crossJoin(dang)
-            .select(
-                "node_id",
-                (
-                    F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({_PR_DAMP_NUM} * (coalesce(inc, 0L)"
-                        f" + IF(node_id = '{seed_id}', dang, 0L)))"
-                        f" div {_PR_DAMP_DEN}"
-                    )
-                ).alias("rank"),
-            )
-        )
-    return ranks
 
 
 # ---------------------------------------------------------------------------
@@ -2229,35 +2177,25 @@ def kg_graph_closeness(spark, sf_dir):
     approximation for centrality at web scale (reference analog:
     code_finder.py importance ranking over call graphs).
 
-    Scale shape: one multi-source frontier keyed (seed, node) — at most
-    k x |entity dictionary| rows, broadcast-joined against the checkpointed
-    adjacency each of 4 rounds; all arithmetic integer floor-div, so the
-    DuckDB twin is bit-identical."""
+    Scale shape: the kernel's multi-source frontier_bfs keyed (seed, node)
+    — at most k x |entity dictionary| rows, joined against the
+    checkpointed adjacency each of 4 rounds; all arithmetic integer
+    floor-div, so the DuckDB twin is bit-identical."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    dadj = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .where(F.col("subj_id") != F.col("obj_id"))
-        .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
+    dadj = _open_adj(edges)
+    adj = pin(
+        dadj.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+        .unionByName(
+            dadj.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
+        )
         .distinct()
-    )
-    adj = (
-        dadj.unionByName(dadj.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
     seeds = nodes.where(
         (F.col("node_type") == "Entity") & F.col("name").isin(*_LANDMARKS)
-    ).select(F.col("node_id").alias("seed"))
-    best = seeds.select("seed", F.col("seed").alias("id"), F.lit(0).alias("depth"))
-    frontier = best
-    for depth in range(1, _CLOSENESS_MAXDEPTH + 1):
-        frontier = (
-            adj.join(F.broadcast(frontier), on=adj["a"] == F.col("id"))
-            .select("seed", F.col("b").alias("id"), F.lit(depth).alias("depth"))
-            .distinct()
-        )
-        best = best.unionByName(frontier)
-    d = best.groupBy("seed", "id").agg(F.min("depth").alias("d"))
+    ).select(F.col("node_id").alias("source"), F.col("node_id").alias("node"))
+    d = frontier_bfs(adj, seeds, _CLOSENESS_MAXDEPTH).select(
+        F.col("node").alias("id"), F.col("depth").alias("d")
+    )
     h = (
         d.where(F.col("d") > 0)
         .groupBy("id")
@@ -2373,41 +2311,42 @@ def _truss_oracle_sql() -> str:
     dies with a misleading file-handle IO error. Materialization keeps the
     twin linear, the exact analog of the Spark side's per-round
     localCheckpoint."""
-    parts = [
+
+    def support(i: int) -> str:
+        return f"""    a{i} AS MATERIALIZED (SELECT a x, b y FROM e{i}
+          UNION ALL SELECT b, a FROM e{i}),
+    t{i} AS MATERIALIZED (SELECT e.a, e.b, COUNT(*) AS sup
+          FROM e{i} e JOIN a{i} p ON p.x = e.a
+          JOIN a{i} q ON q.x = e.b AND q.y = p.y
+          GROUP BY e.a, e.b)"""
+
+    def step(i: int) -> str:
+        return f"""    e{i} AS MATERIALIZED (SELECT e.a, e.b FROM e{i - 1} e
+          JOIN t{i - 1} t ON t.a = e.a AND t.b = e.b
+          WHERE t.sup >= {_TRUSS_K - 2}),
+{support(i)}"""
+
+    r = _TRUSS_ROUNDS
+    return _unrolled(
         f"""WITH
     nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
     edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
     dadj AS MATERIALIZED (SELECT DISTINCT subj_id s, obj_id o FROM edges
              WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
     e0 AS MATERIALIZED (SELECT DISTINCT LEAST(s, o) a, GREATEST(s, o) b
-             FROM dadj)"""
-    ]
-    for i in range(_TRUSS_ROUNDS + 1):
-        parts.append(
-            f"""    a{i} AS MATERIALIZED (SELECT a x, b y FROM e{i}
-          UNION ALL SELECT b, a FROM e{i}),
-    t{i} AS MATERIALIZED (SELECT e.a, e.b, COUNT(*) AS sup
-          FROM e{i} e JOIN a{i} p ON p.x = e.a
-          JOIN a{i} q ON q.x = e.b AND q.y = p.y
-          GROUP BY e.a, e.b)"""
-        )
-        if i < _TRUSS_ROUNDS:
-            parts.append(
-                f"""    e{i + 1} AS MATERIALIZED (SELECT e.a, e.b FROM e{i} e
-          JOIN t{i} t ON t.a = e.a AND t.b = e.b
-          WHERE t.sup >= {_TRUSS_K - 2})"""
-            )
-    r = _TRUSS_ROUNDS
-    parts.append(
-        f"""    SELECT na.name AS a_name, nb.name AS b_name,
+             FROM dadj),
+{support(0)}""",
+        step,
+        r,
+        f"""
+    SELECT na.name AS a_name, nb.name AS b_name,
            CAST(t.sup AS BIGINT) AS support
     FROM e{r} e JOIN t{r} t ON t.a = e.a AND t.b = e.b
     JOIN nodes na ON na.node_id = e.a
     JOIN nodes nb ON nb.node_id = e.b
     WHERE t.sup >= {_TRUSS_K - 2}
-    ORDER BY support DESC, a_name ASC, b_name ASC"""
+    ORDER BY support DESC, a_name ASC, b_name ASC""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
 @_q("kg_graph_truss", _truss_oracle_sql())
@@ -3885,7 +3824,19 @@ def _eig_oracle_sql() -> str:
     """Unrolled-CTE DuckDB twin of the Spark power iteration — all-integer
     floor-division arithmetic so both engines agree bit-exactly."""
     s = _EIG_SCALE
-    parts = [
+
+    def step(i: int) -> str:
+        p = i - 1
+        return f"""    r{i} AS (SELECT sym.dst AS node_id, SUM(x{p}.x) AS raw
+           FROM sym JOIN x{p} ON x{p}.node_id = sym.src
+           GROUP BY sym.dst),
+    t{i} AS (SELECT GREATEST(COALESCE(SUM(raw), 0), 1) AS tot FROM r{i}),
+    x{i} AS (SELECT ids.node_id,
+                COALESCE(r{i}.raw, 0) * {s} // t{i}.tot AS x
+          FROM ids CROSS JOIN t{i} LEFT JOIN r{i} USING (node_id))"""
+
+    k = _EIG_ITERS
+    return _unrolled(
         f"""{_G_CTE},
     und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
                             GREATEST(subj_id, obj_id) AS b
@@ -3895,26 +3846,14 @@ def _eig_oracle_sql() -> str:
             UNION ALL SELECT b, a FROM und),
     ids AS (SELECT DISTINCT src AS node_id FROM sym),
     n AS (SELECT COUNT(*) AS n FROM ids),
-    x0 AS (SELECT node_id, {s} // n.n AS x FROM ids CROSS JOIN n)"""
-    ]
-    for i in range(1, _EIG_ITERS + 1):
-        p = i - 1
-        parts.append(
-            f"""    r{i} AS (SELECT sym.dst AS node_id, SUM(x{p}.x) AS raw
-           FROM sym JOIN x{p} ON x{p}.node_id = sym.src
-           GROUP BY sym.dst),
-    t{i} AS (SELECT GREATEST(COALESCE(SUM(raw), 0), 1) AS tot FROM r{i}),
-    x{i} AS (SELECT ids.node_id,
-                COALESCE(r{i}.raw, 0) * {s} // t{i}.tot AS x
-          FROM ids CROSS JOIN t{i} LEFT JOIN r{i} USING (node_id))"""
-        )
-    k = _EIG_ITERS
-    parts.append(
-        f"""    SELECT nodes.name, CAST(x{k}.x AS BIGINT) AS eig
+    x0 AS (SELECT node_id, {s} // n.n AS x FROM ids CROSS JOIN n)""",
+        step,
+        k,
+        f"""
+    SELECT nodes.name, CAST(x{k}.x AS BIGINT) AS eig
     FROM x{k} JOIN nodes USING (node_id)
-    ORDER BY eig DESC, name ASC LIMIT 20"""
+    ORDER BY eig DESC, name ASC LIMIT 20""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
 @_q("kg_graph_eigenvector", _eig_oracle_sql())
@@ -3933,9 +3872,10 @@ def kg_graph_eigenvector(spark, sf_dir):
     (the capped-iteration contract every iterative query here shares).
 
     Scale shape: symmetrized adjacency localCheckpoint'ed once; each
-    iteration is ONE key-partitioned shuffle join (score vector x
-    adjacency) + a map-side-combinable groupBy + a single-row normalizer
-    agg cross-joined back (AQE broadcasts it). Driver holds one count."""
+    iteration is the kernel's mat-vec step — ONE key-partitioned shuffle
+    join (score vector x adjacency) + a map-side-combinable groupBy — and
+    its L1 normalisation, a single-row normalizer agg cross-joined back
+    (AQE broadcasts it). Driver holds one count."""
     nodes, edges = ensure_graph(spark, sf_dir)
     und = (
         edges.where(
@@ -3948,37 +3888,18 @@ def kg_graph_eigenvector(spark, sf_dir):
         )
         .distinct()
     )
-    sym = (
+    sym = pin(
         und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=True)
     )
-    ids = sym.select(F.col("src").alias("node_id")).distinct().localCheckpoint(
-        eager=True
-    )
+    ids = pin(sym.select(F.col("src").alias("node_id")).distinct())
     n = ids.count()
     s = _EIG_SCALE
-    x = ids.select("node_id", F.lit(s // n).cast("long").alias("x"))
-    for _ in range(_EIG_ITERS):
-        x = x.localCheckpoint(eager=True)
-        raw = (
-            sym.join(x.withColumnRenamed("node_id", "src"), "src")
-            .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.sum("x").alias("raw"))
-        )
-        tot = raw.agg(
-            F.greatest(F.coalesce(F.sum("raw"), F.lit(0)), F.lit(1)).alias(
-                "tot"
-            )
-        )
-        x = (
-            ids.join(raw, "node_id", "left")
-            .crossJoin(tot)
-            .select(
-                "node_id",
-                F.expr(f"coalesce(raw, 0L) * {s}L div tot").alias("x"),
-            )
-        )
+    x = iterate(
+        ids.select("node_id", F.lit(s // n).cast("long").alias("x")),
+        lambda v: l1_normalise(ids, matvec(sym, v, "x", "raw"), "x", s),
+        _EIG_ITERS,
+    )
     return (
         x.join(F.broadcast(nodes.select("node_id", "name")), "node_id")
         .select("name", F.col("x").cast("bigint").alias("eig"))
@@ -4202,14 +4123,13 @@ def _open_adj(edges: DataFrame) -> DataFrame:
     graph (closed containment/attribute predicates and self-loops
     excluded), checkpointed once — the shared input of the SCC / bow-tie
     / reachability helpers below."""
-    return (
+    return pin(
         edges.where(
             (~F.col("pred").isin(*_CLOSED_PREDS))
             & (F.col("subj_id") != F.col("obj_id"))
         )
         .select("subj_id", "obj_id")
         .distinct()
-        .persist()
     )
 
 
@@ -4433,12 +4353,11 @@ def ensure_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _reach_from(adj: DataFrame, seeds: DataFrame, forward: bool) -> DataFrame:
     """Node set reachable from `seeds` (single column `v`) over the
     checkpointed adjacency — forward (along edges) or backward (against
-    them). Returns one column `v` INCLUDING the seeds. Semi-naive
-    frontier BFS: each hop joins only the fresh frontier and anti-joins
-    the seen set, so state is O(|reached|) node rows — never pair rows
-    (the closure-free replacement for bow-tie's reachability legs).
-    Small graphs take the collected driver BFS fast path (same cutover
-    as _scc_labels); the loop is the web-scale branch."""
+    them). Returns one column `v` INCLUDING the seeds. Small graphs take
+    the collected driver BFS fast path (same cutover as _scc_labels);
+    above it, the kernel's semi-naive frontier_bfs with every seed under
+    one source key, so state is O(|reached|) node rows — never pair rows
+    (the closure-free replacement for bow-tie's reachability legs)."""
     src, dst = ("subj_id", "obj_id") if forward else ("obj_id", "subj_id")
     spark = adj.sparkSession
     if adj.limit(_scc_cutover() + 1).count() <= _scc_cutover():
@@ -4460,18 +4379,11 @@ def _reach_from(adj: DataFrame, seeds: DataFrame, forward: bool) -> DataFrame:
         if not seen:
             return spark.createDataFrame([], "v string")
         return spark.createDataFrame([(v,) for v in sorted(seen)], "v string")
-    seen = seeds.select("v").distinct().localCheckpoint(eager=True)
-    frontier = seen
-    while frontier.limit(1).count() > 0:
-        nxt = (
-            adj.join(frontier, adj[src] == frontier.v)
-            .select(adj[dst].alias("v"))
-            .distinct()
-        )
-        fresh = nxt.join(seen, "v", "left_anti").localCheckpoint(eager=True)
-        seen = seen.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = fresh
-    return seen
+    reached = frontier_bfs(
+        adj.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
+        seeds.select(F.lit(0).alias("source"), F.col("v").alias("node")),
+    )
+    return reached.select(F.col("node").alias("v"))
 
 @_q(
     "kg_graph_scc",
@@ -4652,10 +4564,9 @@ def _lpa_prefix_sql() -> str:
     """The shared LPA CTE chain (graph -> e2/verts -> unrolled label
     iterations l0..lN) — used by the LPA community query and the
     conductance readout over the same labels."""
-    its = []
-    for i in range(1, _LPA_ITERS + 1):
-        its.append(
-            f"""n{i} AS (SELECT e.s, l.label, COUNT(*) AS c
+
+    def step(i: int) -> str:
+        return f"""    n{i} AS (SELECT e.s, l.label, COUNT(*) AS c
              FROM e2 e JOIN l{i - 1} l ON l.v = e.d GROUP BY e.s, l.label),
     p{i} AS (SELECT s, label FROM (
                SELECT s, label,
@@ -4664,64 +4575,42 @@ def _lpa_prefix_sql() -> str:
              WHERE rn = 1),
     l{i} AS (SELECT v.v, COALESCE(p{i}.label, v.v) AS label
              FROM verts v LEFT JOIN p{i} ON p{i}.s = v.v)"""
-        )
-    iters = ",\n    ".join(its)
-    return f"""{_G_CTE},
+
+    return _unrolled(
+        f"""{_G_CTE},
     rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
             WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
     e2 AS (SELECT subj_id AS s, obj_id AS d FROM rel
            UNION ALL SELECT obj_id AS s, subj_id AS d FROM rel),
     verts AS (SELECT DISTINCT s AS v FROM e2),
-    l0 AS (SELECT v, v AS label FROM verts),
-    {iters}"""
+    l0 AS (SELECT v, v AS label FROM verts)""",
+        step,
+        _LPA_ITERS,
+        "",
+    )
 
 
 def _lpa_labels(edges: DataFrame):
     """(rel, e2, labels): the shared Spark-side LPA loop — the exact
     iteration kg_graph_lpa describes, reused by the conductance readout
     so both queries score the SAME communities."""
-    rel = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    rel = _open_adj(edges).select(
+        F.col("subj_id").alias("a"), F.col("obj_id").alias("b")
     )
-    e2 = rel.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
-        rel.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-    verts = e2.select(F.col("s").alias("v")).distinct().localCheckpoint(
-        eager=True
-    )
-    e2 = e2.localCheckpoint(eager=True)
-    lab = verts.select("v", F.col("v").alias("label"))
-    for _ in range(_LPA_ITERS):
-        nb = e2.join(
-            lab.withColumnRenamed("v", "d"), "d"
-        ).select("s", "label")
-        pick = (
-            nb.groupBy("s", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("s")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("c")).alias("nc"),
-                        F.col("label").alias("l"),
-                    )
-                ).alias("best")
-            )
-            .select("s", F.col("best.l").alias("new_label"))
+    e2 = pin(
+        rel.select(F.col("a").alias("s"), F.col("b").alias("d")).unionAll(
+            rel.select(F.col("b").alias("s"), F.col("a").alias("d"))
         )
-        lab = (
-            verts.join(pick.withColumnRenamed("s", "v"), "v", "left")
-            .select(
-                "v", F.coalesce("new_label", F.col("v")).alias("label")
-            )
-            .localCheckpoint(eager=False)
+    )
+    verts = pin(e2.select(F.col("s").alias("v")).distinct())
+    adj = e2.select(F.col("d").alias("src"), F.col("s").alias("dst"))
+    lab = lazy(
+        iterate(
+            verts.select(F.col("v").alias("node_id"), F.col("v").alias("label")),
+            lambda lab: label_round(adj, lab),
+            _LPA_ITERS,
         )
+    ).withColumnRenamed("node_id", "v")
     return rel, e2, lab
 
 
@@ -4750,8 +4639,9 @@ def kg_graph_lpa(spark, sf_dir):
     see. Fixed iteration count + total tie-break = fully deterministic,
     so the DuckDB twin is the same recursion unrolled.
 
-    Scale shape: per iteration ONE key-partitioned join of the edge list
-    against the (node, label) frame and one two-level map-side-combinable
+    Scale shape: per iteration the kernel's label_round — ONE
+    key-partitioned join of the edge list against the (node, label) frame
+    and one two-level map-side-combinable
     aggregate (count, then min-struct argmax — no window, no global
     sort); the frame stays |V| rows and lineage is truncated per
     iteration via localCheckpoint, the same loop discipline as pagerank /
@@ -4795,31 +4685,31 @@ _KATZ_BASE = 1000  # per-node bias added every step
 def _katz_oracle_sql() -> str:
     """Unrolled-CTE DuckDB twin of the Spark Katz iteration — integer
     floor division everywhere so both engines agree bit-exactly."""
-    parts = [
-        f"""{_G_CTE},
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
-    ids AS (SELECT subj_id AS node_id FROM rel
-            UNION SELECT obj_id FROM rel),
-    x0 AS (SELECT node_id, {_KATZ_BASE} AS x FROM ids)"""
-    ]
-    for i in range(1, _KATZ_ITERS + 1):
+
+    def step(i: int) -> str:
         p = i - 1
-        parts.append(
-            f"""    r{i} AS (SELECT rel.obj_id AS node_id, SUM(x{p}.x) AS raw
+        return f"""    r{i} AS (SELECT rel.obj_id AS node_id, SUM(x{p}.x) AS raw
            FROM rel JOIN x{p} ON x{p}.node_id = rel.subj_id
            GROUP BY rel.obj_id),
     x{i} AS (SELECT ids.node_id,
                 COALESCE(r{i}.raw, 0) // {_KATZ_ATT} + {_KATZ_BASE} AS x
           FROM ids LEFT JOIN r{i} USING (node_id))"""
-        )
+
     k = _KATZ_ITERS
-    parts.append(
-        f"""    SELECT nodes.name, CAST(x{k}.x AS BIGINT) AS katz
+    return _unrolled(
+        f"""{_G_CTE},
+    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
+            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    ids AS (SELECT subj_id AS node_id FROM rel
+            UNION SELECT obj_id FROM rel),
+    x0 AS (SELECT node_id, {_KATZ_BASE} AS x FROM ids)""",
+        step,
+        k,
+        f"""
+    SELECT nodes.name, CAST(x{k}.x AS BIGINT) AS katz
     FROM x{k} JOIN nodes USING (node_id)
-    ORDER BY katz DESC, name ASC LIMIT 20"""
+    ORDER BY katz DESC, name ASC LIMIT 20""",
     )
-    return ",\n".join(parts[:-1]) + "\n" + parts[-1]
 
 
 @_q("kg_graph_katz", _katz_oracle_sql())
@@ -4839,42 +4729,31 @@ def kg_graph_katz(spark, sf_dir):
     twin an unrolled CTE chain.
 
     Scale shape: one distinct-edge slice localCheckpoint'ed once; per
-    iteration ONE key-partitioned shuffle join + map-side-combinable
-    groupBy; the score frame stays |V| rows; top-k compiles to
-    TakeOrderedAndProject.
+    iteration the kernel's mat-vec step — ONE key-partitioned shuffle join
+    + map-side-combinable groupBy; the score frame stays |V| rows; top-k
+    compiles to TakeOrderedAndProject.
 
     Reference analog: none (centrality addendum; reference ranks by raw
     reference counts, code_finder.py:725-756)."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    rel = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select("subj_id", "obj_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+    rel = _open_adj(edges).select(
+        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     )
-    ids = (
-        rel.select(F.col("subj_id").alias("node_id"))
-        .union(rel.select(F.col("obj_id").alias("node_id")))
+    ids = pin(
+        rel.select(F.col("src").alias("node_id"))
+        .union(rel.select(F.col("dst").alias("node_id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    x = ids.select("node_id", F.lit(_KATZ_BASE).cast("long").alias("x"))
-    for _ in range(_KATZ_ITERS):
-        x = x.localCheckpoint(eager=False)
-        raw = (
-            rel.join(x.withColumnRenamed("node_id", "subj_id"), "subj_id")
-            .groupBy(F.col("obj_id").alias("node_id"))
-            .agg(F.sum("x").alias("raw"))
-        )
-        x = ids.join(raw, "node_id", "left").select(
+    x = iterate(
+        ids.select("node_id", F.lit(_KATZ_BASE).cast("long").alias("x")),
+        lambda v: ids.join(matvec(rel, v, "x", "raw"), "node_id", "left").select(
             "node_id",
             F.expr(
                 f"coalesce(raw, 0L) div {_KATZ_ATT}L + {_KATZ_BASE}L"
             ).alias("x"),
-        )
+        ),
+        _KATZ_ITERS,
+    )
     return (
         x.join(F.broadcast(nodes.select("node_id", "name")), "node_id")
         .select("name", F.col("x").cast("bigint").alias("katz"))
@@ -6543,18 +6422,24 @@ def kg_pipeline_lineage(spark, sf_dir):
         [os.path.join(wd, s, "manifest.json") for s in _LINEAGE_STAGES]
     ).select("stage", F.col("n_rows").cast("bigint").alias("manifest_rows"))
     # part-file list via the Hadoop FS API (correct for hdfs://s3a://local
-    # alike — the layout.py discipline), counted from footers on executors
+    # alike — the layout.py discipline), counted from footers on executors.
+    # The listing recurses, so a partitionBy layout (part files under
+    # key=value subdirectories) is counted in full; like Spark's reader it
+    # skips anything under a _/. name (_temporary, .crc, ...).
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     files = []
     for s in _LINEAGE_STAGES:
         p = jvm.org.apache.hadoop.fs.Path(os.path.join(wd, s, "data"))
-        fs = p.getFileSystem(hconf)
-        files.extend(
-            (s, st.getPath().toString())
-            for st in fs.listStatus(p)
-            if st.getPath().getName().endswith(".parquet")
-        )
+        root = p.toUri().getPath()
+        it = p.getFileSystem(hconf).listFiles(p, True)
+        while it.hasNext():
+            path = it.next().getPath()
+            rel = path.toUri().getPath()[len(root):].strip("/").split("/")
+            if rel[-1].endswith(".parquet") and not any(
+                c.startswith(("_", ".")) for c in rel
+            ):
+                files.append((s, path.toString()))
 
     def _footer_counts(batches):
         import pandas as pd
@@ -6563,7 +6448,7 @@ def kg_pipeline_lineage(spark, sf_dir):
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "stage": pdf["path"].str.extract(r"/([^/]+)/data/")[0],
+                    "stage": pdf["stage"],
                     "nr": [
                         pq.ParquetFile(
                             p[len("file:"):] if p.startswith("file:") else p
@@ -6575,7 +6460,6 @@ def kg_pipeline_lineage(spark, sf_dir):
 
     dat = (
         spark.createDataFrame(files, "stage string, path string")
-        .select("path")
         .mapInPandas(_footer_counts, "stage string, nr long")
         .groupBy("stage")
         .agg(F.sum("nr").cast("bigint").alias("data_rows"))
@@ -6635,40 +6519,28 @@ def kg_entity_subgraph(spark, sf_dir):
     induced EDGE set, and from kg_gnn_neighbor_sample by being exact
     within the radius rather than fan-out-sampled.
 
-    Scale shape: the BFS is a 2-iteration driver loop of broadcast
-    frontier joins against the once-checkpointed undirected adjacency
-    (frontier is entity-dictionary-sized); the induced-edge filter is two
+    Scale shape: the BFS is the kernel's frontier_bfs capped at 2 hops
+    over the once-checkpointed undirected adjacency (frontier is
+    entity-dictionary-sized); the induced-edge filter is two
     semi-join probes of the edge table against the broadcast reach set —
     the hub's neighborhood, not the corpus, bounds every intermediate."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    t = (
+    t = pin(
         edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
         .select("subj_id", "pred", "obj_id")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    und = (
-        t.select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
-        .unionByName(
-            t.select(F.col("obj_id").alias("a"), F.col("subj_id").alias("b"))
-        )
-        .distinct()
+    und = t.select(
+        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
+    ).unionByName(
+        t.select(F.col("obj_id").alias("src"), F.col("subj_id").alias("dst"))
     )
     seed = nodes.where(
         (F.col("node_type") == "Entity") & (F.col("name") == "acme corp")
-    ).select(F.col("node_id").alias("id"), F.lit(0).alias("depth"))
-    frontier, seen = seed, seed
-    for depth in range(1, 3):
-        frontier = (
-            und.join(
-                F.broadcast(frontier.where(F.col("depth") == depth - 1)),
-                on=und["a"] == F.col("id"),
-            )
-            .select(F.col("b").alias("id"), F.lit(depth).alias("depth"))
-            .distinct()
-        )
-        seen = seen.unionByName(frontier)
-    keep = seen.groupBy("id").agg(F.min("depth").alias("d"))
+    ).select(F.lit(0).alias("source"), F.col("node_id").alias("node"))
+    keep = frontier_bfs(und, seed, 2).select(
+        F.col("node").alias("id"), F.col("depth").alias("d")
+    )
     names = nodes.select("node_id", "name")
     return (
         t.join(
@@ -7115,12 +6987,12 @@ def kg_graph_neighborhood(spark, sf_dir):
     tells you whether the extracted KG is a small world or a chain of
     islands, and the standard health check after an extraction-rule change.
 
-    Spark side: exact BFS by semi-naive frontier expansion — each hop
-    joins ONLY the fresh frontier onto the checkpointed adjacency and
-    anti-joins the seen set, so a pair is expanded exactly once (never the
-    full closure re-join); hop counts are map-side-combinable aggregates
-    and the 4-row hop frame pays one single-partition window (bounded by
-    construction). Exact distinct pairs are the TEST-scale choice: the
+    Spark side: exact BFS by the kernel's semi-naive frontier_bfs with
+    every node as its own source — each hop joins ONLY the fresh frontier
+    onto the checkpointed adjacency and anti-joins the seen set, so a pair
+    is expanded exactly once (never the full closure re-join); hop counts
+    are map-side-combinable aggregates and the 4-row hop frame pays one
+    single-partition window (bounded by construction). Exact distinct pairs are the TEST-scale choice: the
     open-relation graph is entity-dictionary-sized, so |pairs| <= |dict|^2
     is small. The open-vocabulary web-scale leg is WIRED as
     kg_graph_anf_hll (HyperBall): the same loop with the exact seen-set
@@ -7133,36 +7005,14 @@ def kg_graph_neighborhood(spark, sf_dir):
     Reference analog: none (web-graph analytics addendum alongside
     kg_graph_bowtie / kg_graph_closeness)."""
     _, edges = ensure_graph(spark, sf_dir)
-    adj = (
-        edges.where(
-            (~F.col("pred").isin(*_CLOSED_PREDS))
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    adj = _open_adj(edges).select(
+        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     )
-    seen = adj.localCheckpoint(eager=True)
-    frontier = seen
-    rows = seen.withColumn("d", F.lit(1))
-    for d in (2, 3, 4):
-        nxt = (
-            frontier.join(
-                adj.select(F.col("a").alias("b"), F.col("b").alias("nxt")),
-                "b",
-            )
-            .select("a", F.col("nxt").alias("b"))
-            .distinct()
-        )
-        fresh = nxt.join(seen, ["a", "b"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        rows = rows.unionByName(fresh.withColumn("d", F.lit(d)))
-        seen = seen.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = fresh
+    verts = adj.select(F.col("src").alias("source"), F.col("src").alias("node"))
     ex = (
-        rows.where(F.col("a") != F.col("b"))
-        .groupBy(F.col("d").alias("hop"))
+        frontier_bfs(adj, verts, 4)
+        .where(F.col("depth") > 0)
+        .groupBy(F.col("depth").alias("hop"))
         .agg(F.count(F.lit(1)).alias("n_new"))
     )
     hops = spark.range(1, 5).select(F.col("id").alias("hop"))
@@ -7294,13 +7144,15 @@ def kg_graph_anf_hll(spark, sf_dir):
         (h % _ANF_M).alias("bucket"),
         ((h / F.lit(_ANF_M)).cast("bigint") % _ANF_W).alias("w"),
     )
-    s = hw.select(
-        "v",
-        "bucket",
-        F.when(F.col("w") == 0, F.lit(_ANF_RMAX))
-        .otherwise(F.lit(_ANF_RMAX) - F.length(F.expr("bin(w)")))
-        .alias("reg"),
-    ).persist()
+    s = lazy(
+        hw.select(
+            "v",
+            "bucket",
+            F.when(F.col("w") == 0, F.lit(_ANF_RMAX))
+            .otherwise(F.lit(_ANF_RMAX) - F.length(F.expr("bin(w)")))
+            .alias("reg"),
+        )
+    )
 
     def _est(sk: DataFrame, hop: int) -> DataFrame:
         per = sk.groupBy("v").agg(
@@ -7318,22 +7170,22 @@ def kg_graph_anf_hll(spark, sf_dir):
         )
 
     # Each hop's sketch feeds BOTH the next hop and its own estimate
-    # branch, so it is persisted — LAZILY: the single final action
-    # materializes every hop once and the estimate branches reuse the
-    # cache (an eager per-hop checkpoint ran 5 blocking driver jobs and
-    # made this the slowest query of the sweep at 8.3 s; the lazy form
-    # is one job, ~1 s). At production scale the same fork writes each
-    # hop's registers as a stage checkpoint.
+    # branch, so it is checkpointed — LAZILY: the single final action
+    # materializes every hop once and the estimate branches reuse it (an
+    # eager per-hop checkpoint ran 5 blocking driver jobs and made this
+    # the slowest query of the sweep at 8.3 s; the lazy form is one job,
+    # ~1 s). Unlike persist(), a local checkpoint leaves nothing in the
+    # session's cache manager to free. At production scale the same fork
+    # writes each hop's registers as a stage checkpoint.
     out = _est(s, 0)
     for k in range(1, _ANF_HOPS + 1):
         msg = adj.join(s, adj.obj_id == s.v).select(
             adj.subj_id.alias("v"), "bucket", "reg"
         )
-        s = (
+        s = lazy(
             s.unionByName(msg)
             .groupBy("v", "bucket")
             .agg(F.max("reg").alias("reg"))
-            .persist()
         )
         out = out.unionByName(_est(s, k))
     n = verts.agg(F.count(F.lit(1)).alias("n_nodes"))

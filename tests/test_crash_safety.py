@@ -113,3 +113,93 @@ def test_write_json_atomic(tmp_path):
     with open(p) as f:
         assert json.load(f) == [1, 2, 3]
     assert not os.path.exists(p + ".tmp")
+
+
+def _sets(out):
+    edges = {
+        (r.subj_id, r.pred, r.obj_id, r.n_occurrences)
+        for r in out["edges"].select(
+            "subj_id", "pred", "obj_id", "n_occurrences"
+        ).collect()
+    }
+    nodes = {
+        (r.node_id, r.node_type, r.name)
+        for r in out["nodes"].select("node_id", "node_type", "name").collect()
+    }
+    return nodes, edges
+
+
+def _assert_readable(spark, pages, wd):
+    """Every record a later runner or `cli status` reads still parses."""
+    PipelineRunner(spark, pages, wd)
+    for stage in os.listdir(wd):
+        man = os.path.join(wd, stage, "manifest.json")
+        if os.path.exists(man):
+            with open(man) as f:
+                json.load(f)
+        lin = os.path.join(wd, stage, "lineage", "lineage.parquet")
+        if os.path.exists(lin):
+            pq.ParquetFile(lin).metadata
+
+
+def _crash_manifest_write(monkeypatch):
+    """The next manifest.json write dies halfway through its bytes."""
+    import codegraphcontext_spark.pipeline.runner as runner_mod
+
+    real_dump = json.dump
+
+    def dump(obj, f, *a, **kw):
+        if os.path.basename(getattr(f, "name", "")).startswith("manifest.json"):
+            monkeypatch.setattr(runner_mod.json, "dump", real_dump)
+            text = json.dumps(obj)
+            f.write(text[: len(text) // 2])
+            raise OSError("injected crash mid manifest write")
+        return real_dump(obj, f, *a, **kw)
+
+    monkeypatch.setattr(runner_mod.json, "dump", dump)
+
+
+def _crash_lineage_write(monkeypatch):
+    """The next lineage parquet write leaves a torn file and dies."""
+    real_write = pq.write_table
+
+    def write_table(table, where, *a, **kw):
+        monkeypatch.setattr(pq, "write_table", real_write)
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("injected crash mid lineage write")
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+
+
+def test_build_survives_crash_in_commit_manifest(
+    spark, base_build, tmp_path_factory, monkeypatch
+):
+    """A crash while _commit writes a stage manifest must leave the workdir
+    readable; the retried build equals a clean one."""
+    pages, base_wd = base_build
+    wd = str(tmp_path_factory.mktemp("crash_commit") / "wd")
+    _crash_manifest_write(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run()
+    _assert_readable(spark, pages, wd)
+    clean = PipelineRunner(spark, pages, base_wd).run()
+    assert _sets(PipelineRunner(spark, pages, wd).run()) == _sets(clean)
+
+
+@pytest.mark.parametrize("inject", [_crash_manifest_write, _crash_lineage_write])
+def test_delete_survives_crash_in_refresh(
+    spark, base_build, tmp_path_factory, monkeypatch, inject
+):
+    """A crash in the middle of a delete's first manifest or lineage write
+    must leave the workdir readable; the retried delete equals a clean
+    delete."""
+    pages, wd = _clone(base_build, tmp_path_factory, "crash_refresh")
+    _, ref_wd = _clone(base_build, tmp_path_factory, "crash_refresh_ref")
+    clean = PipelineRunner(spark, pages, ref_wd).run_delete(PREFIX)
+    inject(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run_delete(PREFIX)
+    _assert_readable(spark, pages, wd)
+    retried = PipelineRunner(spark, pages, wd).run_delete(PREFIX)
+    assert _sets(retried) == _sets(clean)

@@ -171,13 +171,13 @@ def test_pagerank_mass_conservation(spark):
     from codegraphcontext_spark.queries.graph_queries import (
         _PR_SCALE,
         ensure_graph,
-        _pagerank_ranks,
+        pagerank_ranks,
     )
 
     nodes, edges = ensure_graph(spark, SF_DIR)
     n = nodes.count()
     n_edges = edges.select("subj_id", "obj_id").distinct().count()
-    total = _pagerank_ranks(nodes, edges).agg({"rank": "sum"}).first()[0]
+    total = pagerank_ranks(nodes, edges).agg({"rank": "sum"}).first()[0]
     # loss bound: per iteration < n_edges (contrib divs) + n (outer divs)
     # + n (dang div) + 1, plus the initial SCALE // n remainder
     slack = 5 * (n_edges + 2 * n + 1) + n

@@ -74,6 +74,38 @@ def test_no_closure_helper_remains():
     assert not hasattr(gq, "_open_closure")
 
 
+def test_queries_do_not_import_cli():
+    """Layering: the query layer never imports the CLI (the CLI imports
+    the query layer and its graph kernels, not the other way round)."""
+    import ast
+    import pathlib
+
+    qdir = pathlib.Path(gq.__file__).parent
+    offenders = []
+    for path in sorted(qdir.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                mods = [("." * node.level) + (node.module or "")]
+                mods += [f"{mods[0]}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            else:
+                continue
+            if any(m.split(".")[-1] == "cli" for m in mods):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_scc_bowtie_anf_leave_no_cached_plan(spark):
+    """kg_graph_scc, kg_graph_bowtie and kg_graph_anf_hll checkpoint their
+    intermediates instead of persist()ing them, so the session's cache
+    manager holds nothing once they have run."""
+    for name in ("kg_graph_scc", "kg_graph_bowtie", "kg_graph_anf_hll"):
+        getattr(gq, name)(spark, SF).collect()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+
+
 def test_brokerage_cap_binds_pre_join(spark):
     """A hub of degree N > CAP contributes wedges from exactly CAP
     neighbors: the cap is applied BEFORE the self-join (fanout C(CAP,2)),
@@ -238,3 +270,22 @@ def test_scc_distributed_branch_random_graph(spark, monkeypatch):
     monkeypatch.setenv("CGC_SCC_SMALL_CUTOVER", "0")
     got = _labels_of(adj)
     assert got == want
+
+
+def test_pipeline_lineage_counts_nested_part_files(spark, tmp_path, monkeypatch):
+    """kg_pipeline_lineage lists part files recursively: a stage whose data
+    dir holds a part file one directory down (a partitionBy layout) still
+    reconciles instead of silently undercounting its committed rows."""
+    import shutil
+
+    gq.ensure_graph(spark, SF)
+    root = tmp_path / "graphs"
+    shutil.copytree(gq.graph_dir(SF), root / os.path.basename(SF))
+    monkeypatch.setattr(gq, "_ROOT", str(root))
+    data = root / os.path.basename(SF) / "wd" / "docs" / "data"
+    part = max(data.glob("*.parquet"), key=lambda p: p.stat().st_size)
+    (data / "lang=xx").mkdir()
+    part.rename(data / "lang=xx" / part.name)
+    rows = {r.stage: r for r in gq.kg_pipeline_lineage(spark, SF).collect()}
+    assert rows["docs"].data_rows == rows["docs"].manifest_rows > 0
+    assert all(r.consistent == 1 for r in rows.values()), rows
