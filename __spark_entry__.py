@@ -36,15 +36,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # (BASELINE.md "sweep rotation") so every query converges to at least one
 # all-green CORRECTNESS_r*.json row across rounds.
 _SWEEP_FIRST = (
-    # graph-kernel rotation: every operator whose Spark path now runs
-    # through queries/kernels.py (or whose cached intermediates moved
-    # from persist() to checkpoints) goes first, so the driver re-checks
-    # it this round.
-    "kg_graph_closure",
-    "kg_graph_call_chain",
+    # small-graph rotation: the operators whose driver-side leg now runs
+    # through queries/kernels.py's small_graph go first, so the driver
+    # re-checks them this round.
     "kg_graph_pagerank",
     "kg_graph_ppr",
     "kg_graph_hits",
+    "kg_graph_scc",
+    "kg_graph_bowtie",
+    # graph-kernel rotation: every operator whose Spark path runs through
+    # queries/kernels.py (or whose cached intermediates moved from
+    # persist() to checkpoints).
+    "kg_graph_closure",
+    "kg_graph_call_chain",
     "kg_graph_label_prop",
     "kg_graph_eigenvector",
     "kg_graph_katz",
@@ -53,8 +57,6 @@ _SWEEP_FIRST = (
     "kg_graph_closeness",
     "kg_entity_subgraph",
     "kg_graph_neighborhood",
-    "kg_graph_bowtie",
-    "kg_graph_scc",
     "kg_graph_anf_hll",
     "kg_pipeline_lineage",
     "kg_call_chain",

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .driver_queries import _q
@@ -36,6 +38,7 @@ from .kernels import (
     matvec,
     pin,
     simple_paths,
+    small_graph,
 )
 
 # Bump when the pipeline's node/edge schema or semantics change — stale /tmp
@@ -704,11 +707,18 @@ def pagerank_ranks(nodes, edges, seed_id: str | None = None):
     kg_graph_pagerank (top-20 view), the mass-conservation test,
     kg_graph_ppr and the CLI's ``related`` handler. Without a seed the
     restart and dangling mass spread uniformly over all nodes (PageRank);
-    with one, all of it returns to the seed (personalized PageRank)."""
+    with one, all of it returns to the seed (personalized PageRank).
+
+    At or below the kernels' small-graph cutover the rounds run on the
+    driver over the collected adjacency (numpy, same integer rules);
+    above it, each round is a distributed mat-vec step."""
     dn, dd = _PR_DAMP_NUM, _PR_DAMP_DEN
     adj = edges.select(
         F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     ).distinct()
+    g = small_graph(adj, nodes.select("node_id"))
+    if g is not None:
+        return _pagerank_small(nodes.sparkSession, g, seed_id)
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     adjdeg = pin(adj.join(deg, "src"))
     non_dangling = deg.select(F.col("src").alias("node_id"))
@@ -754,6 +764,38 @@ def pagerank_ranks(nodes, edges, seed_id: str | None = None):
     return iterate(ids.select("node_id", r0.alias("rank")), step, _PR_ITERS)
 
 
+def _pagerank_small(spark, g, seed_id: str | None) -> DataFrame:
+    """pagerank_ranks' rounds on a collected SmallGraph: the same integer
+    rules (floor division, dangling mass and restart as above). Every value
+    is non-negative, so numpy's ``//`` equals Spark's ``div``. Ranks sum to
+    at most _PR_SCALE = 1e12, so ``inc + share`` <= 2e12 and
+    ``85 * (inc + share)`` <= 1.7e14, far below 2^63. Unlisted endpoints
+    (edges to nodes missing from ``nodes``) keep rank 0, as in the join."""
+    dn, dd, s = _PR_DAMP_NUM, _PR_DAMP_DEN, _PR_SCALE
+    n = g.n
+    listed = g.names.slice(0, n)
+    outdeg = np.bincount(g.src, minlength=len(g.names))
+    dangling = outdeg[:n] == 0
+    if seed_id is None:
+        r0 = s // n
+        restart = ((dd - dn) * s) // (dd * n)
+        home = None
+    else:
+        home = np.array(listed.to_pylist(), dtype=object) == seed_id
+        r0 = np.where(home, s, 0)
+        restart = np.where(home, ((dd - dn) * s) // dd, 0)
+    rank = np.zeros(len(g.names), np.int64)
+    rank[:n] = r0
+    for _ in range(_PR_ITERS):
+        inc = g.matvec(rank[g.src] // outdeg[g.src])
+        dang = int(rank[:n][dangling].sum())
+        share = dang // n if home is None else np.where(home, dang, 0)
+        rank[:n] = restart + (dn * (inc[:n] + share)) // dd
+    return spark.createDataFrame(
+        pa.table({"node_id": listed, "rank": pa.array(rank[:n])})
+    )
+
+
 @_q("kg_graph_pagerank", _pagerank_oracle_sql())
 def kg_graph_pagerank(spark, sf_dir):
     """PageRank over the materialized graph (the 'most important entity'
@@ -769,13 +811,17 @@ def kg_graph_pagerank(spark, sf_dir):
     slack — pinned by tests/test_driver_contract.py::
     test_pagerank_mass_conservation; the oracle applies the identical rule.
 
-    Scale shape: the adjacency+outdegree table is built once and
-    localCheckpoint'ed; each iteration is one shuffle join (ranks × adjdeg
-    on subj_id — at 100 TB both sides hash-partition on the join key), one
-    map-side-combinable groupBy(obj_id), and one single-row scalar agg for
-    the dangling sum (cross-joined back, broadcast). The rank vector is 2
-    narrow columns per node; edge blobs never enter the loop. Driver holds
-    only the node COUNT — no collect of rows."""
+    Scale shape: at or below the small-graph cutover (queries/kernels.py,
+    100k distinct edges and listed nodes) the driver collects the distinct
+    adjacency and the node ids and runs the 5 rounds in numpy — a few
+    Spark jobs instead of ~50 single-task ones. Above it, the
+    adjacency+outdegree table is built once and localCheckpoint'ed; each
+    iteration is one shuffle join (ranks × adjdeg on subj_id — at 100 TB
+    both sides hash-partition on the join key), one map-side-combinable
+    groupBy(obj_id), and one single-row scalar agg for the dangling sum
+    (cross-joined back, broadcast). The rank vector is 2 narrow columns
+    per node; edge blobs never enter the loop, and the driver holds only
+    the node count."""
     nodes, edges = ensure_graph(spark, sf_dir)
     ranks = pagerank_ranks(nodes, edges)
     return (
@@ -1147,17 +1193,38 @@ def kg_graph_hits(spark, sf_dir):
     floor division after every half-step, so Spark and DuckDB agree
     bit-exactly under any parallelism (no float dot products).
 
-    Scale shape: the distinct adjacency is localCheckpoint'ed once; each
-    half-step is ONE shuffle join (score vector x adjacency on its key — at
-    100 TB both sides hash-partition on the join key) + a map-side-combinable
-    groupBy + a single-row scalar agg for the normalizer (cross-joined back,
-    broadcast by AQE). The score vector is 2 narrow columns; the driver
-    holds only the node count."""
+    Scale shape: at or below the small-graph cutover (queries/kernels.py)
+    the driver collects the distinct adjacency and the node ids and runs
+    the half-steps in numpy (same integer rules). Above it the distinct
+    adjacency is localCheckpoint'ed once; each half-step is ONE shuffle
+    join (score vector x adjacency on its key — at 100 TB both sides
+    hash-partition on the join key) + a map-side-combinable groupBy + a
+    single-row scalar agg for the normalizer (cross-joined back, broadcast
+    by AQE). The score vector is 2 narrow columns; the driver holds only
+    the node count."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    adj = pin(
-        edges.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
-        .distinct()
+    adj = edges.select(
+        F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
+    ).distinct()
+    g = small_graph(adj, nodes.select("node_id"))
+    scores = _hits_small(spark, g) if g is not None else _hits_scores(nodes, adj)
+    return (
+        scores.join(nodes.select("node_id", "name", "node_type"), "node_id")
+        .select(
+            "node_id",
+            "name",
+            "node_type",
+            F.col("auth").cast("bigint").alias("auth"),
+            F.col("hub").cast("bigint").alias("hub"),
+        )
+        .orderBy(F.desc("auth"), F.desc("hub"), F.asc("node_id"))
+        .limit(20)
     )
+
+
+def _hits_scores(nodes, adj) -> DataFrame:
+    """(node_id, auth, hub) after _HITS_ITERS distributed rounds."""
+    adj = pin(adj)
     radj = adj.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ids = pin(nodes.select("node_id"))
     n = ids.count()
@@ -1168,18 +1235,35 @@ def kg_graph_hits(spark, sf_dir):
         hub = lazy(hub)
         auth = lazy(l1_normalise(ids, matvec(adj, hub, "hub", "raw"), "auth", s))
         hub = l1_normalise(ids, matvec(radj, auth, "auth", "raw"), "hub", s)
-    return (
-        auth.join(hub, "node_id")
-        .join(nodes.select("node_id", "name", "node_type"), "node_id")
-        .select(
-            "node_id",
-            "name",
-            "node_type",
-            F.col("auth").cast("bigint").alias("auth"),
-            F.col("hub").cast("bigint").alias("hub"),
+    return auth.join(hub, "node_id")
+
+
+def _hits_small(spark, g) -> DataFrame:
+    """_hits_scores on a collected SmallGraph: the same integer rules, with
+    the normaliser ``greatest(sum, 1)`` taken over every node that receives
+    a contribution, unlisted endpoints included, as in l1_normalise. All
+    values are non-negative (numpy ``//`` equals Spark ``div``); a raw
+    score is at most _HITS_SCALE, so ``raw * _HITS_SCALE`` <= 1e12."""
+    n, s = g.n, _HITS_SCALE
+
+    def normalise(raw):
+        out = np.zeros(len(g.names), np.int64)
+        out[:n] = raw[:n] * s // max(int(raw.sum()), 1)
+        return out
+
+    hub = np.zeros(len(g.names), np.int64)
+    hub[:n] = s // n
+    for _ in range(_HITS_ITERS):
+        auth = normalise(g.matvec(hub[g.src]))
+        hub = normalise(g.matvec(auth[g.dst], forward=False))
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "node_id": g.names.slice(0, n),
+                "auth": pa.array(auth[:n]),
+                "hub": pa.array(hub[:n]),
+            }
         )
-        .orderBy(F.desc("auth"), F.desc("hub"), F.asc("node_id"))
-        .limit(20)
     )
 
 
@@ -1563,10 +1647,12 @@ def kg_graph_ppr(spark, sf_dir):
     decays with graph distance from it.
 
     Same scaled-integer arithmetic as kg_graph_pagerank (floor division
-    everywhere, bit-identical to the DuckDB twin); same per-iteration
-    shape: one shuffle join (ranks x adjdeg), one map-side-combinable
-    groupBy, one single-row dangling agg cross-joined back broadcast. The
-    seed id is a 1-row point lookup (the query parameter, not data).
+    everywhere, bit-identical to the DuckDB twin) and the same two legs:
+    at or below the small-graph cutover the rounds run on the driver over
+    the collected adjacency; above it, each iteration is one shuffle join
+    (ranks x adjdeg), one map-side-combinable groupBy and one single-row
+    dangling agg cross-joined back broadcast. The seed id is a 1-row point
+    lookup (the query parameter, not data).
     Nodes the walk never reaches keep rank 0 and are filtered — output is
     the seed's neighborhood ranked by relatedness."""
     nodes, edges = ensure_graph(spark, sf_dir)
@@ -4133,13 +4219,6 @@ def _open_adj(edges: DataFrame) -> DataFrame:
     )
 
 
-# Small-graph fast path cutover (edges): below it, SCC / reachability run
-# driver-side (Tarjan / BFS) on the collected edge list — identical labels,
-# ~30 Spark jobs fewer. Above it, the distributed trim + forward/backward
-# min-label peel loop runs (the web-scale path). Same cutover discipline as
-# pipeline/canon.py connected_components; tests force the distributed branch
-# by setting the env var to 0.
-_SCC_SMALL_CUTOVER = 100_000
 # Bounded source/sink trim before the distributed peel: each round drops
 # every node with in-degree 0 or out-degree 0 in the REMAINING subgraph
 # (such nodes are on no cycle, hence singleton SCCs). On a web KG this
@@ -4148,47 +4227,40 @@ _SCC_SMALL_CUTOVER = 100_000
 _SCC_TRIM_ROUNDS = 8
 
 
-def _scc_cutover() -> int:
-    return int(os.environ.get("CGC_SCC_SMALL_CUTOVER", _SCC_SMALL_CUTOVER))
-
-
-def _tarjan_labels(rows) -> list[tuple[str, str]]:
-    """Iterative Tarjan over collected (subj_id, obj_id) rows. Returns
+def _tarjan_labels(g) -> list[tuple[str, str]]:
+    """Iterative Tarjan over a collected SmallGraph. Returns
     (node_id, scc_id) for members of NONTRIVIAL SCCs only, scc_id = min
     member id (singletons fall back to their own id via the callers'
     coalesce, exactly like the oracle's LEFT JOIN on `mut`)."""
-    import collections
-
-    g = collections.defaultdict(list)
-    for r in rows:
-        g[r[0]].append(r[1])
-    idx: dict = {}
-    low: dict = {}
-    on: set = set()
-    st: list = []
+    names = g.names.to_pylist()
+    nbrs = g.neighbours()
+    idx = [-1] * len(names)
+    low = [0] * len(names)
+    on = [False] * len(names)
+    st: list[int] = []
     out: list[tuple[str, str]] = []
-    counter = [0]
-    for s in list(g):
-        if s in idx:
+    counter = 0
+    for s in range(len(names)):
+        if idx[s] >= 0:
             continue
-        stack = [(s, iter(g[s]))]
-        idx[s] = low[s] = counter[0]
-        counter[0] += 1
+        stack = [(s, iter(nbrs[s]))]
+        idx[s] = low[s] = counter
+        counter += 1
         st.append(s)
-        on.add(s)
+        on[s] = True
         while stack:
             v, it = stack[-1]
             advanced = False
             for w in it:
-                if w not in idx:
-                    idx[w] = low[w] = counter[0]
-                    counter[0] += 1
+                if idx[w] < 0:
+                    idx[w] = low[w] = counter
+                    counter += 1
                     st.append(w)
-                    on.add(w)
-                    stack.append((w, iter(g.get(w, []))))
+                    on[w] = True
+                    stack.append((w, iter(nbrs[w])))
                     advanced = True
                     break
-                elif w in on:
+                elif on[w]:
                     low[v] = min(low[v], idx[w])
             if not advanced:
                 stack.pop()
@@ -4199,8 +4271,8 @@ def _tarjan_labels(rows) -> list[tuple[str, str]]:
                     comp = []
                     while True:
                         w = st.pop()
-                        on.discard(w)
-                        comp.append(w)
+                        on[w] = False
+                        comp.append(names[w])
                         if w == v:
                             break
                     if len(comp) > 1:
@@ -4250,13 +4322,13 @@ def _scc_labels(edges: DataFrame) -> DataFrame:
     core is densely mutually reachable — a scale-killer this helper
     replaces; see VERDICT r04 item 1).
 
-    Small graphs (≤ CGC_CC_SMALL_CUTOVER-style env `CGC_SCC_SMALL_CUTOVER`
-    edges, default 100k): collect + iterative Tarjan on the driver —
-    identical labels, ~30 Spark jobs fewer (the pipeline/canon.py
-    union-find discipline). Web scale: (1) bounded source/sink trim
-    (nodes with in- or out-degree 0 are on no cycle — drop them and
-    repeat, the standard tendril prefilter, Slota et al.); (2) peel
-    rounds of forward + backward min-label propagation — a node with
+    Small graphs (at or below the kernels' small-graph cutover): collect +
+    iterative Tarjan on the driver — identical labels, ~30 Spark jobs
+    fewer (the pipeline/canon.py union-find discipline). Web scale:
+    (1) bounded source/sink trim (nodes with in- or out-degree 0 are on
+    no cycle — drop them and repeat, the standard tendril prefilter,
+    Slota et al.); (2) peel rounds of forward + backward min-label
+    propagation — a node with
     fwd_min(v) == bwd_min(v) == m is mutually reachable with m, and the
     set {v : fwd=bwd=m} is EXACTLY the SCC of m (fwd/bwd labels are
     constant on an SCC), so each round assigns every SCC whose min
@@ -4267,12 +4339,11 @@ def _scc_labels(edges: DataFrame) -> DataFrame:
     adj = _open_adj(edges)
     spark = edges.sparkSession
     schema = "node_id string, scc_id string"
-    if adj.limit(_scc_cutover() + 1).count() <= _scc_cutover():
-        rows = [(r.subj_id, r.obj_id) for r in adj.collect()]
-        labels = _tarjan_labels(rows)
-        if not labels:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(labels, schema)
+    g = small_graph(
+        adj.select(F.col("subj_id").alias("src"), F.col("obj_id").alias("dst"))
+    )
+    if g is not None:
+        return spark.createDataFrame(_tarjan_labels(g), schema)
 
     verts = (
         adj.select(F.col("subj_id").alias("v"))
@@ -4359,29 +4430,26 @@ def _reach_from(adj: DataFrame, seeds: DataFrame, forward: bool) -> DataFrame:
     one source key, so state is O(|reached|) node rows — never pair rows
     (the closure-free replacement for bow-tie's reachability legs)."""
     src, dst = ("subj_id", "obj_id") if forward else ("obj_id", "subj_id")
-    spark = adj.sparkSession
-    if adj.limit(_scc_cutover() + 1).count() <= _scc_cutover():
-        import collections
-
-        g = collections.defaultdict(list)
-        for r in adj.collect():
-            g[r[src]].append(r[dst])
-        seen = {r.v for r in seeds.collect()}
+    adj = adj.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    g = small_graph(adj, seeds.select("v"))
+    if g is not None:
+        nbrs = g.neighbours()
+        seen = set(range(g.n))
         frontier = list(seen)
         while frontier:
             nxt = []
             for v in frontier:
-                for w in g.get(v, ()):
+                for w in nbrs[v]:
                     if w not in seen:
                         seen.add(w)
                         nxt.append(w)
             frontier = nxt
-        if not seen:
-            return spark.createDataFrame([], "v string")
-        return spark.createDataFrame([(v,) for v in sorted(seen)], "v string")
+        names = g.names.to_pylist()
+        return seeds.sparkSession.createDataFrame(
+            [(v,) for v in sorted(names[i] for i in seen)], "v string"
+        )
     reached = frontier_bfs(
-        adj.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
-        seeds.select(F.lit(0).alias("source"), F.col("v").alias("node")),
+        adj, seeds.select(F.lit(0).alias("source"), F.col("v").alias("node"))
     )
     return reached.select(F.col("node").alias("v"))
 

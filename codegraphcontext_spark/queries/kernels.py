@@ -7,6 +7,13 @@ step joined against an edge table), an L1 normalisation, one synchronous
 label-propagation round, and the generator for the unrolled ``c{i}``/
 ``r{i}`` CTE chains the DuckDB oracles use for fixed-round iterations.
 
+Small-graph leg: ``small_graph`` fetches an adjacency of at most
+``CGC_SCC_SMALL_CUTOVER`` distinct edges to the driver once, as Arrow, and
+maps its node ids to int64 index arrays (``SmallGraph``). The rank kernels
+(PageRank, personalized PageRank, HITS) then run their rounds as numpy
+scatter-adds (``SmallGraph.matvec``), SCC runs Tarjan and reachability a
+plain BFS; above the cutover each caller runs its distributed loop.
+
 Conventions: an adjacency frame has columns ``src`` and ``dst``; score and
 label vectors are keyed by ``node_id``.
 
@@ -19,9 +26,27 @@ with the first action that reads it.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+
+# Small-graph cutover, in distinct edges (and listed nodes). At or below it
+# these run on the driver over the collected adjacency, with identical
+# results: pagerank_ranks (kg_graph_pagerank, kg_graph_ppr, the CLI's
+# `related`), kg_graph_hits, _scc_labels (kg_graph_scc and kg_graph_bowtie,
+# through ensure_scc) and _reach_from (kg_graph_bowtie). On such a graph
+# every distributed round is a few single-task stages, so the distributed
+# loops spend their time on per-job driver overhead: the driver leg runs a
+# few Spark jobs where they run tens. Above the cutover the distributed
+# loops run; they are the only path for web-scale graphs. Same discipline
+# as pipeline/canon.py's connected_components cutover; tests force the
+# distributed branch by setting CGC_SCC_SMALL_CUTOVER=0.
+_SMALL_GRAPH_CUTOVER = 100_000
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -155,6 +180,62 @@ def label_round(adj: DataFrame, labels: DataFrame) -> DataFrame:
     return labels.join(pick, "node_id", "left").select(
         "node_id", F.coalesce("new_label", "label").alias("label")
     )
+
+
+class SmallGraph(NamedTuple):
+    """A collected adjacency: ``names`` holds the node id of every index,
+    the listed ids first (indices ``0 .. n-1``, in listed order), then each
+    edge endpoint that is not listed; ``src``/``dst`` are int64 index
+    arrays, one entry per distinct edge."""
+
+    names: pa.Array
+    n: int
+    src: np.ndarray
+    dst: np.ndarray
+
+    def matvec(self, values: np.ndarray, forward: bool = True) -> np.ndarray:
+        """Small-graph twin of ``matvec``: sum the per-edge int64 ``values``
+        into their ``dst`` (or, with ``forward=False``, their ``src``) over
+        every index. Integer scatter-adds, no float weights, so the sums are
+        exact; callers keep them far inside int64."""
+        out = np.zeros(len(self.names), np.int64)
+        np.add.at(out, self.dst if forward else self.src, values)
+        return out
+
+    def neighbours(self) -> list[list[int]]:
+        """Out-neighbour lists per index."""
+        out: list[list[int]] = [[] for _ in range(len(self.names))]
+        for u, v in zip(self.src.tolist(), self.dst.tolist()):
+            out[u].append(v)
+        return out
+
+
+def small_graph(
+    adj: DataFrame, ids: DataFrame | None = None
+) -> SmallGraph | None:
+    """Fetch the distinct adjacency ``adj`` (src, dst), and the one-column
+    node list ``ids`` if given, to the driver in one pass each. Returns
+    ``None`` when either holds more than the small-graph cutover rows: the
+    caller then runs its distributed loop."""
+    cutover = int(os.environ.get("CGC_SCC_SMALL_CUTOVER", _SMALL_GRAPH_CUTOVER))
+    edges = adj.select("src", "dst").limit(cutover + 1).toArrow()
+    if edges.num_rows > cutover:
+        return None
+    listed = pa.array([], edges.schema.field("src").type)
+    if ids is not None:
+        table = ids.limit(cutover + 1).toArrow()
+        if table.num_rows > cutover:
+            return None
+        listed = pc.unique(table.column(0))
+    keys = pc.dictionary_encode(
+        pa.concat_arrays(
+            [listed, *edges.column("src").chunks, *edges.column("dst").chunks]
+        ),
+        null_encoding="encode",
+    )
+    codes = keys.indices.to_numpy().astype(np.int64)
+    n, m = len(listed), edges.num_rows
+    return SmallGraph(keys.dictionary, n, codes[n : n + m], codes[n + m :])
 
 
 def _unrolled(

@@ -13,6 +13,7 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
+import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import PipelineRunner
 
 PREFIX = "https://site1"
@@ -132,6 +133,10 @@ def _sets(out):
 def _assert_readable(spark, pages, wd):
     """Every record a later runner or `cli status` reads still parses."""
     PipelineRunner(spark, pages, wd)
+    for rec in ("_ingested.json", "_pending.json"):
+        if os.path.exists(os.path.join(wd, rec)):
+            with open(os.path.join(wd, rec)) as f:
+                json.load(f)
     for stage in os.listdir(wd):
         man = os.path.join(wd, stage, "manifest.json")
         if os.path.exists(man):
@@ -142,21 +147,25 @@ def _assert_readable(spark, pages, wd):
             pq.ParquetFile(lin).metadata
 
 
-def _crash_manifest_write(monkeypatch):
-    """The next manifest.json write dies halfway through its bytes."""
-    import codegraphcontext_spark.pipeline.runner as runner_mod
-
+def _crash_json_write(monkeypatch, name):
+    """The next write of the JSON record ``name`` dies halfway through its
+    bytes."""
     real_dump = json.dump
 
     def dump(obj, f, *a, **kw):
-        if os.path.basename(getattr(f, "name", "")).startswith("manifest.json"):
+        if os.path.basename(getattr(f, "name", "")).startswith(name):
             monkeypatch.setattr(runner_mod.json, "dump", real_dump)
             text = json.dumps(obj)
             f.write(text[: len(text) // 2])
-            raise OSError("injected crash mid manifest write")
+            raise OSError(f"injected crash mid {name} write")
         return real_dump(obj, f, *a, **kw)
 
     monkeypatch.setattr(runner_mod.json, "dump", dump)
+
+
+def _crash_manifest_write(monkeypatch):
+    """The next manifest.json write dies halfway through its bytes."""
+    _crash_json_write(monkeypatch, "manifest.json")
 
 
 def _crash_lineage_write(monkeypatch):
@@ -203,3 +212,110 @@ def test_delete_survives_crash_in_refresh(
     _assert_readable(spark, pages, wd)
     retried = PipelineRunner(spark, pages, wd).run_delete(PREFIX)
     assert _sets(retried) == _sets(clean)
+
+
+# A swap of this stage is where the _swap_write crashes below hit: by then
+# the docs and sentences swaps of the same fold have already landed.
+_SWAP_STAGE = "triples"
+
+
+def _crash_between_swap_renames(monkeypatch):
+    """_swap_write dies after moving the old data aside and before renaming
+    the new data in: the stage has data_old and data_new but no data."""
+    real = os.rename
+    new = os.path.join(_SWAP_STAGE, "data_new")
+
+    def rename(src, dst):
+        if src.endswith(new):
+            monkeypatch.setattr(runner_mod.os, "rename", real)
+            raise OSError("injected crash between swap renames")
+        return real(src, dst)
+
+    monkeypatch.setattr(runner_mod.os, "rename", rename)
+
+
+def _crash_after_swap_renames(monkeypatch):
+    """_swap_write dies after both renames, before the backup is deleted:
+    the stage has the new data and a stale data_old."""
+    real = shutil.rmtree
+    bak = os.path.join(_SWAP_STAGE, "data_old")
+
+    def rmtree(path, *a, **kw):
+        if str(path).endswith(bak):
+            monkeypatch.setattr(runner_mod.shutil, "rmtree", real)
+            raise OSError("injected crash after swap renames")
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(runner_mod.shutil, "rmtree", rmtree)
+
+
+def _crash_ingested_write(monkeypatch):
+    """The _ingested.json write that marks the fold as done dies halfway
+    through its bytes, after every stage committed."""
+    _crash_json_write(monkeypatch, "_ingested.json")
+
+
+_NEW_URL = "https://crashfold.example/new"
+
+
+@pytest.fixture(scope="module")
+def fold_delta(base_build, tmp_path_factory):
+    """A delta that changes the graph: a newer snapshot of one base url and
+    a page under a url the base does not have."""
+    from datetime import datetime
+
+    import pyarrow as pa
+
+    pages, _ = base_build
+    t = pq.read_table(pages)
+    delta = t.slice(0, 2)
+    html = [
+        b"<html><body><p>Crashfold Corp is a company. "
+        b"Crashfold Corp acquired Acme Corp.</p></body></html>",
+        b"<html><body><p>Newpage Labs is a company. "
+        b"Newpage Labs acquired Crashfold Corp.</p></body></html>",
+    ]
+    cols = {
+        "url": [delta.column("url")[0].as_py(), _NEW_URL],
+        "warc_ts": [datetime(2030, 1, 1)] * 2,
+        "html": html,
+    }
+    for name, values in cols.items():
+        i = delta.schema.get_field_index(name)
+        field = delta.schema.field(i)
+        delta = delta.set_column(i, field, pa.array(values, field.type))
+    p = str(tmp_path_factory.mktemp("crash_fold_delta") / "delta.parquet")
+    pq.write_table(delta, p)
+    return p
+
+
+@pytest.fixture(scope="module")
+def clean_fold(spark, base_build, fold_delta, tmp_path_factory):
+    """The node and edge sets of an uninterrupted fold of fold_delta."""
+    pages, wd = _clone(base_build, tmp_path_factory, "clean_fold")
+    nodes, edges = _sets(
+        PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    )
+    assert any(n[0] == _NEW_URL for n in nodes), "the delta did not land"
+    return nodes, edges
+
+
+@pytest.mark.parametrize(
+    "inject",
+    [_crash_between_swap_renames, _crash_after_swap_renames, _crash_ingested_write],
+)
+def test_incremental_survives_crash_at_write_boundary(
+    spark, base_build, fold_delta, clean_fold, tmp_path_factory, monkeypatch,
+    inject,
+):
+    """A crash inside a fold's stage swap, or while the fold is being
+    marked done, must leave the workdir readable; the retried fold equals
+    an uninterrupted one."""
+    pages, wd = _clone(base_build, tmp_path_factory, "crash_fold")
+    inject(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    _assert_readable(spark, pages, wd)
+    retried = PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    assert not os.path.exists(os.path.join(wd, "_pending.json"))
+    assert _sets(retried) == clean_fold

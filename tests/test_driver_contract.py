@@ -77,6 +77,52 @@ def test_components_gate_on_distributed_cc_path(spark, ddb, monkeypatch):
     assert all(r.values()), r
 
 
+def _small_graph_legs(monkeypatch, cutover):
+    """Set the kernels' small-graph cutover (None = the default) and spy on
+    graph_queries.small_graph: the returned list records, per call, whether
+    the small-graph leg ran (True) or the distributed loop (False)."""
+    import codegraphcontext_spark.queries.graph_queries as gq
+
+    if cutover is None:
+        monkeypatch.delenv("CGC_SCC_SMALL_CUTOVER", raising=False)
+    else:
+        monkeypatch.setenv("CGC_SCC_SMALL_CUTOVER", cutover)
+    legs = []
+    real = gq.small_graph
+
+    def spy(*args, **kwargs):
+        g = real(*args, **kwargs)
+        legs.append(g is not None)
+        return g
+
+    monkeypatch.setattr(gq, "small_graph", spy)
+    return legs
+
+
+# both legs of the rank kernels' small-graph cutover: the default (the
+# sf0.01 graph is far below it, so the driver-side leg runs) and 0 (the
+# distributed loop)
+_CUTOVERS = pytest.mark.parametrize(
+    "cutover", [None, "0"], ids=["small-graph", "distributed"]
+)
+
+
+@pytest.mark.parametrize(
+    "name", ["kg_graph_pagerank", "kg_graph_ppr", "kg_graph_hits"]
+)
+def test_rank_gate_on_distributed_path(spark, ddb, monkeypatch, name):
+    """The distributed rounds of PageRank, personalized PageRank and HITS
+    (the web-scale path) must pass the same oracle gate as the small-graph
+    leg the default cutover takes at sf0.01: force the cutover to 0, assert
+    the distributed loop actually ran, then run the shared-gate compare."""
+    legs = _small_graph_legs(monkeypatch, "0")
+    sdf = entry_mod.queries()[name](spark, SF_DIR).toPandas()
+    assert legs == [False]
+    odf = ddb.execute(entry_mod.oracle_sql()[name]).df()
+    r = compare(sdf, odf)
+    assert all(r.values()), r
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
@@ -164,7 +210,8 @@ def test_fuzzy_search_typo_recall(spark, tmp_path):
     assert exact[0].jaccard_x1e6 == 1_000_000
 
 
-def test_pagerank_mass_conservation(spark):
+@_CUTOVERS
+def test_pagerank_mass_conservation(spark, monkeypatch, cutover):
     """With dangling mass redistributed, total rank mass is conserved up to
     floor-division slack: every div floors toward zero, so the sum can only
     drift DOWN from SCALE, bounded by ~one unit per floor op per iteration."""
@@ -177,14 +224,17 @@ def test_pagerank_mass_conservation(spark):
     nodes, edges = ensure_graph(spark, SF_DIR)
     n = nodes.count()
     n_edges = edges.select("subj_id", "obj_id").distinct().count()
+    legs = _small_graph_legs(monkeypatch, cutover)
     total = pagerank_ranks(nodes, edges).agg({"rank": "sum"}).first()[0]
+    assert legs == [cutover is None]
     # loss bound: per iteration < n_edges (contrib divs) + n (outer divs)
     # + n (dang div) + 1, plus the initial SCALE // n remainder
     slack = 5 * (n_edges + 2 * n + 1) + n
     assert 0 <= _PR_SCALE - total <= slack, (total, _PR_SCALE, slack)
 
 
-def test_hits_normalization_and_determinism(spark):
+@_CUTOVERS
+def test_hits_normalization_and_determinism(spark, monkeypatch, cutover):
     """Each HITS half-step renormalizes the score vector to ~SCALE by
     integer floor division, so (a) the final auth/hub vectors each sum to
     SCALE within floor slack (one unit lost per node per normalize), and
@@ -195,10 +245,12 @@ def test_hits_normalization_and_determinism(spark):
         kg_graph_hits,
     )
 
+    legs = _small_graph_legs(monkeypatch, cutover)
     rows = kg_graph_hits(spark, SF_DIR).collect()
     assert len(rows) == 20
     # top-20 is a view; recompute full sums via a second run's DataFrame
     rows2 = kg_graph_hits(spark, SF_DIR).collect()
+    assert legs == [cutover is None] * 2
     assert [tuple(r) for r in rows] == [tuple(r) for r in rows2]
     # auth scores are positive for mentioned entities and bounded by SCALE
     assert all(0 <= r.auth <= _HITS_SCALE for r in rows)
