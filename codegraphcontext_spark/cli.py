@@ -40,6 +40,13 @@ def _spark(args):
     )
 
 
+def _read_stage(spark, workdir: str, stage: str):
+    """A committed stage of ``workdir``, read with its footer schema."""
+    from .pipeline.runner import read_stage
+
+    return read_stage(spark, f"{workdir}/{stage}/data")
+
+
 def cmd_build(args) -> int:
     from .pipeline.runner import PipelineRunner
 
@@ -211,8 +218,8 @@ def cmd_query(args) -> int:
         }), file=sys.stderr)
         return 2
     spark = _spark(args)
-    nodes = spark.read.parquet(f"{args.workdir}/nodes/data")
-    edges = spark.read.parquet(f"{args.workdir}/edges/data")
+    nodes = _read_stage(spark, args.workdir, "nodes")
+    edges = _read_stage(spark, args.workdir, "edges")
     name = (args.arg or "").lower()
     if args.query == "who_references":
         ent = _entity_ids(nodes, name).withColumnRenamed("node_id", "obj_id")
@@ -492,7 +499,7 @@ def cmd_query(args) -> int:
             }), file=sys.stderr)
             return 2
         a, b = (s.strip().lower() for s in args.arg.split("->", 1))
-        occ = spark.read.parquet(f"{args.workdir}/edge_occurrences/data")
+        occ = _read_stage(spark, args.workdir, "edge_occurrences")
         subj = F.broadcast(
             _entity_ids(nodes, a).withColumnRenamed("node_id", "subj_id")
         )
@@ -555,7 +562,7 @@ def cmd_query(args) -> int:
             }), file=sys.stderr)
             return 2
         a, b = (s.strip().lower() for s in args.arg.split("->", 1))
-        occ = spark.read.parquet(f"{args.workdir}/edge_occurrences/data")
+        occ = _read_stage(spark, args.workdir, "edge_occurrences")
         subj = F.broadcast(
             _entity_ids(nodes, a).withColumnRenamed("node_id", "subj_id")
         )
@@ -760,8 +767,8 @@ def cmd_warehouse(args) -> int:
     from .pipeline.warehouse import write_bucketed_graph
 
     spark = _spark(args)
-    nodes = spark.read.parquet(f"{args.workdir}/nodes/data")
-    edges = spark.read.parquet(f"{args.workdir}/edges/data")
+    nodes = _read_stage(spark, args.workdir, "nodes")
+    edges = _read_stage(spark, args.workdir, "edges")
     write_bucketed_graph(
         spark, nodes, edges, db=args.db,
         n_buckets=args.buckets, location=args.location,
@@ -840,13 +847,13 @@ def cmd_sql(args) -> int:
         print(json.dumps({"error": err}), file=sys.stderr)
         return 2
     spark = _spark(args)
-    spark.read.parquet(f"{args.workdir}/nodes/data").createOrReplaceTempView("nodes")
-    spark.read.parquet(f"{args.workdir}/edges/data").createOrReplaceTempView("edges")
+    _read_stage(spark, args.workdir, "nodes").createOrReplaceTempView("nodes")
+    _read_stage(spark, args.workdir, "edges").createOrReplaceTempView("edges")
     docs_path = f"{args.workdir}/docs/data"
     import os
 
     if os.path.isdir(docs_path):
-        spark.read.parquet(docs_path).createOrReplaceTempView("docs")
+        _read_stage(spark, args.workdir, "docs").createOrReplaceTempView("docs")
     res = spark.sql(args.sql)
     for row in res.limit(args.limit).collect():
         print(json.dumps(row.asDict(), default=str))
@@ -888,8 +895,8 @@ def cmd_dot(args) -> int:
 def _subgraph(spark, workdir: str, seed_substring: str, hops: int, limit: int):
     """Shared seed-match -> k-hop expand used by dot + visualize: returns
     (edge rows, {node_id: (name, node_type)})."""
-    nodes = spark.read.parquet(f"{workdir}/nodes/data")
-    edges = spark.read.parquet(f"{workdir}/edges/data")
+    nodes = _read_stage(spark, workdir, "nodes")
+    edges = _read_stage(spark, workdir, "edges")
     seed = (
         nodes.where(
             (F.col("node_type") == "Entity")

@@ -160,23 +160,20 @@ def connected_components(
     alias clusters (diameter <= ~3) is a handful of iterations; max_iter caps
     pathological chains (SURVEY.md §7.4.3).
     """
-    # Small-graph fast path: below this many merge pairs, collect and run
-    # driver-side union-find — identical labels (min surface per component),
-    # ~10 Spark jobs fewer. The DataFrame loop below is the web-scale path
-    # (pair count >> driver memory); the threshold is the cutover knob,
-    # overridable via CGC_CC_SMALL_CUTOVER so tests can force the
-    # distributed branch on small fixtures (set 0 -> loop always).
-    # Materialize edges ONCE before probing: the probe is then a cheap bounded
-    # count over checkpointed data, and the web-scale loop reuses the same
-    # materialization instead of recomputing the upstream LSH join per
-    # iteration (round-1 version collected 100k rows on every call, including
-    # the big path that discarded them).
+    # Small-graph fast path: below this many merge pairs, run driver-side
+    # union-find — identical labels (min surface per component), ~10 Spark
+    # jobs fewer. The DataFrame loop below is the web-scale path (pair count
+    # >> driver memory); the threshold is the cutover knob, overridable via
+    # CGC_CC_SMALL_CUTOVER so tests can force the distributed branch on small
+    # fixtures (set 0 -> loop always). The probe IS the fetch: one bounded
+    # Arrow pull of at most cutover+1 pairs decides the branch and, below the
+    # cutover, is the union-find input. Above it the pulled pairs are dropped
+    # and the edges materialize once for the loop.
     global LAST_CC_PATH
     small = int(os.environ.get("CGC_CC_SMALL_CUTOVER", CC_SMALL_CUTOVER))
-    edges = edges.localCheckpoint(eager=True)
-    if edges.limit(small + 1).count() <= small:
+    head = edges.select("a", "b").limit(small + 1).toArrow()
+    if head.num_rows <= small:
         LAST_CC_PATH = "union-find"
-        head = edges.collect()
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:
@@ -185,8 +182,8 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in head:
-            ra, rb = find(r.a), find(r.b)
+        for a, b in zip(head.column("a").to_pylist(), head.column("b").to_pylist()):
+            ra, rb = find(a), find(b)
             if ra != rb:
                 lo, hi = min(ra, rb), max(ra, rb)
                 parent[hi] = lo  # min-label root, same as the loop's fixpoint
@@ -202,6 +199,7 @@ def connected_components(
         )
 
     LAST_CC_PATH = "min-label-loop"
+    edges = edges.localCheckpoint(eager=True)
     sym = (
         edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .union(edges.select(F.col("b").alias("x"), F.col("a").alias("y")))

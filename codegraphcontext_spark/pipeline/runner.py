@@ -20,6 +20,16 @@ to Iceberg MERGE/snapshots on a real cluster):
 Stage boundaries repartition by xxhash64(url) so partition->content mapping
 is stable across runs and cluster sizes (north rule: per-partition lineage
 rows are meaningful and resume is deterministic).
+
+Reads of a committed stage go through ``read_stage``: the Spark schema the
+writer stored in a part file's footer (key
+``org.apache.spark.sql.parquet.row.metadata``) is read on the driver with
+pyarrow and handed to ``spark.read.schema(...)``, so opening a stage starts
+no schema-inference job (on Iceberg the schema comes from table metadata the
+same way). Every part file of a stage comes from one write, so one footer
+speaks for all of them. A directory with no part file carrying that key (a
+pyarrow-written table, a missing path) is read with plain
+``spark.read.parquet`` and its inference.
 """
 
 from __future__ import annotations
@@ -30,6 +40,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..extract import EXTRACTOR_VERSION, extract_stage
@@ -60,6 +71,34 @@ PIPELINE_LAYOUT_VERSION = 4
 # stages always committed, even under checkpoint="minimal": the expensive
 # Python-extraction output, the linked mention table, and the graph itself.
 _MINIMAL_COMMITS = frozenset({"docs", "linked", "nodes", "edges", "edge_occurrences"})
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _part_files(data_dir: str) -> list[str]:
+    """Sorted parquet part-file names of a stage directory (no _SUCCESS,
+    no hidden checksum or temp files)."""
+    return sorted(
+        f for f in os.listdir(data_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def read_stage(spark: SparkSession, data_dir: str) -> DataFrame:
+    """Read a committed stage with the schema in its first part file's
+    footer (no inference job); fall back to ``spark.read.parquet`` when no
+    part file carries Spark's schema key."""
+    import pyarrow.parquet as pq
+
+    try:
+        first = os.path.join(data_dir, _part_files(data_dir)[0])
+        meta = pq.read_metadata(first).metadata or {}
+    except (OSError, IndexError):
+        meta = {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(data_dir)
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(data_dir)
 
 
 class PipelineRunner:
@@ -252,7 +291,7 @@ class PipelineRunner:
         if stage in self._LAYOUT_SORT:
             df = df.sortWithinPartitions(*self._LAYOUT_SORT[stage])
         df.write.mode("overwrite").parquet(out)
-        committed = self.spark.read.parquet(out)
+        committed = read_stage(self.spark, out)
         n = self._write_lineage(d)
         wall_ms = int((time.time() - t0) * 1000)
         manifest = {
@@ -276,10 +315,7 @@ class PipelineRunner:
         import pyarrow.parquet as pq
 
         data_dir = os.path.join(stage_dir, "data")
-        parts = sorted(
-            f for f in os.listdir(data_dir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
+        parts = _part_files(data_dir)
         import hashlib
         import re
 
@@ -317,7 +353,7 @@ class PipelineRunner:
         return sum(counts)
 
     def _load(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._dir(stage), "data"))
+        return read_stage(self.spark, os.path.join(self._dir(stage), "data"))
 
     def _stage(self, stage: str, build) -> DataFrame:
         if self._committed(stage):
@@ -415,21 +451,22 @@ class PipelineRunner:
             # a NARROW projection (html is read to hash but pruned before the
             # window shuffle); the raw winner rows are then recovered with a
             # broadcast semi-join, so html itself never crosses a shuffle.
-            lp = read_pages(spark, self.pages_path)
-            dup_urls = self._dup_urls(lp)
-            no_dup = lp.join(F.broadcast(dup_urls), "url", "left_anti").select(
+            # It scans the same ``pages`` frame as build_docs: one read (and
+            # one schema resolution) of the raw pages per run.
+            dup_urls = self._dup_urls(pages)
+            no_dup = pages.join(F.broadcast(dup_urls), "url", "left_anti").select(
                 "url", "html"
             )
             w = Window.partitionBy("url").orderBy(*self._winner_order())
             win_keys = (
-                lp.join(F.broadcast(dup_urls), "url", "left_semi")
+                pages.join(F.broadcast(dup_urls), "url", "left_semi")
                 .select("url", "warc_ts", F.md5("html").alias("snap_md5"))
                 .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1)
                 .select("url", "warc_ts", "snap_md5")
             )
             dup_win = (
-                lp.join(F.broadcast(dup_urls), "url", "left_semi")
+                pages.join(F.broadcast(dup_urls), "url", "left_semi")
                 .withColumn("snap_md5", F.md5("html"))
                 .join(
                     F.broadcast(win_keys),
@@ -518,10 +555,9 @@ class PipelineRunner:
         os.rename(tmp, old)
         shutil.rmtree(bak)
 
-    def _refresh_manifest(self, stage: str) -> DataFrame:
+    def _refresh_manifest(self, stage: str) -> None:
         """Recompute lineage + manifest for a swapped stage from its files."""
         d = self._dir(stage)
-        committed = self.spark.read.parquet(os.path.join(d, "data"))
         manifest = {
             "stage": stage,
             "input_fingerprint": self._fingerprint(),
@@ -532,7 +568,6 @@ class PipelineRunner:
         }
         self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
-        return committed
 
     def run_incremental(self, delta_pages_path: str) -> dict[str, DataFrame]:
         """Fold a delta snapshot of pages into a committed workdir.

@@ -27,6 +27,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..pipeline.runner import read_stage
 from .driver_queries import _q
 from .kernels import (
     _unrolled,
@@ -83,16 +84,16 @@ def ensure_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         ).run()
         with open(marker, "w") as f:
             f.write(str(_GRAPH_VERSION))
-    nodes = spark.read.parquet(os.path.join(d, "wd", "nodes", "data"))
-    edges = spark.read.parquet(os.path.join(d, "wd", "edges", "data"))
+    nodes = read_stage(spark, os.path.join(d, "wd", "nodes", "data"))
+    edges = read_stage(spark, os.path.join(d, "wd", "edges", "data"))
     return nodes, edges
 
 
 def load_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-site provenance table (built alongside nodes/edges)."""
     ensure_graph(spark, sf_dir)
-    return spark.read.parquet(
-        os.path.join(graph_dir(sf_dir), "wd", "edge_occurrences", "data")
+    return read_stage(
+        spark, os.path.join(graph_dir(sf_dir), "wd", "edge_occurrences", "data")
     )
 
 
@@ -1972,7 +1973,7 @@ def kg_incremental_pred_counts(spark, sf_dir):
     d = ensure_incremental_graph(spark, sf_dir)
     before = spark.read.parquet(os.path.join(d, "base_pred_counts"))
     after = (
-        spark.read.parquet(os.path.join(d, "wd", "edges", "data"))
+        read_stage(spark, os.path.join(d, "wd", "edges", "data"))
         .groupBy("pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_after"))
     )
@@ -2088,12 +2089,12 @@ def kg_incremental_delete_counts(spark, sf_dir):
     under the prefix at build time."""
     d = ensure_incremental_graph(spark, sf_dir)
     ingest = (
-        spark.read.parquet(os.path.join(d, "wd", "edges", "data"))
+        read_stage(spark, os.path.join(d, "wd", "edges", "data"))
         .groupBy("pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_ingest"))
     )
     after = (
-        spark.read.parquet(os.path.join(d, "wd_del", "edges", "data"))
+        read_stage(spark, os.path.join(d, "wd_del", "edges", "data"))
         .groupBy("pred")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_after_delete"))
     )
@@ -2606,7 +2607,7 @@ def kg_linking_tier_accuracy(spark, sf_dir):
     null-safe comparison."""
     ensure_graph(spark, sf_dir)
     d = graph_dir(sf_dir)
-    linked = spark.read.parquet(os.path.join(d, "wd", "linked", "data"))
+    linked = read_stage(spark, os.path.join(d, "wd", "linked", "data"))
     golden = spark.read.parquet(
         os.path.join(d, "corpus", "golden_triples.parquet")
     )
@@ -2658,8 +2659,8 @@ def kg_alias_table(spark, sf_dir):
     (surface, entity) — map-side combinable — a node-key join for the
     canonical name, and a TakeOrderedAndProject top-50."""
     nodes, _ = ensure_graph(spark, sf_dir)
-    linked = spark.read.parquet(
-        os.path.join(graph_dir(sf_dir), "wd", "linked", "data")
+    linked = read_stage(
+        spark, os.path.join(graph_dir(sf_dir), "wd", "linked", "data")
     )
     return (
         linked.join(
@@ -2836,8 +2837,8 @@ def kg_pred_drift(spark, sf_dir):
     tiny aggregate; no window, no driver-side state."""
     ensure_graph(spark, sf_dir)
     d = graph_dir(sf_dir)
-    occ = spark.read.parquet(os.path.join(d, "wd", "edge_occurrences", "data"))
-    docs = spark.read.parquet(os.path.join(d, "wd", "docs", "data"))
+    occ = read_stage(spark, os.path.join(d, "wd", "edge_occurrences", "data"))
+    docs = read_stage(spark, os.path.join(d, "wd", "docs", "data"))
     return (
         occ.join(docs.select("url", "warc_ts"), on="url")
         .groupBy(
@@ -2996,8 +2997,8 @@ def kg_entity_lifespan(spark, sf_dir):
     is map-side combinable."""
     nodes, edges = ensure_graph(spark, sf_dir)
     occ = load_occurrences(spark, sf_dir)
-    docs = spark.read.parquet(
-        os.path.join(graph_dir(sf_dir), "wd", "docs", "data")
+    docs = read_stage(
+        spark, os.path.join(graph_dir(sf_dir), "wd", "docs", "data")
     )
     ents = nodes.where(F.col("node_type") == "Entity").select(
         "node_id", "name"
@@ -3445,8 +3446,8 @@ def kg_entity_churn(spark, sf_dir):
     distinct frame, joined day-to-day (bounded by calendar cardinality)."""
     nodes, edges = ensure_graph(spark, sf_dir)
     occ = load_occurrences(spark, sf_dir)
-    docs = spark.read.parquet(
-        os.path.join(graph_dir(sf_dir), "wd", "docs", "data")
+    docs = read_stage(
+        spark, os.path.join(graph_dir(sf_dir), "wd", "docs", "data")
     )
     ents = nodes.where(F.col("node_type") == "Entity").select(
         "node_id", "name"
@@ -3874,8 +3875,8 @@ def kg_template_stats(spark, sf_dir):
     expressions; ONE aggregate keyed by domain (map-side combinable,
     host-cardinality result); no joins, no windows, no driver data."""
     ensure_graph(spark, sf_dir)
-    docs = spark.read.parquet(
-        os.path.join(graph_dir(sf_dir), "wd", "docs", "data")
+    docs = read_stage(
+        spark, os.path.join(graph_dir(sf_dir), "wd", "docs", "data")
     )
     return (
         docs.select(
@@ -5433,8 +5434,8 @@ def kg_search_expanded(spark, sf_dir):
         spark.createDataFrame([(seed, 2)], "ent string, w int")
     )
     lk = (
-        spark.read.parquet(
-            os.path.join(graph_dir(sf_dir), "wd", "linked", "data")
+        read_stage(
+            spark, os.path.join(graph_dir(sf_dir), "wd", "linked", "data")
         )
         .where(
             F.col("entity_id").isNotNull() & (F.col("tier") != "unlinked")
@@ -5614,12 +5615,12 @@ def kg_graph_diff(spark, sf_dir):
     returns only a success flag; the diff view is the auditable upgrade."""
     d = ensure_incremental_graph(spark, sf_dir)
     before = (
-        spark.read.parquet(os.path.join(d, "wd", "edges", "data"))
+        read_stage(spark, os.path.join(d, "wd", "edges", "data"))
         .select("subj_id", "pred", "obj_id")
         .distinct()
     )
     after = (
-        spark.read.parquet(os.path.join(d, "wd_del", "edges", "data"))
+        read_stage(spark, os.path.join(d, "wd_del", "edges", "data"))
         .select("subj_id", "pred", "obj_id")
         .distinct()
     )

@@ -51,6 +51,18 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # Deterministic session timezone so timestamp round-trips are stable.
         .config("spark.sql.session.timeZone", "UTC")
+        # Whole-stage codegen cache (JVM-wide, LRU): Spark's default holds 100
+        # generated classes, but the engine's plan working set is ~5x that.
+        # Measured on 1,000 pages, local[4]: a build compiles 211 classes, a
+        # 1% delta fold 71 more, curate_documents 97, run_delete 13, a
+        # checkpoint="minimal" graph build 97 and a first pass of four graph
+        # queries 45 -- 546 distinct classes for all of them in one JVM. At
+        # 100 entries LRU eviction throws every class away before its reuse,
+        # so each repeat recompiles (208 per build, 229 per fold) and the JIT
+        # compiles the fresh classes again; at 1,000 a repeated build
+        # compiles 2 and a repeated fold 2. Each entry is one small compiled
+        # class, so the larger cache costs little driver heap.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..pipeline.runner import read_stage
+
 __all__ = ["export_graph"]
 
 _FORMATS = ("jsonl", "csv")
@@ -41,7 +43,7 @@ def export_graph(
         raise ValueError(f"unsupported export format: {fmt!r} (use {_FORMATS})")
     counts: dict[str, int] = {}
     for name in ("nodes", "edges"):
-        df = spark.read.parquet(os.path.join(workdir, name, "data"))
+        df = read_stage(spark, os.path.join(workdir, name, "data"))
         _write(df, os.path.join(out_dir, name), fmt, single_file)
         counts[name] = df.count()
     return counts

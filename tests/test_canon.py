@@ -67,13 +67,27 @@ def test_variant_surfaces_map_to_same_entity(spark, pipeline_out):
     assert frozenset({"globex industries", "globex industries inc"}) in merged
 
 
-def test_connected_components_chain(spark):
+@pytest.mark.parametrize(
+    "cutover, path",
+    [(None, "union-find"), ("0", "min-label-loop")],
+    ids=["union-find", "min-label-loop"],
+)
+def test_connected_components_chain(spark, monkeypatch, cutover, path):
     """A path a-b-c-d must converge to min label 'a' (pathological-chain cap,
-    SURVEY.md §7.4.3)."""
+    SURVEY.md §7.4.3) on both sides of the size cutover: the default takes
+    the driver union-find, CGC_CC_SMALL_CUTOVER=0 the distributed loop."""
+    import codegraphcontext_spark.pipeline.canon as canon_mod
+
+    if cutover is None:
+        monkeypatch.delenv("CGC_CC_SMALL_CUTOVER", raising=False)
+    else:
+        monkeypatch.setenv("CGC_CC_SMALL_CUTOVER", cutover)
+    canon_mod.LAST_CC_PATH = None
     v = spark.createDataFrame([("a",), ("b",), ("c",), ("d",), ("e",)], "surface string")
     e = spark.createDataFrame([("b", "c"), ("c", "d"), ("a", "b")], "a string, b string")
     labels = {r.surface: r.label for r in connected_components(v, e).collect()}
     assert labels == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e"}
+    assert canon_mod.LAST_CC_PATH == path
 
 
 def test_canon_deterministic_across_parallelism(spark, pipeline_out):
