@@ -686,7 +686,10 @@ def cmd_curate(args) -> int:
 def cmd_status(args) -> int:
     """Job-status surface (J5; reference ``server.py:700-772``
     check_job_status/list_jobs): read the per-stage manifests + lineage the
-    runner commits — pure driver-side metadata, no Spark session needed."""
+    runner commits — pure driver-side metadata, no Spark session needed.
+    Each manifest is printed whole: a url-partitioned stage carries its
+    ``n_buckets``, and a stage a fold or delete rewrote also what the swap
+    did (``wall_ms``, ``rewritten_files``, ``linked_files``)."""
     import os
 
     stages = []

@@ -21,6 +21,16 @@ Stage boundaries repartition by xxhash64(url) so partition->content mapping
 is stable across runs and cluster sizes (north rule: per-partition lineage
 rows are meaningful and resume is deterministic).
 
+Bucket contract of the url-partitioned stages: a commit with ``n`` buckets
+writes every row whose url has ``url_bucket(n)`` = b (Spark's own
+``HashPartitioning`` of ``repartition(n, xxhash64(url))``) into the part
+file(s) named ``part-<b>-<uuid>...``, and records ``n`` as ``n_buckets`` in
+the stage manifest. A small delta fold or delete relies on it: it rewrites
+only the part files of the buckets its urls hash to, on the driver, and
+hard-links every other file into the new data directory (``_merge_swap``).
+A manifest without ``n_buckets`` (written by older code) sends the mutation
+down the Spark swap, which re-buckets the whole stage and records it.
+
 Reads of a committed stage go through ``read_stage``: the Spark schema the
 writer stored in a part file's footer (key
 ``org.apache.spark.sql.parquet.row.metadata``) is read on the driver with
@@ -36,10 +46,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
@@ -73,6 +85,44 @@ PIPELINE_LAYOUT_VERSION = 4
 _MINIMAL_COMMITS = frozenset({"docs", "linked", "nodes", "edges", "edge_occurrences"})
 
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# the narrow, url-partitioned stages a delta fold or a delete rewrites
+_NARROW = ("docs", "sentences", "triples", "defs", "links")
+
+# Cutover of the driver-side bucket merge: a fold or delete whose urls number
+# at most _MERGE_MAX_URLS, and whose touched part files (all five narrow
+# stages together) hold at most _MERGE_MAX_BYTES on disk, is merged by
+# pyarrow on the driver; above either, the Spark swap rewrites every part
+# file, which is the only path that holds a TB-scale delta. The url bound
+# also bounds the fetched delta pages (html included) in driver memory.
+_MERGE_MAX_URLS = 1_000
+_MERGE_MAX_BYTES = 128 << 20
+
+# which path the last narrow-stage swap of a run_incremental / run_delete in
+# this process took: "bucket-merge" or "spark-swap" (the tests pin both)
+LAST_FOLD_PATH: str | None = None
+
+
+def _url_key() -> Column:
+    return F.xxhash64("url")
+
+
+def url_bucket(n_buckets: int) -> Column:
+    """The bucket, i.e. the part-file index, that ``_bucketed(df, n)`` sends
+    a row's url to: Spark's ``HashPartitioning`` is ``pmod(murmur3(keys), n)``
+    and ``F.hash`` is that murmur3, seed included."""
+    return F.pmod(F.hash(_url_key()), F.lit(n_buckets))
+
+
+def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Lay a url-keyed frame out as ``n_buckets`` url-hash partitions."""
+    return df.repartition(n_buckets, _url_key())
+
+
+def _part_index(name: str) -> int | None:
+    """The partition index in Spark's ``part-00017-<uuid>`` file naming."""
+    m = re.match(r"part-(\d+)-", name)
+    return int(m.group(1)) if m else None
 
 
 def _part_files(data_dir: str) -> list[str]:
@@ -130,7 +180,7 @@ class PipelineRunner:
         # yet durably recorded in _ingested.json — the fingerprint includes
         # them so manifests are written delta-inclusive, while the on-disk
         # record lands only after EVERY stage committed (crash anywhere in
-        # between -> retry redoes the merge, which _swap_write tolerates;
+        # between -> retry redoes the merge, which both swap paths tolerate;
         # recording first would silently drop the delta on crash).
         # A durable copy lives in _pending.json from the first directory
         # swap until _record_ingested: a crash inside that window otherwise
@@ -286,8 +336,9 @@ class PipelineRunner:
         t0 = time.time()
         d = self._dir(stage)
         out = os.path.join(d, "data")
-        if by_url and "url" in df.columns:
-            df = df.repartition(self.n_partitions, F.xxhash64("url"))
+        by_url = by_url and "url" in df.columns
+        if by_url:
+            df = _bucketed(df, self.n_partitions)
         if stage in self._LAYOUT_SORT:
             df = df.sortWithinPartitions(*self._LAYOUT_SORT[stage])
         df.write.mode("overwrite").parquet(out)
@@ -301,6 +352,8 @@ class PipelineRunner:
             "wall_ms": wall_ms,
             "extractor_version": EXTRACTOR_VERSION,
         }
+        if by_url:
+            manifest["n_buckets"] = self.n_partitions
         self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
         return committed
@@ -317,7 +370,6 @@ class PipelineRunner:
         data_dir = os.path.join(stage_dir, "data")
         parts = _part_files(data_dir)
         import hashlib
-        import re
 
         ids, counts = [], []
         for fname in parts:
@@ -327,10 +379,8 @@ class PipelineRunner:
             # from other committers / compaction don't match the pattern;
             # fall back to a stable filename hash instead of failing the
             # whole stage commit.
-            m = re.match(r"part-(\d+)-", fname)
-            if m:
-                idx = int(m.group(1))
-            else:
+            idx = _part_index(fname)
+            if idx is None:
                 idx = int.from_bytes(
                     hashlib.md5(fname.encode()).digest()[:8], "big"
                 ) >> 1
@@ -515,7 +565,7 @@ class PipelineRunner:
 
     # -- incremental (W3 analog) ----------------------------------------------
     def _heal_swaps(self) -> None:
-        """Repair a crash inside _swap_write's rename window (runs in
+        """Repair a crash inside _swap_in's rename window (runs in
         __init__, before any stage is read). ``data_old`` existing means a
         swap was in flight: if ``data`` is also present the swap completed
         and only the cleanup was lost (drop the backup); if ``data`` is
@@ -534,19 +584,14 @@ class PipelineRunner:
             else:
                 os.rename(bak, data)
 
-    def _swap_write(self, stage: str, df: DataFrame) -> None:
-        """Replace a committed stage's data with df (which may READ the old
-        files — writing the tmp dir materializes it fully first, so the
-        directory swap is safe). The swap itself is two atomic renames with
-        the delete LAST: a crash at any point leaves either the old or the
-        new data recoverable (`_heal_swaps`), never a partially-deleted
-        directory a retry would silently commit as truth. Iceberg
-        equivalent: MERGE INTO / snapshot replace."""
+    def _swap_in(self, stage: str) -> None:
+        """Make a stage's fully assembled ``data_new`` its ``data``: two
+        atomic renames with the delete LAST, so a crash at any point leaves
+        either the old or the new data recoverable (`_heal_swaps`), never a
+        partially-deleted directory a retry would silently commit as
+        truth."""
         d = self._dir(stage)
         tmp = os.path.join(d, "data_new")
-        if "url" in df.columns:
-            df = df.repartition(self.n_partitions, F.xxhash64("url"))
-        df.write.mode("overwrite").parquet(tmp)
         old = os.path.join(d, "data")
         bak = os.path.join(d, "data_old")
         if os.path.isdir(bak):  # leftover backup from a healed crash
@@ -554,31 +599,172 @@ class PipelineRunner:
         os.rename(old, bak)
         os.rename(tmp, old)
         shutil.rmtree(bak)
+        self.spark.catalog.refreshByPath(old)
 
-    def _refresh_manifest(self, stage: str) -> None:
-        """Recompute lineage + manifest for a swapped stage from its files."""
+    def _swap_write(self, stage: str, df: DataFrame, n_buckets: int) -> dict:
+        """Replace a committed stage's data with df laid out as
+        ``n_buckets`` url buckets (df may READ the old files — writing the
+        tmp dir materializes it fully first, so the directory swap is
+        safe). Iceberg equivalent: MERGE INTO / snapshot replace. Returns
+        what the swap did, for the manifest."""
+        global LAST_FOLD_PATH
+        LAST_FOLD_PATH = "spark-swap"
+        t0 = time.time()
+        tmp = os.path.join(self._dir(stage), "data_new")
+        _bucketed(df, n_buckets).write.mode("overwrite").parquet(tmp)
+        n_files = len(_part_files(tmp))
+        self._swap_in(stage)
+        return {
+            "n_buckets": n_buckets, "rewritten_files": n_files,
+            "linked_files": 0, "wall_ms": int((time.time() - t0) * 1000),
+        }
+
+    def _recorded_buckets(self) -> int | None:
+        """The bucket count every narrow stage's manifest records; None when
+        one predates ``n_buckets`` or they differ. Then only the Spark swap,
+        which re-buckets every part file, may rewrite them."""
+        seen = set()
+        for stage in _NARROW:
+            try:
+                with open(os.path.join(self._dir(stage), "manifest.json")) as f:
+                    seen.add(json.load(f).get("n_buckets"))
+            except OSError:
+                return None
+        return seen.pop() if len(seen) == 1 else None
+
+    def _touched_files(self, n_buckets: int, keys) -> dict | None:
+        """Per narrow stage, bucket -> part-file names, for the buckets of
+        ``keys`` (an Arrow table of ``url``, ``_bucket``). None when the
+        driver merge may not run: a stage without part files, a part file
+        whose name carries no bucket index below ``n_buckets``, or touched
+        files holding more than _MERGE_MAX_BYTES in all."""
+        buckets = set(keys.column("_bucket").to_pylist())
+        out, size = {}, 0
+        for stage in _NARROW:
+            data = os.path.join(self._dir(stage), "data")
+            parts = _part_files(data)
+            if not parts:
+                return None
+            files: dict[int, list[str]] = {}
+            for name in parts:
+                b = _part_index(name)
+                if b is None or b >= n_buckets:
+                    return None
+                if b in buckets:
+                    files.setdefault(b, []).append(name)
+                    size += os.stat(os.path.join(data, name)).st_size
+            out[stage] = files
+        return out if size <= _MERGE_MAX_BYTES else None
+
+    def _merge_swap(self, stage: str, n_buckets: int, files: dict, keys, adds) -> dict:
+        """Assemble a stage's ``data_new`` on the driver and swap it in.
+        Each bucket of ``keys`` becomes one new part file: its old rows
+        minus the ``keys`` urls, plus its rows of ``adds`` (an Arrow table
+        with the stage's columns, or None), written by pyarrow with the old
+        files' schema and footer metadata (Spark's schema key included, so
+        ``read_stage`` still starts no job). Every other file is hard-linked.
+        A crashed attempt's half-assembled ``data_new`` is cleared first."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        global LAST_FOLD_PATH
+        LAST_FOLD_PATH = "bucket-merge"
+        t0 = time.time()
+        d = self._dir(stage)
+        data, tmp = os.path.join(d, "data"), os.path.join(d, "data_new")
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        gone = {f for names in files.values() for f in names}
+        skip = gone | {f".{f}.crc" for f in gone}  # Hadoop checksum files
+        parts = _part_files(data)
+        for name in os.listdir(data):
+            if name in skip:
+                continue
+            src, dst = os.path.join(data, name), os.path.join(tmp, name)
+            try:
+                os.link(src, dst)
+            except OSError:  # a filesystem without hard links
+                shutil.copy2(src, dst)
+
+        template = pq.ParquetFile(os.path.join(data, parts[0]))
+        schema = template.schema_arrow
+        schema = schema.with_metadata({
+            k: v for k, v in (schema.metadata or {}).items() if k != b"ARROW:schema"
+        })
+        int96 = any(c.physical_type == "INT96" for c in template.schema)
+        urls, key_bucket = keys.column("url"), keys.column("_bucket")
+        if adds is not None:
+            adds = adds.select(schema.names).cast(schema)
+            add_bucket = pc.take(key_bucket, pc.index_in(adds.column("url"), urls))
+        for b in sorted(set(key_bucket.to_pylist())):
+            old = [
+                pq.read_table(os.path.join(data, f)).cast(schema)
+                for f in files.get(b, [])
+            ]
+            pieces = [t.filter(pc.invert(pc.is_in(t.column("url"), urls))) for t in old]
+            if adds is not None:
+                pieces.append(adds.filter(pc.equal(add_bucket, b)))
+            if not old and not any(t.num_rows for t in pieces):
+                continue  # nothing was and nothing goes in this bucket
+            pq.write_table(
+                pa.concat_tables(pieces),
+                os.path.join(tmp, f"part-{b:05d}-{uuid.uuid4()}-c000.snappy.parquet"),
+                use_deprecated_int96_timestamps=int96,
+            )
+        n_files = len(_part_files(tmp))
+        self._swap_in(stage)
+        return {
+            "n_buckets": n_buckets,
+            "rewritten_files": n_files - (len(parts) - len(gone)),
+            "linked_files": len(parts) - len(gone),
+            "wall_ms": int((time.time() - t0) * 1000),
+        }
+
+    def _refresh_manifest(self, stage: str, swap: dict) -> None:
+        """Recompute lineage + manifest for a swapped stage from its files;
+        ``swap`` is what the swap did (bucket count, part files rewritten
+        and hard-linked, wall ms)."""
         d = self._dir(stage)
         manifest = {
             "stage": stage,
             "input_fingerprint": self._fingerprint(),
             "n_rows": self._write_lineage(d),
-            "wall_ms": 0,
             "extractor_version": EXTRACTOR_VERSION,
             "incremental": True,
+            **swap,
         }
         self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
+
+    def _swap_narrow(self, by_bucket, by_spark) -> dict[str, dict]:
+        """Rewrite the five narrow stages of a mutation: ``by_bucket(n)``
+        tries the driver-side bucket merge on the recorded bucket count n
+        and returns None above its cutover; ``by_spark(n)`` is the Spark
+        swap, which keeps the recorded count or, without one, lays the
+        stages out as ``n_partitions`` buckets."""
+        n = self._recorded_buckets()
+        swaps = by_bucket(n) if n is not None else None
+        return swaps if swaps is not None else by_spark(n or self.n_partitions)
 
     def run_incremental(self, delta_pages_path: str) -> dict[str, DataFrame]:
         """Fold a delta snapshot of pages into a committed workdir.
 
         The reference's watcher re-parses the WHOLE repo on any change
         (reference ``core/watcher.py:84-119``); here the O(corpus) extraction
-        stages are delta-only — only the url-hash partitions whose urls the
-        delta touches are rewritten — and only the cheap global stages
-        (dictionary, linking, canonicalization, materialize) recompute, i.e.
+        stages are delta-only and only the cheap global stages (dictionary,
+        linking, canonicalization, materialize) recompute, i.e.
         O(delta + graph), not O(corpus). Latest-wins on (url, warc_ts), ties
         to the delta.
+
+        What the narrow stages rewrite depends on the delta's size. Up to
+        _MERGE_MAX_URLS winning urls whose buckets' part files hold up to
+        _MERGE_MAX_BYTES, the winning rows are fetched to the driver once
+        and only the part files of the url-hash buckets they touch are
+        rewritten (pyarrow); every other part file is hard-linked. Above
+        either cutover, or on a workdir whose manifests predate
+        ``n_buckets``, a Spark swap rewrites every part file of all five
+        stages. ``LAST_FOLD_PATH`` names the path taken.
 
         Replay semantics (positional mutation signatures): re-running the
         MOST RECENTLY recorded mutation with nothing after it is a no-op
@@ -598,14 +784,13 @@ class PipelineRunner:
             # guaranteed no-op, resume the committed build. If other
             # mutations landed since, the delta is re-applied instead.
             return self.run()
-        narrow = ("docs", "sentences", "triples", "defs", "links")
         if not retrying:
             # fresh mutation: narrow manifests must match the ingested-only
             # fingerprint. On a crash retry they are legitimately mixed
             # (some already delta-inclusive) and the swaps below are
             # idempotent, so the precondition is skipped.
             self._pending_sigs = []
-            if not all(self._committed(s) for s in narrow):
+            if not all(self._committed(s) for s in _NARROW):
                 raise RuntimeError(
                     "run_incremental() needs a base build with "
                     "checkpoint='all' (per-stage snapshots to merge into); "
@@ -635,8 +820,8 @@ class PipelineRunner:
         # the base row is absent, strictly older, or equal-warc_ts with a
         # snap_md5 that does not outrank the delta's (on exact equality the
         # content is identical, so keeping the delta row changes nothing).
-        # localCheckpoint BEFORE any directory swap — these plans read the
-        # committed docs files, which the swaps below delete.
+        # Both paths materialize this BEFORE any directory swap — it reads
+        # the committed docs files, which the swaps delete.
         old_docs = self._load("docs")
         base_key = old_docs.select(
             "url",
@@ -654,35 +839,72 @@ class PipelineRunner:
                 )
             )
             .drop("_base_ts", "_base_md5")
-            .localCheckpoint(eager=True)
         )
-        win_urls = delta_win.select("url").distinct().localCheckpoint(eager=True)
 
-        # delta-only narrow stages over the winning delta pages
-        delta_pages_win = delta_latest.join(win_urls, on="url", how="left_semi")
-        delta_sent = segment_stage(delta_win)
-        pats = patterns_df(spark)
-        new_narrow = {
-            "docs": delta_win,
-            "sentences": delta_sent,
-            "triples": triples_stage(delta_sent, pats),
-            "defs": defs_stage(delta_sent),
-            "links": links_stage(delta_pages_win.select("url", "html")),
-        }
-        for stage, delta_df in new_narrow.items():
-            old = self._load(stage)
-            merged = old.join(win_urls, on="url", how="left_anti").unionByName(
-                delta_df.select(*old.columns)
+        def by_bucket(n: int) -> dict | None:
+            # one bounded fetch of the winning rows, their html (for links)
+            # and bucket; the other stages' rows derive from it on the driver
+            wins = (
+                delta_win.join(delta_latest.select("url", "html"), on="url")
+                .withColumn("_bucket", url_bucket(n))
+                .limit(_MERGE_MAX_URLS + 1)
+                .toArrow()
             )
-            self._swap_write(stage, merged)
-            self.spark.catalog.refreshByPath(os.path.join(self._dir(stage), "data"))
+            if wins.num_rows > _MERGE_MAX_URLS:
+                return None
+            keys = wins.select(["url", "_bucket"])
+            touched = self._touched_files(n, keys)
+            if touched is None:
+                return None
+            adds = {"docs": wins}
+            if wins.num_rows:
+                sent = segment_stage(spark.createDataFrame(
+                    wins.select(["url", "lang", "text_extracted"])
+                )).toArrow()
+                sent_df = spark.createDataFrame(sent)
+                adds.update(
+                    sentences=sent,
+                    triples=triples_stage(sent_df, patterns_df(spark)).toArrow(),
+                    defs=defs_stage(sent_df).toArrow(),
+                    links=links_stage(
+                        spark.createDataFrame(wins.select(["url", "html"]))
+                    ).toArrow(),
+                )
+            return {
+                s: self._merge_swap(s, n, touched[s], keys, adds.get(s))
+                for s in _NARROW
+            }
+
+        def by_spark(n: int) -> dict:
+            win = delta_win.localCheckpoint(eager=True)
+            win_urls = win.select("url").distinct().localCheckpoint(eager=True)
+            # delta-only narrow stages over the winning delta pages
+            delta_pages_win = delta_latest.join(win_urls, on="url", how="left_semi")
+            delta_sent = segment_stage(win)
+            new_narrow = {
+                "docs": win,
+                "sentences": delta_sent,
+                "triples": triples_stage(delta_sent, patterns_df(spark)),
+                "defs": defs_stage(delta_sent),
+                "links": links_stage(delta_pages_win.select("url", "html")),
+            }
+            swaps = {}
+            for stage, delta_df in new_narrow.items():
+                old = self._load(stage)
+                merged = old.join(win_urls, on="url", how="left_anti").unionByName(
+                    delta_df.select(*old.columns)
+                )
+                swaps[stage] = self._swap_write(stage, merged, n)
+            return swaps
+
+        swaps = self._swap_narrow(by_bucket, by_spark)
 
         # fingerprint advances (in memory) to include this delta; manifests
         # are rewritten delta-inclusive. The durable _ingested.json record is
         # the LAST step below; _pending.json covers the window in between.
         self._pending_sigs = [delta_sig]
-        for stage in new_narrow:
-            self._refresh_manifest(stage)
+        for stage, swap in swaps.items():
+            self._refresh_manifest(stage, swap)
 
         # global stages recompute from the merged narrow outputs; only after
         # every stage (narrow + global) is committed with the delta-inclusive
@@ -717,13 +939,18 @@ class PipelineRunner:
         """Delete every page whose url starts with ``url_prefix`` from a
         committed build (S6 whole-repo delete / S7 single-file delete +
         empty-dir GC, reference ``graph_builder.py:407-441`` DETACH DELETE):
-        narrow stages drop the matching urls partition-locally (filter +
-        swap — on Iceberg this is ``DELETE FROM ... WHERE url LIKE ...`` as
-        one snapshot commit), then the global stages recompute, which
-        performs the GC for free: entities defined only on deleted pages and
-        domains linked only from them simply don't re-materialize (the
-        reference needs an explicit childless-Directory cleanup query; here
-        the graph is rebuilt from the surviving facts).
+        narrow stages drop the matching urls (on Iceberg this is
+        ``DELETE FROM ... WHERE url LIKE ...`` as one snapshot commit), then
+        the global stages recompute, which performs the GC for free:
+        entities defined only on deleted pages and domains linked only from
+        them simply don't re-materialize (the reference needs an explicit
+        childless-Directory cleanup query; here the graph is rebuilt from
+        the surviving facts).
+
+        Up to the same cutovers as run_incremental, one bounded fetch of the
+        matching docs urls and their buckets picks the part files to rewrite
+        on the driver, and every other part file is hard-linked; above them
+        a Spark filter + swap rewrites every part file.
 
         Recorded in the fingerprint chain like a delta, so resume and
         idempotent re-delete work identically to run_incremental.
@@ -739,26 +966,47 @@ class PipelineRunner:
             # after it: guaranteed no-op. An interleaved incremental may
             # have re-added matching urls, so any other ordering re-applies.
             return self.run()
-        narrow = ("docs", "sentences", "triples", "defs", "links")
         if not retrying:
             self._pending_sigs = []
-            if not all(self._committed(s) for s in narrow):
+            if not all(self._committed(s) for s in _NARROW):
                 raise RuntimeError(
                     "run_delete() needs a base build with checkpoint='all' "
                     "(per-stage snapshots to rewrite); run() must commit first"
                 )
         del_sig = self._begin_mutation(del_base, "delete", url_prefix)
         self._pending_sigs = []
-        for stage in narrow:
-            old = self._load(stage)
-            kept = old.where(~F.col("url").startswith(url_prefix))
-            self._swap_write(stage, kept)
-            self.spark.catalog.refreshByPath(
-                os.path.join(self._dir(stage), "data")
+        matching = F.col("url").startswith(url_prefix)
+        # docs is swapped LAST: every narrow stage's urls are docs urls, so
+        # a retry after a crash between two swaps still finds every
+        # matching url in docs, where the bucket merge takes its keys
+        order = (*_NARROW[1:], "docs")
+
+        def by_bucket(n: int) -> dict | None:
+            keys = (
+                self._load("docs").where(matching)
+                .select("url", url_bucket(n).alias("_bucket"))
+                .limit(_MERGE_MAX_URLS + 1)
+                .toArrow()
             )
+            if keys.num_rows > _MERGE_MAX_URLS:
+                return None
+            touched = self._touched_files(n, keys)
+            if touched is None:
+                return None
+            return {
+                s: self._merge_swap(s, n, touched[s], keys, None) for s in order
+            }
+
+        def by_spark(n: int) -> dict:
+            return {
+                s: self._swap_write(s, self._load(s).where(~matching), n)
+                for s in order
+            }
+
+        swaps = self._swap_narrow(by_bucket, by_spark)
         self._pending_sigs = [del_sig]
-        for stage in narrow:
-            self._refresh_manifest(stage)
+        for stage, swap in swaps.items():
+            self._refresh_manifest(stage, swap)
         out = self._recompute_globals()
         self._finish_mutation(del_sig)
         return out

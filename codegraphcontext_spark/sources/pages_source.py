@@ -25,15 +25,26 @@ Formats:
   cannot carry raw bytes), decoded JVM-side with ``unbase64`` — no Python
   in the decode path.
 
-Readers return the canonical schema ``(url string, warc_ts timestamp,
-html binary, text string, lang string)`` regardless of source; writers exist
-so tests and fixtures can round-trip a corpus through every format.
+Readers return the canonical columns ``(url string, warc_ts, html binary,
+text string, lang string)`` regardless of source; writers exist so tests and
+fixtures can round-trip a corpus through every format. ``warc_ts`` keeps the
+type the source stores: ``timestamp`` from warc, jsonl and csv (parsed in the
+session time zone), and from parquet/orc files whose timestamps are
+UTC-adjusted; ``timestamp_ntz`` from parquet written with local-time
+timestamps (``isAdjustedToUTC=false``, pyarrow's default for naive
+datetimes, which is how the generated corpora are written). The stages
+downstream carry that type through unchanged.
+
+A parquet corpus is opened with the schema Spark's own inference would
+give it, but read on the driver from the first data file's footer
+(``_footer_schema``), so opening it starts no schema-inference job.
 """
 
 from __future__ import annotations
 
 import base64
 import glob
+import json
 import os
 from typing import Iterator
 
@@ -108,7 +119,9 @@ def read_pages(spark: SparkSession, path: str, fmt: str | None = None) -> DataFr
     """Read a pages corpus in any supported format as the canonical schema."""
     fmt = fmt or infer_format(path)
     if fmt == "parquet":
-        return spark.read.parquet(path).select(*_COLS)
+        schema = _footer_schema(spark, path)
+        reader = spark.read.schema(schema) if schema is not None else spark.read
+        return reader.parquet(path).select(*_COLS)
     if fmt == "orc":
         # the other columnar lake format Spark reads natively; same
         # pushdown/pruning contract as parquet, binary column travels as-is
@@ -125,6 +138,50 @@ def read_pages(spark: SparkSession, path: str, fmt: str | None = None) -> DataFr
         )
         return _from_text_rows(raw)
     raise ValueError(f"unsupported pages format: {fmt!r}")
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
+    first data file's footer with Spark's own footer-to-schema conversion
+    on the driver (inference reads the same footer, but in a Spark job).
+    None -- plain inference then -- unless ``path`` is a local file or a
+    flat local directory of data files without summary files, and schema
+    merging is off."""
+    from py4j.protocol import Py4JError
+
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true":
+        return None
+    if os.path.isfile(path):
+        first = path
+    elif os.path.isdir(path):
+        names = sorted(os.listdir(path))
+        if any(
+            os.path.isdir(os.path.join(path, n)) or n in ("_metadata", "_common_metadata")
+            for n in names
+        ):
+            return None  # partition directories or summary files: infer
+        data = [n for n in names if not n.startswith(("_", "."))]
+        if not data:
+            return None
+        first = os.path.join(path, data[0])
+    else:
+        return None
+    jvm = spark._jvm
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    try:
+        hpath = jvm.org.apache.hadoop.fs.Path(os.path.abspath(first))
+        footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            spark._jsc.hadoopConfiguration(), hpath
+        )
+        converter = parquet.ParquetToSparkSchemaConverter(
+            spark._jsparkSession.sessionState().conf()
+        )
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(hpath, footer), converter
+        )
+    except Py4JError:
+        return None
+    return StructType.fromJson(json.loads(schema.json()))
 
 
 def _from_text_rows(raw: DataFrame) -> DataFrame:

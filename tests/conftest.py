@@ -40,3 +40,16 @@ def pipeline_out(spark, corpus_dir, tmp_path_factory):
 
 def golden(spark, corpus_dir: str, name: str):
     return spark.read.parquet(os.path.join(corpus_dir, f"golden_{name}.parquet"))
+
+
+@pytest.fixture(params=["bucket-merge", "spark-swap"])
+def fold_path(request, monkeypatch):
+    """The narrow-stage path a fold or delete takes: the driver-side bucket
+    merge at the default cutovers, or the Spark swap with both cutovers
+    forced to 0. Tests assert ``runner.LAST_FOLD_PATH`` against it."""
+    from codegraphcontext_spark.pipeline import runner
+
+    if request.param == "spark-swap":
+        monkeypatch.setattr(runner, "_MERGE_MAX_URLS", 0)
+        monkeypatch.setattr(runner, "_MERGE_MAX_BYTES", 0)
+    return request.param

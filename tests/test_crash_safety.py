@@ -1,5 +1,6 @@
 """Crash-window safety of the mutation machinery: the atomic stage swap
-(`_swap_write` + `_heal_swaps`), atomic JSON record writes, and the accurate
+(`_swap_in` + `_heal_swaps`, behind both the Spark swap and the driver-side
+bucket merge), atomic JSON record writes, and the accurate
 cross-mutation pending error. Analog of the reference's job-recovery
 expectations (``graph_builder.py`` resume semantics), pinned here because a
 100 TB mutation that crashes mid-swap must never silently lose rows."""
@@ -39,7 +40,7 @@ def _clone(base_build, tmp_path_factory, name):
 def test_heal_restores_backup_when_data_missing(
     spark, base_build, tmp_path_factory
 ):
-    """Crash between _swap_write's two renames (old moved aside, new not yet
+    """Crash between _swap_in's two renames (old moved aside, new not yet
     in place): constructing a runner must restore the backup so the retry
     recomputes from intact data instead of failing on a missing stage."""
     pages, wd = _clone(base_build, tmp_path_factory, "heal_restore")
@@ -214,13 +215,13 @@ def test_delete_survives_crash_in_refresh(
     assert _sets(retried) == _sets(clean)
 
 
-# A swap of this stage is where the _swap_write crashes below hit: by then
+# A swap of this stage is where the _swap_in crashes below hit: by then
 # the docs and sentences swaps of the same fold have already landed.
 _SWAP_STAGE = "triples"
 
 
 def _crash_between_swap_renames(monkeypatch):
-    """_swap_write dies after moving the old data aside and before renaming
+    """_swap_in dies after moving the old data aside and before renaming
     the new data in: the stage has data_old and data_new but no data."""
     real = os.rename
     new = os.path.join(_SWAP_STAGE, "data_new")
@@ -235,7 +236,7 @@ def _crash_between_swap_renames(monkeypatch):
 
 
 def _crash_after_swap_renames(monkeypatch):
-    """_swap_write dies after both renames, before the backup is deleted:
+    """_swap_in dies after both renames, before the backup is deleted:
     the stage has the new data and a stale data_old."""
     real = shutil.rmtree
     bak = os.path.join(_SWAP_STAGE, "data_old")
@@ -297,6 +298,8 @@ def clean_fold(spark, base_build, fold_delta, tmp_path_factory):
         PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
     )
     assert any(n[0] == _NEW_URL for n in nodes), "the delta did not land"
+    # the crashes below hit the default path of a delta this small
+    assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
     return nodes, edges
 
 
@@ -319,3 +322,90 @@ def test_incremental_survives_crash_at_write_boundary(
     retried = PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
     assert not os.path.exists(os.path.join(wd, "_pending.json"))
     assert _sets(retried) == clean_fold
+
+
+@pytest.mark.parametrize("fold_path", ["spark-swap"], indirect=True)
+@pytest.mark.parametrize(
+    "inject", [_crash_between_swap_renames, _crash_after_swap_renames]
+)
+def test_incremental_survives_crash_on_spark_swap(
+    spark, base_build, fold_delta, clean_fold, tmp_path_factory, monkeypatch,
+    inject, fold_path,
+):
+    """The same swap-window crashes on the Spark swap path (both cutovers
+    forced to 0): the retried fold equals an uninterrupted one."""
+    pages, wd = _clone(base_build, tmp_path_factory, "crash_fold_spark")
+    inject(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    assert runner_mod.LAST_FOLD_PATH == fold_path
+    _assert_readable(spark, pages, wd)
+    retried = PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    assert _sets(retried) == clean_fold
+
+
+def _crash_mid_bucket_merge(monkeypatch):
+    """The bucket merge dies while assembling the swap stage's data_new:
+    the untouched part files are already linked in and the first rewritten
+    bucket file is torn."""
+    real = pq.write_table
+    target = os.path.join(_SWAP_STAGE, "data_new")
+
+    def write_table(table, where, *a, **kw):
+        if os.path.dirname(str(where)).endswith(target):
+            monkeypatch.setattr(pq, "write_table", real)
+            with open(where, "wb") as f:
+                f.write(b"PAR1 torn")
+            raise OSError("injected crash mid bucket merge")
+        return real(table, where, *a, **kw)
+
+    monkeypatch.setattr(pq, "write_table", write_table)
+
+
+def test_incremental_clears_half_assembled_merge(
+    spark, base_build, fold_delta, clean_fold, tmp_path_factory, monkeypatch
+):
+    """A crash while the bucket merge assembles a stage's data_new leaves
+    hard links and a torn part file behind; the retry clears them, and its
+    result equals an uninterrupted fold."""
+    pages, wd = _clone(base_build, tmp_path_factory, "crash_merge")
+    _crash_mid_bucket_merge(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
+    left = os.listdir(os.path.join(wd, _SWAP_STAGE, "data_new"))
+    assert sum(n.endswith(".parquet") for n in left) >= 2  # links + torn file
+    _assert_readable(spark, pages, wd)
+    retried = PipelineRunner(spark, pages, wd).run_incremental(fold_delta)
+    assert not os.path.exists(os.path.join(wd, _SWAP_STAGE, "data_new"))
+    assert _sets(retried) == clean_fold
+
+
+@pytest.fixture(scope="module")
+def clean_delete(spark, base_build, tmp_path_factory):
+    """The node and edge sets of an uninterrupted delete of PREFIX."""
+    pages, wd = _clone(base_build, tmp_path_factory, "clean_delete")
+    return _sets(PipelineRunner(spark, pages, wd).run_delete(PREFIX))
+
+
+@pytest.mark.parametrize(
+    "inject",
+    [_crash_between_swap_renames, _crash_after_swap_renames, _crash_ingested_write],
+)
+def test_delete_survives_crash_at_write_boundary(
+    spark, base_build, clean_delete, tmp_path_factory, monkeypatch, inject,
+    fold_path,
+):
+    """A crash inside a delete's stage swap, or while the delete is being
+    marked done, must leave the workdir readable; the retried delete equals
+    an uninterrupted one, on both narrow-stage paths. The swap crashes hit
+    the triples swap, after other stages' swaps landed."""
+    pages, wd = _clone(base_build, tmp_path_factory, "crash_delete")
+    inject(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run_delete(PREFIX)
+    assert runner_mod.LAST_FOLD_PATH == fold_path
+    _assert_readable(spark, pages, wd)
+    retried = PipelineRunner(spark, pages, wd).run_delete(PREFIX)
+    assert not os.path.exists(os.path.join(wd, "_pending.json"))
+    assert _sets(retried) == clean_delete

@@ -11,6 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import PipelineRunner
 
 PREFIX = "https://site1"  # matches site1, site10..site19, site100 — ~10% of pages
@@ -43,17 +44,24 @@ def _sets(out):
     return nodes, edges
 
 
-def test_delete_equals_filtered_build(spark, corpus_dir, filtered_corpus, tmp_path_factory):
-    wd_del = str(tmp_path_factory.mktemp("wd_del"))
+@pytest.fixture(scope="module")
+def filtered_sets(spark, filtered_corpus, tmp_path_factory):
+    """Node and edge sets of a fresh build without the deleted pages."""
     wd_ref = str(tmp_path_factory.mktemp("wd_ref"))
+    return _sets(PipelineRunner(spark, filtered_corpus, wd_ref).run())
+
+
+def test_delete_equals_filtered_build(
+    spark, corpus_dir, filtered_sets, tmp_path_factory, fold_path
+):
+    wd_del = str(tmp_path_factory.mktemp("wd_del"))
 
     runner = PipelineRunner(spark, os.path.join(corpus_dir, "pages.parquet"), wd_del)
     runner.run()
     deleted = runner.run_delete(PREFIX)
+    assert runner_mod.LAST_FOLD_PATH == fold_path
 
-    ref = PipelineRunner(spark, filtered_corpus, wd_ref).run()
-
-    assert _sets(deleted) == _sets(ref)
+    assert _sets(deleted) == filtered_sets
     # no Page node under the prefix survives
     assert (
         deleted["nodes"]

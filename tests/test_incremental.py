@@ -7,13 +7,24 @@ The reference's watcher re-parses the whole repo on any change (reference
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from codegraphcontext_spark.pipeline.runner import PipelineRunner
+import codegraphcontext_spark.pipeline.runner as runner_mod
+from codegraphcontext_spark import cli
+from codegraphcontext_spark.pipeline.runner import (
+    _NARROW,
+    PipelineRunner,
+    _bucketed,
+    _part_files,
+    _part_index,
+    read_stage,
+    url_bucket,
+)
 
 
 @pytest.fixture(scope="module")
@@ -49,21 +60,28 @@ def _node_set(nodes):
     }
 
 
-def test_incremental_equals_full(spark, corpus_dir, split_corpus, tmp_path_factory):
-    base_p, delta_p = split_corpus
+@pytest.fixture(scope="module")
+def full_sets(spark, corpus_dir, tmp_path_factory):
+    """Edge and node sets of a full build over base + delta."""
     wd_full = str(tmp_path_factory.mktemp("wd_full"))
-    wd_incr = str(tmp_path_factory.mktemp("wd_incr"))
-
     full = PipelineRunner(
         spark, os.path.join(corpus_dir, "pages.parquet"), wd_full
     ).run()
+    return _edge_set(full["edges"]), _node_set(full["nodes"])
+
+
+def test_incremental_equals_full(
+    spark, split_corpus, full_sets, tmp_path_factory, fold_path
+):
+    base_p, delta_p = split_corpus
+    wd_incr = str(tmp_path_factory.mktemp("wd_incr"))
 
     incr_runner = PipelineRunner(spark, base_p, wd_incr)
     incr_runner.run()
     incr = incr_runner.run_incremental(delta_p)
+    assert runner_mod.LAST_FOLD_PATH == fold_path
 
-    assert _edge_set(incr["edges"]) == _edge_set(full["edges"])
-    assert _node_set(incr["nodes"]) == _node_set(full["nodes"])
+    assert (_edge_set(incr["edges"]), _node_set(incr["nodes"])) == full_sets
 
 
 def test_incremental_idempotent(spark, split_corpus, tmp_path_factory):
@@ -87,7 +105,9 @@ def test_incremental_requires_base(spark, split_corpus, tmp_path_factory):
         PipelineRunner(spark, base_p, wd).run_incremental(delta_p)
 
 
-def test_incremental_newer_snapshot_wins(spark, corpus_dir, tmp_path_factory):
+def test_incremental_newer_snapshot_wins(
+    spark, corpus_dir, tmp_path_factory, fold_path
+):
     """A delta carrying a NEWER snapshot of an existing url replaces its doc."""
     import pyarrow as pa
     from datetime import datetime
@@ -113,6 +133,169 @@ def test_incremental_newer_snapshot_wins(spark, corpus_dir, tmp_path_factory):
     pq.write_table(delta, delta_p)
 
     res = runner.run_incremental(delta_p)
+    assert runner_mod.LAST_FOLD_PATH == fold_path
     txt = res["docs"].where(F.col("url") == victim).first().text_extracted
     assert "Updated Page Corp" in txt
     assert res["docs"].where(F.col("url") == victim).count() == 1
+
+
+_SWAP_KEYS = ("n_buckets", "rewritten_files", "linked_files", "wall_ms")
+
+
+def _manifest(wd, stage):
+    with open(os.path.join(wd, stage, "manifest.json")) as f:
+        return json.load(f)
+
+
+def _inodes(wd, stage):
+    data = os.path.join(wd, stage, "data")
+    return {n: os.stat(os.path.join(data, n)).st_ino for n in _part_files(data)}
+
+
+def _assert_bucketed(spark, wd, n_buckets):
+    """Every part file of every narrow stage holds only urls whose bucket
+    is the index in its name."""
+    for stage in _NARROW:
+        data = os.path.join(wd, stage, "data")
+        rows = []
+        for name in _part_files(data):
+            idx = _part_index(name)
+            assert idx is not None and idx < n_buckets, name
+            urls = pq.read_table(os.path.join(data, name), columns=["url"])
+            rows += [(idx, u) for u in urls.column("url").to_pylist()]
+        misplaced = (
+            spark.createDataFrame(rows, "idx int, url string")
+            .where(url_bucket(n_buckets) != F.col("idx"))
+            .count()
+        )
+        assert misplaced == 0, stage
+
+
+def _url_buckets(spark, pages, n_buckets):
+    return {
+        r[0]
+        for r in spark.read.parquet(pages)
+        .select(url_bucket(n_buckets))
+        .distinct()
+        .collect()
+    }
+
+
+def test_bucket_layout_and_hard_links(
+    spark, split_corpus, tmp_path_factory, capsys
+):
+    """A build lays each narrow stage out so a part file's index is its
+    urls' bucket and records the bucket count; a bucket-merge fold keeps
+    that layout, hard-links the part files of untouched buckets (same
+    inode) and writes the touched buckets' files anew, and its manifests
+    say so."""
+    base_p, split_delta = split_corpus
+    # three new urls: fewer buckets than the layout has
+    t = pq.read_table(split_delta)
+    few = set(sorted(set(t.column("url").to_pylist()))[:3])
+    delta_p = str(tmp_path_factory.mktemp("layout") / "delta.parquet")
+    pq.write_table(t.filter([u in few for u in t.column("url").to_pylist()]), delta_p)
+    wd = str(tmp_path_factory.mktemp("wd_layout"))
+    runner = PipelineRunner(spark, base_p, wd)
+    runner.run()
+    n = runner.n_partitions
+    assert all(_manifest(wd, s)["n_buckets"] == n for s in _NARROW)
+    _assert_bucketed(spark, wd, n)
+    before = {s: _inodes(wd, s) for s in _NARROW}
+
+    runner.run_incremental(delta_p)
+    assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
+    _assert_bucketed(spark, wd, n)
+    # every delta url is new to the base, so every delta url wins
+    touched = _url_buckets(spark, delta_p, n)
+    assert 0 < len(touched) < n
+    for stage in _NARROW:
+        after = _inodes(wd, stage)
+        kept = {f: i for f, i in before[stage].items() if _part_index(f) not in touched}
+        assert {f: after.get(f) for f in kept} == kept, stage
+        new = set(after) - set(before[stage])
+        assert new and {_part_index(f) for f in new} <= touched, stage
+        man = _manifest(wd, stage)
+        assert man["n_buckets"] == n
+        assert man["linked_files"] == len(kept)
+        assert man["rewritten_files"] == len(new)
+        assert man["wall_ms"] >= 0
+    # cli status prints what each swap did
+    assert cli.main(["status", "--workdir", wd]) == 0
+    shown = {m["stage"]: m for m in json.loads(capsys.readouterr().out)["stages"]}
+    for stage in _NARROW:
+        assert {k: shown[stage][k] for k in _SWAP_KEYS} == {
+            k: _manifest(wd, stage)[k] for k in _SWAP_KEYS
+        }
+
+
+def test_legacy_workdir_takes_spark_swap_then_bucket_merge(
+    spark, corpus_dir, split_corpus, full_sets, tmp_path_factory
+):
+    """A workdir whose manifests predate n_buckets, folded by a runner with
+    another partition count, takes the Spark swap, which re-buckets the
+    narrow stages and records n_buckets. The next fold, by a runner with a
+    third partition count, takes the bucket merge on the recorded count,
+    and the result still equals a full build."""
+    base_p, delta_p = split_corpus
+    d = tmp_path_factory.mktemp("legacy")
+    t = pq.read_table(delta_p)
+    urls = sorted(set(t.column("url").to_pylist()))
+    first = [u in set(urls[: len(urls) // 2]) for u in t.column("url").to_pylist()]
+    halves = []
+    for i, mask in enumerate((first, [not m for m in first])):
+        halves.append(str(d / f"delta{i}.parquet"))
+        pq.write_table(t.filter(mask), halves[-1])
+
+    wd = str(tmp_path_factory.mktemp("wd_legacy"))
+    PipelineRunner(spark, base_p, wd, n_partitions=8).run()
+    for stage in _NARROW:
+        man = _manifest(wd, stage)
+        del man["n_buckets"]
+        PipelineRunner._write_json_atomic(
+            os.path.join(wd, stage, "manifest.json"), man
+        )
+
+    PipelineRunner(spark, base_p, wd, n_partitions=5).run_incremental(halves[0])
+    assert runner_mod.LAST_FOLD_PATH == "spark-swap"
+    assert all(_manifest(wd, s)["n_buckets"] == 5 for s in _NARROW)
+    _assert_bucketed(spark, wd, 5)
+
+    out = PipelineRunner(spark, base_p, wd, n_partitions=3).run_incremental(
+        halves[1]
+    )
+    assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
+    assert all(_manifest(wd, s)["n_buckets"] == 5 for s in _NARROW)
+    _assert_bucketed(spark, wd, 5)
+    assert (_edge_set(out["edges"]), _node_set(out["nodes"])) == full_sets
+
+
+def test_bucket_merge_keeps_int96_timestamps(spark, tmp_path):
+    """A stage Spark wrote with a session-zone timestamp column (INT96 in
+    parquet, the layout a jsonl/csv/warc-built workdir has) is merged with
+    the same physical type: ``read_stage`` returns the old rows minus the
+    replaced url plus the new row, under an unchanged schema."""
+    from datetime import datetime
+
+    schema = "url string, warc_ts timestamp, n int"
+    rows = [(f"https://t.example/{i}", datetime(2020, 1, 1, i % 24), i) for i in range(40)]
+    old = spark.createDataFrame(rows, schema)
+    wd = str(tmp_path / "wd")
+    data = os.path.join(wd, "docs", "data")
+    _bucketed(old, 4).write.parquet(data)
+    new = spark.createDataFrame([(rows[0][0], datetime(2031, 5, 6, 7, 8, 9), -1)], schema)
+    keys = new.select("url", url_bucket(4).alias("_bucket")).toArrow()
+    b = keys.column("_bucket")[0].as_py()
+    files = {b: [f for f in _part_files(data) if _part_index(f) == b]}
+
+    swap = PipelineRunner(spark, wd, wd)._merge_swap(
+        "docs", 4, files, keys, new.toArrow()
+    )
+    assert swap["rewritten_files"] == 1 and swap["linked_files"] == 3
+    rewritten = [f for f in _part_files(data) if _part_index(f) == b]
+    col = pq.ParquetFile(os.path.join(data, rewritten[0])).schema.column(1)
+    assert col.physical_type == "INT96"
+    got = read_stage(spark, data)
+    expect = old.where(F.col("url") != rows[0][0]).unionByName(new)
+    assert got.schema == old.schema
+    assert got.exceptAll(expect).count() == 0 and expect.exceptAll(got).count() == 0

@@ -174,3 +174,50 @@ def test_warc_oversized_record_skipped_not_fatal(spark, tmp_path):
     urls = sorted(r.url for r in df.collect())
     assert urls == ["https://ok.example/1", "https://ok.example/4"]
     assert df.warc_skipped_records.value == 2
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted by job group."""
+    sc = spark.sparkContext
+    group = f"test-sources-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_read_starts_no_inference_job(spark, corpus_dir, tmp_path):
+    """read_pages opens a parquet corpus with the schema read from its first
+    data file's footer: no Spark job, and the same schema and rows as
+    ``spark.read.parquet(p).select(...)`` -- for the single-file test
+    corpus (local-time timestamps, read as timestamp_ntz), a directory of
+    ``part-00000.parquet`` shards as the benchmark writes them, and shards
+    with UTC-adjusted timestamps (read as timestamp)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    single = os.path.join(corpus_dir, "pages.parquet")
+    t = pq.read_table(single)
+    ts = t.schema.get_field_index("warc_ts")
+    utc = t.set_column(
+        ts, "warc_ts", t.column("warc_ts").cast(pa.timestamp("us", tz="UTC"))
+    )
+    paths = [single]
+    for name, table in (("shards", t), ("shards_utc", utc)):
+        d = tmp_path / name
+        d.mkdir()
+        half = table.num_rows // 2
+        pq.write_table(table.slice(0, half), d / "part-00000.parquet")
+        pq.write_table(table.slice(half), d / "part-00001.parquet")
+        paths.append(str(d))
+    types = []
+    for path in paths:
+        df, jobs = _jobs(spark, lambda: read_pages(spark, path))
+        assert jobs == 0, path
+        ref = spark.read.parquet(path).select(*df.columns)
+        assert df.schema == ref.schema, path
+        assert df.exceptAll(ref).count() == 0 and ref.exceptAll(df).count() == 0
+        types.append(df.schema["warc_ts"].dataType.simpleString())
+    assert types == ["timestamp_ntz", "timestamp_ntz", "timestamp"]
