@@ -689,7 +689,12 @@ def cmd_status(args) -> int:
     runner commits — pure driver-side metadata, no Spark session needed.
     Each manifest is printed whole: a url-partitioned stage carries its
     ``n_buckets``, and a stage a fold or delete rewrote also what the swap
-    did (``wall_ms``, ``rewritten_files``, ``linked_files``)."""
+    did (``wall_ms``, ``rewritten_files``, ``linked_files``). A global
+    stage (canon, linked, nodes, edges, edge_occurrences) a fold or delete
+    rebuilt records which tail did it, ``globals``: ``"scoped"`` (canon
+    kept, the delta's mentions relinked; linked and edge_occurrences then
+    also carry ``rewritten_files`` / ``linked_files``) or
+    ``"recomputed"``."""
     import os
 
     stages = []

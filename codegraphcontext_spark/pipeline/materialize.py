@@ -48,7 +48,13 @@ def materialize_graph(
     links: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (nodes, edges, edge_occurrences)."""
-    # ---- nodes ----
+    occ = occurrences(triples, linked, canon, links)
+    return graph_nodes(docs, canon, links), edges_from_occurrences(occ), occ
+
+
+def graph_nodes(docs: DataFrame, canon: DataFrame, links: DataFrame) -> DataFrame:
+    """The node table: one Page per doc, one Entity per canon cluster, one
+    Domain per linked domain, one Type per entity type."""
     page_nodes = docs.select(
         F.col("url").alias("node_id"),
         F.lit("Page").alias("node_type"),
@@ -81,13 +87,19 @@ def materialize_graph(
         F.col("etype").alias("etype"),
         F.lit(None).cast("string").alias("lang"),
     )
-    nodes = (
+    return (
         page_nodes.unionByName(entity_nodes)
         .unionByName(domain_nodes)
         .unionByName(type_nodes)
     )
 
-    # ---- edges ----
+
+def occurrences(
+    triples: DataFrame, linked: DataFrame, canon: DataFrame, links: DataFrame
+) -> DataFrame:
+    """The edge_occurrences table: one row per assertion site. Every row
+    derives from one url's own triples, linked mentions and links, plus
+    canon, so a url's rows change only when those do."""
     resolved = linked.where(F.col("entity_id").isNotNull())
     mentions_e = resolved.select(
         F.col("url").alias("subj_id"),
@@ -141,12 +153,11 @@ def materialize_graph(
             "sent_id",
         )
     )
-    all_e = (
+    return (
         mentions_e.unionByName(links_e)
         .unionByName(open_e)
         .unionByName(has_type_e)
     )
-    return nodes, edges_from_occurrences(all_e), all_e
 
 
 def edges_from_occurrences(occurrences: DataFrame) -> DataFrame:

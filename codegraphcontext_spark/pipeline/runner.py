@@ -31,6 +31,15 @@ hard-links every other file into the new data directory (``_merge_swap``).
 A manifest without ``n_buckets`` (written by older code) sends the mutation
 down the Spark swap, which re-buckets the whole stage and records it.
 
+The contract covers the five narrow stages (docs, sentences, triples, defs,
+links) and the two url-keyed global stages, ``linked`` and
+``edge_occurrences``; the latter keeps its (subj_id, pred, obj_id) sort
+within each bucket. canon, nodes and edges are not bucketed. A fold whose
+delta provably leaves canon unchanged relinks only the delta's mentions and
+merges ``linked`` and ``edge_occurrences`` bucket by bucket the same way
+(``run_incremental``); an ``edge_occurrences`` manifest without
+``n_buckets`` sends the fold down the full recompute, which re-buckets it.
+
 Reads of a committed stage go through ``read_stage``: the Spark schema the
 writer stored in a part file's footer (key
 ``org.apache.spark.sql.parquet.row.metadata``) is read on the driver with
@@ -56,9 +65,14 @@ from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..extract import EXTRACTOR_VERSION, extract_stage
-from .canon import canonicalize_entities
+from .canon import canonicalize_entities, norm_expr
 from .linking import build_dictionary, link_mentions, mentions_long
-from .materialize import edges_from_occurrences, materialize_graph
+from .materialize import (
+    edges_from_occurrences,
+    graph_nodes,
+    materialize_graph,
+    occurrences,
+)
 from .segment import segment_stage
 from ..sources import read_pages
 from .triples import defs_stage, links_stage, patterns_df, triples_stage
@@ -98,9 +112,17 @@ _NARROW = ("docs", "sentences", "triples", "defs", "links")
 _MERGE_MAX_URLS = 1_000
 _MERGE_MAX_BYTES = 128 << 20
 
+# the url-keyed global stages a canon-stable fold merges bucket by bucket
+_RELINKED = ("linked", "edge_occurrences")
+
 # which path the last narrow-stage swap of a run_incremental / run_delete in
 # this process took: "bucket-merge" or "spark-swap" (the tests pin both)
 LAST_FOLD_PATH: str | None = None
+
+# which global tail the last run_incremental / run_delete in this process
+# took: "scoped" (canon kept, the delta's mentions relinked and merged) or
+# "recomputed" (_recompute_globals)
+LAST_GLOBALS_PATH: str | None = None
 
 
 def _url_key() -> Column:
@@ -330,18 +352,27 @@ class PipelineRunner:
         "edge_occurrences": ["subj_id", "pred", "obj_id"],
     }
 
-    def _commit(self, stage: str, df: DataFrame, by_url: bool = True) -> DataFrame:
+    def _commit(
+        self, stage: str, df: DataFrame, by_url: bool = True,
+        n_buckets: int | None = None, **fields,
+    ) -> DataFrame:
         """Write stage output + lineage + manifest; return the re-read frame
-        (so downstream lineage starts from the committed files)."""
+        (so downstream lineage starts from the committed files). A url-keyed
+        stage is laid out as ``n_buckets`` (default ``n_partitions``) url
+        buckets; ``fields`` go into the manifest as they are."""
         t0 = time.time()
         d = self._dir(stage)
         out = os.path.join(d, "data")
         by_url = by_url and "url" in df.columns
+        n_buckets = n_buckets or self.n_partitions
         if by_url:
-            df = _bucketed(df, self.n_partitions)
+            df = _bucketed(df, n_buckets)
         if stage in self._LAYOUT_SORT:
             df = df.sortWithinPartitions(*self._LAYOUT_SORT[stage])
         df.write.mode("overwrite").parquet(out)
+        # a bucket merge that crashed mid-assembly and was retried down a
+        # full rewrite leaves its data_new behind; nothing else reads it
+        shutil.rmtree(os.path.join(d, "data_new"), ignore_errors=True)
         committed = read_stage(self.spark, out)
         n = self._write_lineage(d)
         wall_ms = int((time.time() - t0) * 1000)
@@ -351,9 +382,10 @@ class PipelineRunner:
             "n_rows": n,
             "wall_ms": wall_ms,
             "extractor_version": EXTRACTOR_VERSION,
+            **fields,
         }
         if by_url:
-            manifest["n_buckets"] = self.n_partitions
+            manifest["n_buckets"] = n_buckets
         self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
         return committed
@@ -552,8 +584,9 @@ class PipelineRunner:
             )
             nodes = self._commit("nodes", nodes, by_url=False)
             # occurrences first: edges is its rollup, derived from the
-            # committed parquet so the resolution joins run exactly once
-            occ = self._commit("edge_occurrences", occ, by_url=False)
+            # committed parquet so the resolution joins run exactly once.
+            # Url-bucketed, so a canon-stable fold can merge it by bucket.
+            occ = self._commit("edge_occurrences", occ)
             edges = self._commit("edges", edges_from_occurrences(occ), by_url=False)
 
         return {
@@ -619,12 +652,12 @@ class PipelineRunner:
             "linked_files": 0, "wall_ms": int((time.time() - t0) * 1000),
         }
 
-    def _recorded_buckets(self) -> int | None:
-        """The bucket count every narrow stage's manifest records; None when
+    def _recorded_buckets(self, stages=_NARROW) -> int | None:
+        """The bucket count every manifest of ``stages`` records; None when
         one predates ``n_buckets`` or they differ. Then only the Spark swap,
-        which re-buckets every part file, may rewrite them."""
+        which re-buckets every part file, may rewrite the narrow stages."""
         seen = set()
-        for stage in _NARROW:
+        for stage in stages:
             try:
                 with open(os.path.join(self._dir(stage), "manifest.json")) as f:
                     seen.add(json.load(f).get("n_buckets"))
@@ -632,15 +665,17 @@ class PipelineRunner:
                 return None
         return seen.pop() if len(seen) == 1 else None
 
-    def _touched_files(self, n_buckets: int, keys) -> dict | None:
-        """Per narrow stage, bucket -> part-file names, for the buckets of
-        ``keys`` (an Arrow table of ``url``, ``_bucket``). None when the
-        driver merge may not run: a stage without part files, a part file
-        whose name carries no bucket index below ``n_buckets``, or touched
-        files holding more than _MERGE_MAX_BYTES in all."""
+    def _touched_files(
+        self, n_buckets: int, keys, stages=_NARROW
+    ) -> tuple[dict, int] | None:
+        """Per stage of ``stages``, bucket -> part-file names, for the
+        buckets of ``keys`` (an Arrow table of ``url``, ``_bucket``), and
+        the bytes those files hold in all. None when the driver merge may
+        not run: a stage without part files, or a part file whose name
+        carries no bucket index below ``n_buckets``."""
         buckets = set(keys.column("_bucket").to_pylist())
         out, size = {}, 0
-        for stage in _NARROW:
+        for stage in stages:
             data = os.path.join(self._dir(stage), "data")
             parts = _part_files(data)
             if not parts:
@@ -654,7 +689,7 @@ class PipelineRunner:
                     files.setdefault(b, []).append(name)
                     size += os.stat(os.path.join(data, name)).st_size
             out[stage] = files
-        return out if size <= _MERGE_MAX_BYTES else None
+        return out, size
 
     def _merge_swap(self, stage: str, n_buckets: int, files: dict, keys, adds) -> dict:
         """Assemble a stage's ``data_new`` on the driver and swap it in.
@@ -662,8 +697,9 @@ class PipelineRunner:
         minus the ``keys`` urls, plus its rows of ``adds`` (an Arrow table
         with the stage's columns, or None), written by pyarrow with the old
         files' schema and footer metadata (Spark's schema key included, so
-        ``read_stage`` still starts no job). Every other file is hard-linked.
-        A crashed attempt's half-assembled ``data_new`` is cleared first."""
+        ``read_stage`` still starts no job), in the stage's layout sort
+        order if it has one. Every other file is hard-linked. A crashed
+        attempt's half-assembled ``data_new`` is cleared first."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -693,6 +729,9 @@ class PipelineRunner:
             k: v for k, v in (schema.metadata or {}).items() if k != b"ARROW:schema"
         })
         int96 = any(c.physical_type == "INT96" for c in template.schema)
+        # Spark's sortWithinPartitions: ascending, nulls first, strings by
+        # their UTF-8 bytes (as Arrow compares them)
+        order = [(c, "ascending") for c in self._LAYOUT_SORT.get(stage, ())]
         urls, key_bucket = keys.column("url"), keys.column("_bucket")
         if adds is not None:
             adds = adds.select(schema.names).cast(schema)
@@ -707,8 +746,11 @@ class PipelineRunner:
                 pieces.append(adds.filter(pc.equal(add_bucket, b)))
             if not old and not any(t.num_rows for t in pieces):
                 continue  # nothing was and nothing goes in this bucket
+            table = pa.concat_tables(pieces)
+            if order:
+                table = table.sort_by(order, null_placement="at_start")
             pq.write_table(
-                pa.concat_tables(pieces),
+                table,
                 os.path.join(tmp, f"part-{b:05d}-{uuid.uuid4()}-c000.snappy.parquet"),
                 use_deprecated_int96_timestamps=int96,
             )
@@ -752,10 +794,8 @@ class PipelineRunner:
 
         The reference's watcher re-parses the WHOLE repo on any change
         (reference ``core/watcher.py:84-119``); here the O(corpus) extraction
-        stages are delta-only and only the cheap global stages (dictionary,
-        linking, canonicalization, materialize) recompute, i.e.
-        O(delta + graph), not O(corpus). Latest-wins on (url, warc_ts), ties
-        to the delta.
+        stages are delta-only. Latest-wins on (url, warc_ts), ties to the
+        delta.
 
         What the narrow stages rewrite depends on the delta's size. Up to
         _MERGE_MAX_URLS winning urls whose buckets' part files hold up to
@@ -765,6 +805,20 @@ class PipelineRunner:
         either cutover, or on a workdir whose manifests predate
         ``n_buckets``, a Spark swap rewrites every part file of all five
         stages. ``LAST_FOLD_PATH`` names the path taken.
+
+        What the global stages (canon, linked, nodes, edges,
+        edge_occurrences) cost depends on the delta's defs. When the narrow
+        stages took the bucket merge on a fresh mutation, canon, linked and
+        edge_occurrences are committed under the pre-mutation fingerprint
+        on the same buckets, the touched part files of all seven
+        url-bucketed stages fit _MERGE_MAX_BYTES, and the delta provably
+        leaves canon unchanged (``_canon_stable``), the tail is scoped:
+        canon's files stay, only the delta's mentions are linked, linked and
+        edge_occurrences are merged bucket by bucket, and nodes and edges
+        are rebuilt from the committed stages (O(delta + graph)). Otherwise
+        ``_recompute_globals`` rebuilds all five from the committed narrow
+        stages, which re-links every mention. A retry after a crash always
+        recomputes. ``LAST_GLOBALS_PATH`` names the path taken.
 
         Replay semantics (positional mutation signatures): re-running the
         MOST RECENTLY recorded mutation with nothing after it is a no-op
@@ -841,6 +895,14 @@ class PipelineRunner:
             .drop("_base_ts", "_base_md5")
         )
 
+        # what the scoped global tail needs, filled in by by_bucket when the
+        # fold may take it: a fresh mutation whose canon, linked and
+        # edge_occurrences are committed under the pre-mutation fingerprint
+        # on the narrow stages' buckets, whose touched part files of all
+        # seven url-bucketed stages fit _MERGE_MAX_BYTES, and whose defs
+        # change leaves canon as committed
+        scope: dict = {}
+
         def by_bucket(n: int) -> dict | None:
             # one bounded fetch of the winning rows, their html (for links)
             # and bucket; the other stages' rows derive from it on the driver
@@ -853,9 +915,10 @@ class PipelineRunner:
             if wins.num_rows > _MERGE_MAX_URLS:
                 return None
             keys = wins.select(["url", "_bucket"])
-            touched = self._touched_files(n, keys)
-            if touched is None:
+            found = self._touched_files(n, keys)
+            if found is None or found[1] > _MERGE_MAX_BYTES:
                 return None
+            touched, size = found
             adds = {"docs": wins}
             if wins.num_rows:
                 sent = segment_stage(spark.createDataFrame(
@@ -870,6 +933,15 @@ class PipelineRunner:
                         spark.createDataFrame(wins.select(["url", "html"]))
                     ).toArrow(),
                 )
+            kept = not retrying and self._recorded_buckets(_RELINKED) == n and all(
+                self._committed(s) for s in ("canon", *_RELINKED)
+            )
+            relink = self._touched_files(n, keys, _RELINKED) if kept else None
+            if (
+                relink is not None and size + relink[1] <= _MERGE_MAX_BYTES
+                and self._canon_stable(touched["defs"], keys, adds.get("defs"))
+            ):
+                scope.update(n=n, files=relink[0], keys=keys, adds=adds)
             return {
                 s: self._merge_swap(s, n, touched[s], keys, adds.get(s))
                 for s in _NARROW
@@ -906,34 +978,155 @@ class PipelineRunner:
         for stage, swap in swaps.items():
             self._refresh_manifest(stage, swap)
 
-        # global stages recompute from the merged narrow outputs; only after
-        # every stage (narrow + global) is committed with the delta-inclusive
-        # fingerprint is the delta durably marked as folded in
-        out = self._recompute_globals()
+        # global stages follow the merged narrow outputs; only after every
+        # stage (narrow + global) is committed with the delta-inclusive
+        # fingerprint is the delta durably marked as folded in. A crash
+        # before that retries down _recompute_globals (scope stays empty).
+        out = self._scoped_globals(**scope) if scope else self._recompute_globals()
         self._finish_mutation(delta_sig)
         return out
 
     def _recompute_globals(self) -> dict[str, DataFrame]:
         """Rebuild the global stages (dictionary/canon, linking, graph) from
         the committed narrow stages — the shared tail of every mutation path
-        (incremental fold, deletion). O(graph), not O(corpus)."""
+        (incremental fold, deletion) and the oracle twin of
+        ``_scoped_globals``. O(corpus) in the Spark sense: it re-canonicalizes
+        every defined surface and re-links every mention, though from the
+        committed narrow stages, never from the raw pages. ``linked`` and
+        ``edge_occurrences`` take the narrow stages' bucket count."""
+        global LAST_GLOBALS_PATH
+        LAST_GLOBALS_PATH = "recomputed"
+        tag = {"globals": "recomputed"}
+        n = self._recorded_buckets()
         docs = self._load("docs")
         triples = self._load("triples")
         defs = self._load("defs")
         links = self._load("links")
-        canon = self._commit("canon", canonicalize_entities(defs))
+        canon = self._commit("canon", canonicalize_entities(defs), **tag)
         linked = self._commit(
-            "linked", link_mentions(mentions_long(triples, defs), build_dictionary(canon))
+            "linked",
+            link_mentions(mentions_long(triples, defs), build_dictionary(canon)),
+            n_buckets=n, **tag,
         )
         nodes, edges, occ = materialize_graph(docs, triples, linked, canon, links)
-        nodes = self._commit("nodes", nodes, by_url=False)
-        occ = self._commit("edge_occurrences", occ, by_url=False)
-        edges = self._commit("edges", edges_from_occurrences(occ), by_url=False)
-        return {
-            "docs": docs, "sentences": self._load("sentences"), "triples": triples,
-            "defs": defs, "links": links, "canon": canon, "linked": linked,
-            "nodes": nodes, "edges": edges, "edge_occurrences": occ,
-        }
+        nodes = self._commit("nodes", nodes, by_url=False, **tag)
+        occ = self._commit("edge_occurrences", occ, n_buckets=n, **tag)
+        edges = self._commit(
+            "edges", edges_from_occurrences(occ), by_url=False, **tag
+        )
+        return self._outputs(
+            docs=docs, triples=triples, defs=defs, links=links, canon=canon,
+            linked=linked, nodes=nodes, edges=edges, edge_occurrences=occ,
+        )
+
+    def _outputs(self, **frames) -> dict[str, DataFrame]:
+        """All ten stages, as a run returns them: ``frames`` as given, every
+        other stage read from its committed files."""
+        return {s: frames[s] if s in frames else self._load(s) for s in STAGES}
+
+    def _canon_stable(self, defs_files: dict, keys, added) -> bool:
+        """True when a fold that drops the committed defs rows of the
+        ``keys`` urls (they sit in ``defs_files``, bucket -> part files)
+        and adds the ``added`` rows (an Arrow table, or None) provably
+        leaves canon as committed. Canon is a pure function of the
+        ``groupBy(surface).min(etype)`` table of the normalized defs, so it
+        is unchanged when the dropped (surface, etype) pairs are a
+        sub-multiset of the added ones (no surface loses a row, no etype
+        minimum rises) and every added surface is already in canon with an
+        etype no greater than its own (no surface is new, no minimum
+        falls). O(delta): it reads the touched defs files, normalizes both
+        sides with Spark's ``norm_expr`` (a local relation, no job) and
+        looks the added surfaces up in canon on the driver."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from collections import Counter
+
+        data = os.path.join(self._dir("defs"), "data")
+        urls = keys.column("url")
+        cols = ["surface", "etype"]
+        dropped = [
+            t.filter(pc.is_in(t.column("url"), urls)).select(cols)
+            for t in (
+                pq.read_table(os.path.join(data, f), columns=["url", *cols])
+                for names in defs_files.values() for f in names
+            )
+        ]
+
+        def normed(tables) -> Counter:
+            tables = [t for t in tables if t.num_rows]
+            if not tables:
+                return Counter()
+            rows = self.spark.createDataFrame(
+                pa.concat_tables(tables, promote_options="permissive")
+            ).select(norm_expr(F.col("surface")), "etype").collect()
+            return Counter(tuple(r) for r in rows)
+
+        gone = normed(dropped)
+        new = normed([added.select(cols)] if added is not None else [])
+        if gone - new:
+            return False
+        surfaces = sorted({s for s, _ in new})
+        if not surfaces:
+            return True
+        canon = os.path.join(self._dir("canon"), "data")
+        known = {}
+        for f in _part_files(canon):
+            t = pq.read_table(
+                os.path.join(canon, f), columns=cols,
+                filters=pc.field("surface").isin(surfaces),
+            )
+            known.update(zip(*(t.column(c).to_pylist() for c in cols)))
+        return all(
+            e is not None and known.get(s) is not None and known[s] <= e
+            for s, e in new
+        )
+
+    def _scoped_globals(
+        self, n: int, files: dict, keys, adds: dict
+    ) -> dict[str, DataFrame]:
+        """The global tail of a canon-stable bucket-merge fold: canon's
+        files stay as they are (only its manifest advances); the delta's
+        mentions are linked against the committed canon and their
+        occurrence rows derived, both from the small frames of ``adds``
+        (the delta's narrow-stage rows, Arrow); ``linked`` and
+        ``edge_occurrences`` are merged bucket by bucket (``files``: per
+        stage, bucket -> touched part files); nodes and edges are rebuilt
+        by Spark from the committed stages. Equal to
+        ``_recompute_globals``: with canon unchanged, every url's linked
+        and occurrence rows depend only on that url's own rows."""
+        global LAST_GLOBALS_PATH
+        LAST_GLOBALS_PATH = "scoped"
+        spark = self.spark
+        canon = self._load("canon")
+        self._refresh_manifest("canon", {"globals": "scoped", "wall_ms": 0})
+        rel = {}
+        if "defs" in adds:  # the delta has winning urls
+            triples, defs, links = (
+                spark.createDataFrame(adds[s]) for s in ("triples", "defs", "links")
+            )
+            rel["linked"] = link_mentions(
+                mentions_long(triples, defs), build_dictionary(canon)
+            ).toArrow()
+            rel["edge_occurrences"] = occurrences(
+                triples, spark.createDataFrame(rel["linked"]), canon, links
+            ).toArrow()
+        for stage in _RELINKED:
+            swap = self._merge_swap(stage, n, files[stage], keys, rel.get(stage))
+            self._refresh_manifest(stage, {**swap, "globals": "scoped"})
+        docs, links, occ = (
+            self._load(s) for s in ("docs", "links", "edge_occurrences")
+        )
+        nodes = self._commit(
+            "nodes", graph_nodes(docs, canon, links), by_url=False, globals="scoped"
+        )
+        edges = self._commit(
+            "edges", edges_from_occurrences(occ), by_url=False, globals="scoped"
+        )
+        return self._outputs(
+            docs=docs, links=links, canon=canon, nodes=nodes, edges=edges,
+            edge_occurrences=occ,
+        )
 
     def run_delete(self, url_prefix: str) -> dict[str, DataFrame]:
         """Delete every page whose url starts with ``url_prefix`` from a
@@ -990,11 +1183,11 @@ class PipelineRunner:
             )
             if keys.num_rows > _MERGE_MAX_URLS:
                 return None
-            touched = self._touched_files(n, keys)
-            if touched is None:
+            found = self._touched_files(n, keys)
+            if found is None or found[1] > _MERGE_MAX_BYTES:
                 return None
             return {
-                s: self._merge_swap(s, n, touched[s], keys, None) for s in order
+                s: self._merge_swap(s, n, found[0][s], keys, None) for s in order
             }
 
         def by_spark(n: int) -> dict:

@@ -53,3 +53,27 @@ def fold_path(request, monkeypatch):
         monkeypatch.setattr(runner, "_MERGE_MAX_URLS", 0)
         monkeypatch.setattr(runner, "_MERGE_MAX_BYTES", 0)
     return request.param
+
+
+def _hashable(v):
+    if isinstance(v, list):
+        return tuple(_hashable(x) for x in v)
+    if hasattr(v, "asDict"):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
+def stage_rows(out) -> dict:
+    """Row multiset of every one of the ten stages a runner returns, so a
+    fold or delete can be compared with a build stage by stage (a wrong
+    ``linked`` or ``edge_occurrences`` row can roll up to the right edges)."""
+    from collections import Counter
+
+    from codegraphcontext_spark.pipeline.runner import STAGES
+
+    return {
+        s: Counter(
+            _hashable(r) for r in out[s].select(*sorted(out[s].columns)).collect()
+        )
+        for s in STAGES
+    }

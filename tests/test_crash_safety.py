@@ -17,6 +17,8 @@ import pytest
 import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import PipelineRunner
 
+from .conftest import stage_rows
+
 PREFIX = "https://site1"
 
 
@@ -197,6 +199,41 @@ def test_build_survives_crash_in_commit_manifest(
     assert _sets(PipelineRunner(spark, pages, wd).run()) == _sets(clean)
 
 
+def test_build_survives_crash_in_stage_write(
+    spark, base_build, tmp_path_factory, monkeypatch
+):
+    """A build whose write of the linked stage's data dies after some of
+    its part files reached disk leaves linked without a manifest; a fresh
+    runner's build equals a clean one on every stage."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages, base_wd = base_build
+    wd = str(tmp_path_factory.mktemp("crash_stage_write") / "wd")
+    real = DataFrameWriter.parquet
+    target = os.path.join("linked", "data")
+
+    def parquet(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if not str(path).endswith(target):
+            return
+        monkeypatch.setattr(DataFrameWriter, "parquet", real)
+        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+        for f in parts[1:] + ["_SUCCESS"]:  # one part file stays on disk
+            os.remove(os.path.join(path, f))
+        raise OSError("injected crash mid stage write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run()
+    assert any(
+        f.startswith("part-") for f in os.listdir(os.path.join(wd, "linked", "data"))
+    )
+    assert not os.path.exists(os.path.join(wd, "linked", "manifest.json"))
+    _assert_readable(spark, pages, wd)
+    clean = PipelineRunner(spark, pages, base_wd).run()
+    assert stage_rows(PipelineRunner(spark, pages, wd).run()) == stage_rows(clean)
+
+
 @pytest.mark.parametrize("inject", [_crash_manifest_write, _crash_lineage_write])
 def test_delete_survives_crash_in_refresh(
     spark, base_build, tmp_path_factory, monkeypatch, inject
@@ -344,12 +381,12 @@ def test_incremental_survives_crash_on_spark_swap(
     assert _sets(retried) == clean_fold
 
 
-def _crash_mid_bucket_merge(monkeypatch):
-    """The bucket merge dies while assembling the swap stage's data_new:
-    the untouched part files are already linked in and the first rewritten
+def _crash_mid_bucket_merge(monkeypatch, stage=_SWAP_STAGE):
+    """The bucket merge dies while assembling ``stage``'s data_new: the
+    untouched part files are already linked in and the first rewritten
     bucket file is torn."""
     real = pq.write_table
-    target = os.path.join(_SWAP_STAGE, "data_new")
+    target = os.path.join(stage, "data_new")
 
     def write_table(table, where, *a, **kw):
         if os.path.dirname(str(where)).endswith(target):
@@ -409,3 +446,124 @@ def test_delete_survives_crash_at_write_boundary(
     retried = PipelineRunner(spark, pages, wd).run_delete(PREFIX)
     assert not os.path.exists(os.path.join(wd, "_pending.json"))
     assert _sets(retried) == clean_delete
+
+
+@pytest.fixture(scope="module")
+def stable_delta(base_build, tmp_path_factory):
+    """A delta that changes the graph but not canon: a same-html recrawl of
+    one base url a day later, and a new url carrying another base page's
+    html (every surface it defines is already defined, with its etype)."""
+    from datetime import timedelta
+
+    import pyarrow as pa
+
+    pages, _ = base_build
+    t = pq.read_table(pages)
+    urls = t.column("url").to_pylist()
+    single = [i for i, u in enumerate(urls) if urls.count(u) == 1]
+    delta = t.take([single[0], single[1]])
+    cols = {
+        "url": [urls[single[0]], "https://crashfold.example/copy"],
+        "warc_ts": [ts + timedelta(days=1) for ts in delta.column("warc_ts").to_pylist()],
+    }
+    for name, values in cols.items():
+        i = delta.schema.get_field_index(name)
+        field = delta.schema.field(i)
+        delta = delta.set_column(i, field, pa.array(values, field.type))
+    p = str(tmp_path_factory.mktemp("crash_stable_delta") / "delta.parquet")
+    pq.write_table(delta, p)
+    return p
+
+
+@pytest.fixture(scope="module")
+def clean_stable_fold(spark, base_build, stable_delta, tmp_path_factory):
+    """All ten stages of an uninterrupted fold of stable_delta, which takes
+    the scoped global tail."""
+    pages, wd = _clone(base_build, tmp_path_factory, "clean_stable_fold")
+    rows = stage_rows(PipelineRunner(spark, pages, wd).run_incremental(stable_delta))
+    assert runner_mod.LAST_GLOBALS_PATH == "scoped"
+    return rows
+
+
+def _crash_before_occurrence_merge(monkeypatch):
+    """The scoped tail dies after the linked merge swap landed and before
+    the edge_occurrences merge starts."""
+    real = PipelineRunner._merge_swap
+
+    def merge_swap(self, stage, *a, **kw):
+        if stage == "edge_occurrences":
+            monkeypatch.setattr(PipelineRunner, "_merge_swap", real)
+            raise OSError("injected crash between relinked merges")
+        return real(self, stage, *a, **kw)
+
+    monkeypatch.setattr(PipelineRunner, "_merge_swap", merge_swap)
+
+
+def _crash_after_canon_refresh(monkeypatch):
+    """The scoped tail dies right after canon's manifest advanced: canon is
+    delta-inclusive, linked is not."""
+    real = PipelineRunner._refresh_manifest
+
+    def refresh(self, stage, *a, **kw):
+        real(self, stage, *a, **kw)
+        if stage == "canon":
+            monkeypatch.setattr(PipelineRunner, "_refresh_manifest", real)
+            raise OSError("injected crash after canon refresh")
+
+    monkeypatch.setattr(PipelineRunner, "_refresh_manifest", refresh)
+
+
+def _crash_mid_occurrence_merge(monkeypatch):
+    """The scoped tail dies while assembling edge_occurrences' data_new."""
+    _crash_mid_bucket_merge(monkeypatch, "edge_occurrences")
+
+
+@pytest.mark.parametrize(
+    "inject",
+    [
+        _crash_before_occurrence_merge, _crash_mid_occurrence_merge,
+        _crash_after_canon_refresh, _crash_between_swap_renames,
+    ],
+)
+def test_scoped_fold_crash_retries_by_recompute(
+    spark, base_build, stable_delta, clean_stable_fold, tmp_path_factory,
+    monkeypatch, inject,
+):
+    """A canon-stable fold that crashes in its scoped tail, or in a narrow
+    swap before it, is retried from _pending.json down the full recompute
+    (a crash can leave canon advanced and linked behind); the retry leaves
+    no half-assembled data_new and equals an uninterrupted fold on every
+    stage."""
+    pages, wd = _clone(base_build, tmp_path_factory, "crash_scoped")
+    inject(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run_incremental(stable_delta)
+    _assert_readable(spark, pages, wd)
+    assert os.path.exists(os.path.join(wd, "_pending.json"))
+    retried = PipelineRunner(spark, pages, wd).run_incremental(stable_delta)
+    assert runner_mod.LAST_GLOBALS_PATH == "recomputed"
+    assert not os.path.exists(os.path.join(wd, "_pending.json"))
+    left = [s for s in os.listdir(wd) if os.path.isdir(os.path.join(wd, s, "data_new"))]
+    assert not left
+    assert stage_rows(retried) == clean_stable_fold
+
+
+def test_legacy_occurrence_manifest_takes_recompute(
+    spark, base_build, stable_delta, clean_stable_fold, tmp_path_factory
+):
+    """An edge_occurrences manifest without n_buckets (written before the
+    stage was url-bucketed) sends a canon-stable fold down the full
+    recompute, which re-buckets the stage; the result equals the scoped
+    fold on every stage."""
+    pages, wd = _clone(base_build, tmp_path_factory, "legacy_occ")
+    man_p = os.path.join(wd, "edge_occurrences", "manifest.json")
+    with open(man_p) as f:
+        man = json.load(f)
+    n = man.pop("n_buckets")
+    PipelineRunner._write_json_atomic(man_p, man)
+    out = PipelineRunner(spark, pages, wd).run_incremental(stable_delta)
+    assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
+    assert runner_mod.LAST_GLOBALS_PATH == "recomputed"
+    with open(man_p) as f:
+        assert json.load(f)["n_buckets"] == n
+    assert stage_rows(out) == clean_stable_fold

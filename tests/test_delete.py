@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import PipelineRunner
 
+from .conftest import stage_rows
+
 PREFIX = "https://site1"  # matches site1, site10..site19, site100 — ~10% of pages
 
 
@@ -30,25 +32,12 @@ def filtered_corpus(corpus_dir, tmp_path_factory):
     return p
 
 
-def _sets(out):
-    edges = {
-        (r.subj_id, r.pred, r.obj_id, r.n_occurrences)
-        for r in out["edges"].select(
-            "subj_id", "pred", "obj_id", "n_occurrences"
-        ).collect()
-    }
-    nodes = {
-        (r.node_id, r.node_type, r.name)
-        for r in out["nodes"].select("node_id", "node_type", "name").collect()
-    }
-    return nodes, edges
-
-
 @pytest.fixture(scope="module")
 def filtered_sets(spark, filtered_corpus, tmp_path_factory):
-    """Node and edge sets of a fresh build without the deleted pages."""
+    """Row multisets of all ten stages of a fresh build without the
+    deleted pages."""
     wd_ref = str(tmp_path_factory.mktemp("wd_ref"))
-    return _sets(PipelineRunner(spark, filtered_corpus, wd_ref).run())
+    return stage_rows(PipelineRunner(spark, filtered_corpus, wd_ref).run())
 
 
 def test_delete_equals_filtered_build(
@@ -60,8 +49,9 @@ def test_delete_equals_filtered_build(
     runner.run()
     deleted = runner.run_delete(PREFIX)
     assert runner_mod.LAST_FOLD_PATH == fold_path
+    assert runner_mod.LAST_GLOBALS_PATH == "recomputed"
 
-    assert _sets(deleted) == filtered_sets
+    assert stage_rows(deleted) == filtered_sets
     # no Page node under the prefix survives
     assert (
         deleted["nodes"]

@@ -9,15 +9,19 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark import cli
+from codegraphcontext_spark.pipeline.canon import norm_expr
 from codegraphcontext_spark.pipeline.runner import (
     _NARROW,
+    _RELINKED,
     PipelineRunner,
     _bucketed,
     _part_files,
@@ -25,6 +29,11 @@ from codegraphcontext_spark.pipeline.runner import (
     read_stage,
     url_bucket,
 )
+
+from .conftest import stage_rows
+
+# the stages a fold rebuilds after the narrow ones, on either global path
+_GLOBALS = ("canon", "linked", "nodes", "edges", "edge_occurrences")
 
 
 @pytest.fixture(scope="module")
@@ -53,21 +62,19 @@ def _edge_set(edges):
     }
 
 
-def _node_set(nodes):
-    return {
-        (r.node_id, r.node_type, r.name)
-        for r in nodes.select("node_id", "node_type", "name").collect()
-    }
+@pytest.fixture(scope="module")
+def full_build(spark, corpus_dir, tmp_path_factory):
+    """A full build over base + delta (the whole corpus)."""
+    wd_full = str(tmp_path_factory.mktemp("wd_full"))
+    return PipelineRunner(
+        spark, os.path.join(corpus_dir, "pages.parquet"), wd_full
+    ).run()
 
 
 @pytest.fixture(scope="module")
-def full_sets(spark, corpus_dir, tmp_path_factory):
-    """Edge and node sets of a full build over base + delta."""
-    wd_full = str(tmp_path_factory.mktemp("wd_full"))
-    full = PipelineRunner(
-        spark, os.path.join(corpus_dir, "pages.parquet"), wd_full
-    ).run()
-    return _edge_set(full["edges"]), _node_set(full["nodes"])
+def full_sets(full_build):
+    """Row multisets of all ten stages of the full build."""
+    return stage_rows(full_build)
 
 
 def test_incremental_equals_full(
@@ -81,7 +88,7 @@ def test_incremental_equals_full(
     incr = incr_runner.run_incremental(delta_p)
     assert runner_mod.LAST_FOLD_PATH == fold_path
 
-    assert (_edge_set(incr["edges"]), _node_set(incr["nodes"])) == full_sets
+    assert stage_rows(incr) == full_sets
 
 
 def test_incremental_idempotent(spark, split_corpus, tmp_path_factory):
@@ -153,16 +160,21 @@ def _inodes(wd, stage):
 
 
 def _assert_bucketed(spark, wd, n_buckets):
-    """Every part file of every narrow stage holds only urls whose bucket
-    is the index in its name."""
-    for stage in _NARROW:
+    """Every part file of every url-bucketed stage holds only urls whose
+    bucket is the index in its name; edge_occurrences keeps its layout
+    sort within each file."""
+    for stage in _NARROW + _RELINKED:
         data = os.path.join(wd, stage, "data")
         rows = []
         for name in _part_files(data):
             idx = _part_index(name)
             assert idx is not None and idx < n_buckets, name
-            urls = pq.read_table(os.path.join(data, name), columns=["url"])
-            rows += [(idx, u) for u in urls.column("url").to_pylist()]
+            t = pq.read_table(os.path.join(data, name))
+            rows += [(idx, u) for u in t.column("url").to_pylist()]
+            if stage == "edge_occurrences":
+                cols = ("subj_id", "pred", "obj_id")
+                keys = list(zip(*(t.column(c).to_pylist() for c in cols)))
+                assert keys == sorted(keys), name
         misplaced = (
             spark.createDataFrame(rows, "idx int, url string")
             .where(url_bucket(n_buckets) != F.col("idx"))
@@ -182,34 +194,37 @@ def _url_buckets(spark, pages, n_buckets):
 
 
 def test_bucket_layout_and_hard_links(
-    spark, split_corpus, tmp_path_factory, capsys
+    spark, relink_inputs, tmp_path_factory, capsys
 ):
-    """A build lays each narrow stage out so a part file's index is its
+    """A build lays each url-keyed stage out so a part file's index is its
     urls' bucket and records the bucket count; a bucket-merge fold keeps
     that layout, hard-links the part files of untouched buckets (same
     inode) and writes the touched buckets' files anew, and its manifests
-    say so."""
-    base_p, split_delta = split_corpus
-    # three new urls: fewer buckets than the layout has
-    t = pq.read_table(split_delta)
-    few = set(sorted(set(t.column("url").to_pylist()))[:3])
+    say so. Its delta leaves canon unchanged, so the fold merges linked
+    and edge_occurrences the same way and keeps canon's files."""
+    pages, base_wd = relink_inputs["base"]
+    # three held-out urls: fewer buckets than the layout has
+    t = pq.read_table(relink_inputs["stable"])
+    few = set(sorted(relink_inputs["held"])[:3])
     delta_p = str(tmp_path_factory.mktemp("layout") / "delta.parquet")
     pq.write_table(t.filter([u in few for u in t.column("url").to_pylist()]), delta_p)
-    wd = str(tmp_path_factory.mktemp("wd_layout"))
-    runner = PipelineRunner(spark, base_p, wd)
-    runner.run()
+    wd = _clone(base_wd, tmp_path_factory, "wd_layout")
+    runner = PipelineRunner(spark, pages, wd)
     n = runner.n_partitions
-    assert all(_manifest(wd, s)["n_buckets"] == n for s in _NARROW)
+    merged = _NARROW + _RELINKED
+    assert all(_manifest(wd, s)["n_buckets"] == n for s in merged)
     _assert_bucketed(spark, wd, n)
-    before = {s: _inodes(wd, s) for s in _NARROW}
+    before = {s: _inodes(wd, s) for s in (*merged, "canon")}
 
     runner.run_incremental(delta_p)
     assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
+    assert runner_mod.LAST_GLOBALS_PATH == "scoped"
     _assert_bucketed(spark, wd, n)
+    assert _inodes(wd, "canon") == before["canon"]
     # every delta url is new to the base, so every delta url wins
     touched = _url_buckets(spark, delta_p, n)
     assert 0 < len(touched) < n
-    for stage in _NARROW:
+    for stage in merged:
         after = _inodes(wd, stage)
         kept = {f: i for f, i in before[stage].items() if _part_index(f) not in touched}
         assert {f: after.get(f) for f in kept} == kept, stage
@@ -220,13 +235,126 @@ def test_bucket_layout_and_hard_links(
         assert man["linked_files"] == len(kept)
         assert man["rewritten_files"] == len(new)
         assert man["wall_ms"] >= 0
-    # cli status prints what each swap did
+    # cli status prints what each swap did, and which global tail ran
     assert cli.main(["status", "--workdir", wd]) == 0
     shown = {m["stage"]: m for m in json.loads(capsys.readouterr().out)["stages"]}
-    for stage in _NARROW:
+    for stage in merged:
         assert {k: shown[stage][k] for k in _SWAP_KEYS} == {
             k: _manifest(wd, stage)[k] for k in _SWAP_KEYS
         }
+    assert {s: shown[s]["globals"] for s in _GLOBALS} == dict.fromkeys(
+        _GLOBALS, "scoped"
+    )
+
+
+def _clone(wd, tmp_path_factory, name):
+    dst = str(tmp_path_factory.mktemp(name) / "wd")
+    shutil.copytree(wd, dst)
+    return dst
+
+
+def _with(table, **cols):
+    """``table`` with the named columns replaced by the given values."""
+    for name, values in cols.items():
+        i = table.schema.get_field_index(name)
+        field = table.schema.field(i)
+        table = table.set_column(i, field, pa.array(values, field.type))
+    return table
+
+
+@pytest.fixture(scope="module")
+def relink_inputs(spark, corpus_dir, full_build, tmp_path_factory):
+    """Two deltas over one base build. ``held`` are eight corpus urls each
+    of whose defined (surface, etype) pairs some base page defines too; the
+    base is the corpus without them. The ``stable`` delta is the held pages
+    plus recrawls of three base pages, same html one day later: it leaves
+    the defined-surface table, and so canon, as the base has it. The
+    ``new_surface`` delta adds a page that defines a surface no other page
+    defines. ``base`` is (pages path, committed base workdir)."""
+    from collections import defaultdict
+    from datetime import timedelta
+
+    d = tmp_path_factory.mktemp("relink")
+    t = pq.read_table(os.path.join(corpus_dir, "pages.parquet"))
+    page_urls = t.column("url").to_pylist()
+    pairs, definers = defaultdict(set), defaultdict(set)
+    for r in full_build["defs"].select(
+        "url", norm_expr(F.col("surface")).alias("s"), "etype"
+    ).collect():
+        pairs[r.url].add((r.s, r.etype))
+        definers[(r.s, r.etype)].add(r.url)
+    single = sorted(u for u in set(page_urls) if page_urls.count(u) == 1 and pairs[u])
+    held: set = set()
+    for u in single[::5]:
+        trial = held | {u}
+        if all(definers[p] - trial for v in trial for p in pairs[v]):
+            held = trial
+        if len(held) == 8:
+            break
+    assert len(held) == 8
+    recrawl = [u for u in single if u not in held][-3:]
+
+    in_held = [u in held for u in page_urls]
+    later = t.filter([u in recrawl for u in page_urls])
+    later = _with(
+        later,
+        warc_ts=[ts + timedelta(days=1) for ts in later.column("warc_ts").to_pylist()],
+    )
+    stable = pa.concat_tables([t.filter(in_held), later])
+    new_page = _with(
+        t.slice(0, 1),
+        url=["https://relink.example/new"],
+        html=[
+            b"<html><body><p>Zyxquor Labs is a company. "
+            b"Zyxquor Labs acquired Acme Corp.</p></body></html>"
+        ],
+    )
+    paths = {"held": held}
+    for name, extra in (("stable", []), ("new_surface", [new_page])):
+        paths[name] = str(d / f"{name}.parquet")
+        pq.write_table(pa.concat_tables([stable, *extra]), paths[name])
+        paths[f"full_{name}"] = str(d / f"full_{name}.parquet")
+        pq.write_table(pa.concat_tables([t, later, *extra]), paths[f"full_{name}"])
+    base_p = str(d / "base.parquet")
+    pq.write_table(t.filter([not h for h in in_held]), base_p)
+    wd = str(tmp_path_factory.mktemp("relink_base") / "wd")
+    PipelineRunner(spark, base_p, wd).run()
+    paths["base"] = (base_p, wd)
+    return paths
+
+
+@pytest.fixture(scope="module")
+def relink_full(spark, relink_inputs, tmp_path_factory):
+    """Row multisets of all ten stages of a full build over base + each
+    relink delta."""
+    return {
+        name: stage_rows(PipelineRunner(
+            spark, relink_inputs[f"full_{name}"],
+            str(tmp_path_factory.mktemp(f"wd_full_{name}")),
+        ).run())
+        for name in ("stable", "new_surface")
+    }
+
+
+@pytest.mark.parametrize("delta", ["stable", "new_surface"])
+def test_fold_global_path_equals_full(
+    spark, relink_inputs, relink_full, tmp_path_factory, fold_path, delta
+):
+    """A bucket-merge fold whose delta leaves canon unchanged takes the
+    scoped global tail; one whose delta defines a new surface, or any
+    Spark-swap fold, recomputes the global stages. Every stage equals a
+    full build either way, and every global manifest names the path."""
+    pages, base_wd = relink_inputs["base"]
+    wd = _clone(base_wd, tmp_path_factory, f"wd_relink_{delta}")
+    out = PipelineRunner(spark, pages, wd).run_incremental(relink_inputs[delta])
+    path = "scoped" if (delta, fold_path) == ("stable", "bucket-merge") else "recomputed"
+    assert runner_mod.LAST_FOLD_PATH == fold_path
+    assert runner_mod.LAST_GLOBALS_PATH == path
+    assert {s: _manifest(wd, s)["globals"] for s in _GLOBALS} == dict.fromkeys(
+        _GLOBALS, path
+    )
+    assert stage_rows(out) == relink_full[delta]
+    _assert_bucketed(spark, wd, _manifest(wd, "docs")["n_buckets"])
 
 
 def test_legacy_workdir_takes_spark_swap_then_bucket_merge(
@@ -265,9 +393,9 @@ def test_legacy_workdir_takes_spark_swap_then_bucket_merge(
         halves[1]
     )
     assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
-    assert all(_manifest(wd, s)["n_buckets"] == 5 for s in _NARROW)
+    assert all(_manifest(wd, s)["n_buckets"] == 5 for s in _NARROW + _RELINKED)
     _assert_bucketed(spark, wd, 5)
-    assert (_edge_set(out["edges"]), _node_set(out["nodes"])) == full_sets
+    assert stage_rows(out) == full_sets
 
 
 def test_bucket_merge_keeps_int96_timestamps(spark, tmp_path):
