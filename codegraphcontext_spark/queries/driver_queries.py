@@ -13,15 +13,33 @@ Determinism rules for oracle parity:
   * every LIMIT has a total tie-break ordering, identical on both sides,
   * cross-engine hashing uses md5 (identical lowercase hex in Spark & DuckDB),
   * no engine-specific float summation orders feeding unrounded outputs.
+
+Shared fragments: a mechanism used by more than one query has one
+definition here; a new query reuses it instead of copying its text.
+  * oracle CTEs: _TOKS_CTE, _moments_cte / _LANG_HITS_SQL / _QUAL_CTE
+    (text-quality moments and score), _SHINGLE_CTE, _SHINGLE_PAIRS_CTE
+    (df-capped truth pairs), _DUP_QUAL_CTE, _SIG_CTE / _BANDS_SQL (MinHash
+    signatures and bands), _EMB_CTE, _IVF_ASSIGN_CTE, _PQ_CODES_CTE,
+    _rerank_sql (exact-cosine re-rank) and _MKV_T_CTE (event transition
+    pairs); graph_queries.py adds _G_CTE, _G_REC_CTE, _und_cte,
+    _OPEN_PAIRS_SQL and _REL_E2_CTE.
+  * Spark twins: _moments / _lang_hit_cols / _lang_pred / _QUALITY_SQL,
+    _df_capped + _pair_counts, _sig_bands, _query_vec / _cos / _cos_top,
+    _block_pair_grid + _block_dsq (block-pair GEMM self-join),
+    _transition_counts + _markov_power; graph_queries.py adds _open_edges,
+    _open_triples, _undirected, _und_degree and _name_of. Shared
+    intermediates are memoized per session through kernels.memo (the
+    ensure_* seams).
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernels import frontier_bfs, pin, simple_paths
+from .kernels import frontier_bfs, memo, pin, simple_paths
 
 # closed term dictionary — the E11-analog entity dictionary over documents
 DICT_TERMS = [
@@ -111,6 +129,58 @@ def _dict_tokens(docs: DataFrame) -> DataFrame:
     return _fan_out(docs).select("doc_id", F.explode(kept).alias("term"))
 
 
+def _lang_hit_cols() -> list:
+    """Per-doc en/de/fr stopword votes — the Spark twin of _LANG_HITS_SQL."""
+    return [
+        F.sum(F.col("term").isin(*words).cast("int")).alias(f"{lang}_hits")
+        for lang, words in (
+            ("en", ("the", "a", "of")),
+            ("de", ("der", "die", "und")),
+            ("fr", ("le", "la", "et")),
+        )
+    ]
+
+
+def _lang_pred():
+    """Language-ID heuristic over the votes: the most voted language, ties
+    to en > de > fr, 'unknown' without a vote."""
+    return (
+        F.when(
+            (F.col("en_hits") >= F.col("de_hits"))
+            & (F.col("en_hits") >= F.col("fr_hits"))
+            & (F.col("en_hits") > 0),
+            "en",
+        )
+        .when(
+            (F.col("de_hits") >= F.col("fr_hits")) & (F.col("de_hits") > 0),
+            "de",
+        )
+        .when(F.col("fr_hits") > 0, "fr")
+        .otherwise("unknown")
+    )
+
+
+def _moments(toks: DataFrame, *extra) -> DataFrame:
+    """Per-doc text-quality moments (n_tokens, stops, alpha, then
+    ``extra``) — the Spark twin of _moments_cte."""
+    return toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.sum(F.col("term").isin(STOPWORDS).cast("int")).alias("stops"),
+        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
+        *extra,
+    )
+
+
+# The quality score over the moments: length credit + alpha-token ratio +
+# in-band stopword-ratio bonus, in thousandths.
+_QUAL_SQL = (
+    "LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens"
+    " + CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40"
+    " THEN 300 ELSE 0 END"
+)
+_QUALITY_SQL = f"CAST({_QUAL_SQL} AS BIGINT)"
+
+
 def _mentions(docs: DataFrame) -> DataFrame:
     """distinct (doc_id, term) restricted to the dictionary."""
     return _dict_tokens(docs).distinct()
@@ -124,6 +194,40 @@ _MENT_CTE = (
     _TOKS_CTE
     + f", mentions AS (SELECT DISTINCT doc_id, term FROM toks WHERE term IN {_TERMS_SQL})"
 )
+
+# Per-document text-quality moments over toks (m): token count, stopword
+# and alphabetic hits, plus extra columns such as the en/de/fr votes the
+# language-ID heuristic reads. _QUAL_CTE adds the quality score q.
+_LANG_HITS_SQL = """SUM(CASE WHEN term IN ('the', 'a', 'of')
+                     THEN 1 ELSE 0 END) AS en_hits,
+                 SUM(CASE WHEN term IN ('der', 'die', 'und')
+                     THEN 1 ELSE 0 END) AS de_hits,
+                 SUM(CASE WHEN term IN ('le', 'la', 'et')
+                     THEN 1 ELSE 0 END) AS fr_hits"""
+
+
+def _moments_cte(*extra: str, pad: int = 21) -> str:
+    """The m CTE with ``extra`` SQL columns after alpha. ``pad`` is the
+    column of alpha's THEN line (the two oracle layouts in use)."""
+    cols = ",\n                 ".join((
+        f"SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)\n"
+        "                   AS stops",
+        "SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')\n"
+        f"{' ' * pad}THEN 1 ELSE 0 END) AS alpha",
+        *extra,
+    ))
+    return (
+        "m AS (SELECT doc_id, COUNT(*) AS n_tokens,\n                 "
+        f"{cols}\n          FROM toks GROUP BY doc_id)"
+    )
+
+
+_QUAL_CTE = _moments_cte(pad=26) + """,
+    q AS (SELECT doc_id,
+                 LEAST(n_tokens, 200) * 2 + alpha * 300 // n_tokens
+                 + CASE WHEN stops * 100 // n_tokens BETWEEN 2 AND 40
+                        THEN 300 ELSE 0 END AS qual
+          FROM m)"""
 
 
 # =============================================================================
@@ -551,10 +655,44 @@ def _shingles(docs: DataFrame) -> DataFrame:
 
 _SHINGLE_DF_CAP = 20  # drop shingles appearing in more docs (boilerplate)
 
+def _df_capped(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows whose shingle is in at most _SHINGLE_DF_CAP
+    docs — the Spark twin of the oracle's keep/shk CTEs."""
+    keep = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .where(F.col("_df") <= _SHINGLE_DF_CAP)
+        .select("shingle")
+    )
+    return sh.join(keep, on="shingle", how="left_semi")
 
-@_q(
-    "dedup_shingle_pairs",
-    f"""{_SHINGLE_CTE},
+
+def _pair_counts(sh: DataFrame) -> DataFrame:
+    """Columns doc_a, doc_b, n_shared, na, nb over a capped shingle table:
+    shared shingles per doc pair (at least 2) beside each doc's shingle
+    count — the Spark twin of the oracle's sizes/pairs CTEs."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .where(F.col("n_shared") >= 2)
+    )
+    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na")
+    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb")
+    return pairs.join(sa, on="doc_a").join(sb, on="doc_b")
+
+
+# The df-capped truth-pair CTEs (keep/shk/sizes/pairs): shared shingle
+# counts per doc pair, before any oracle scores or thresholds them.
+_SHINGLE_PAIRS_CTE = f"""{_SHINGLE_CTE},
     keep AS (SELECT shingle FROM sh GROUP BY shingle
              HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
     shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
@@ -562,7 +700,12 @@ _SHINGLE_DF_CAP = 20  # drop shingles appearing in more docs (boilerplate)
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
       FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
+      GROUP BY 1, 2)"""
+
+
+@_q(
+    "dedup_shingle_pairs",
+    f"""{_SHINGLE_PAIRS_CTE}
     SELECT p.doc_a, p.doc_b, p.n_shared,
            CAST(p.n_shared * 1000000 // (sa.n + sb.n - p.n_shared) AS BIGINT)
              AS jaccard_x1e6
@@ -588,35 +731,12 @@ def _shingle_pairs_from(sh: DataFrame) -> DataFrame:
     """The df-capped inverted-index pair join over a (doc_id, shingle)
     frame — shared by dedup_shingle_pairs and er_blocking_quality so the
     audit reuses one shingle scan instead of re-exploding the corpus."""
-    keep = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") <= _SHINGLE_DF_CAP)
-        .select("shingle")
-    )
     # materialize the capped shingle table ONCE: it feeds the sizes agg and
     # BOTH sides of the pair self-join — without this the shingle explode
     # recomputes 4x (measured 15s -> ~6s at sf0.1)
-    sh = sh.join(keep, on="shingle", how="left_semi").localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= 2)
-    )
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na")
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb")
+    sh = _df_capped(sh).localCheckpoint(eager=True)
     return (
-        pairs.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
+        _pair_counts(sh)
         .select(
             "doc_a",
             "doc_b",
@@ -632,6 +752,14 @@ _N_MINHASH_Q = 4
 
 _MINHASH_SQL_COLS = ", ".join(
     f"list_min(list_transform(shingles, s -> md5('{k}:' || s))) AS h{k}"
+    for k in range(_N_MINHASH_Q)
+)
+# MinHash signatures per doc (agg/sig) and their band union (one row per
+# (band, signature value, doc)) — the LSH blocking input.
+_SIG_CTE = f"""agg AS (SELECT doc_id, list(shingle) AS shingles FROM sh GROUP BY doc_id),
+    sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM agg)"""
+_BANDS_SQL = " UNION ALL ".join(
+    f"SELECT {k} AS band, h{k} AS sig_v, doc_id FROM sig"
     for k in range(_N_MINHASH_Q)
 )
 
@@ -652,6 +780,18 @@ def dedup_minhash_sig(spark, sf_dir):
     100 TB-safe shape. The oracle's collect-then-list_min form is the same
     min over the same distinct-shingle set."""
     return ensure_minhash_sig(spark, sf_dir)
+
+
+def _sig_bands(sig: DataFrame) -> DataFrame:
+    """(band, sig_v, doc_id): one row per MinHash band of each signature —
+    the Spark twin of _BANDS_SQL."""
+    bands = None
+    for k in range(_N_MINHASH_Q):
+        b = sig.select(
+            F.lit(k).alias("band"), F.col(f"h{k}").alias("sig_v"), "doc_id"
+        )
+        bands = b if bands is None else bands.unionByName(b)
+    return bands
 
 
 def _minhash_from(sh: DataFrame) -> DataFrame:
@@ -675,21 +815,14 @@ def _minhash_from(sh: DataFrame) -> DataFrame:
 # identical, only the storage medium changes.
 # ---------------------------------------------------------------------------
 
-_ENSURE_CACHE: dict = {}
-
 
 def _ensure_df(
     spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    # the resolved table loader rides in the cache key so a test that
+    # the resolved table loader rides in the memo key so a test that
     # monkeypatches `_t` (hand-built documents) gets a fresh build, not a
     # stale memo of the real corpus — and vice versa
-    key = (spark.sparkContext.applicationId, sf_dir, tag, _t)
-    df = _ENSURE_CACHE.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=True)
-        _ENSURE_CACHE[key] = df
-    return df
+    return memo(spark, (sf_dir, tag, _t), build)
 
 
 def ensure_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -732,10 +865,9 @@ def ensure_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "dedup_lsh_buckets",
     f"""{_SHINGLE_CTE},
-    agg AS (SELECT doc_id, list(shingle) AS shingles FROM sh GROUP BY doc_id),
-    sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM agg),
+    {_SIG_CTE},
     bands AS (
-      {" UNION ALL ".join(f"SELECT {k} AS band, h{k} AS sig_v, doc_id FROM sig" for k in range(_N_MINHASH_Q))}
+      {_BANDS_SQL}
     )
     SELECT band, sig_v, COUNT(*) AS n_docs FROM bands
     GROUP BY band, sig_v HAVING COUNT(*) >= 2""",
@@ -745,14 +877,8 @@ def dedup_lsh_buckets(spark, sf_dir):
     step of MinHash-LSH dedup (bounded output; the pair join happens inside
     buckets at full scale)."""
     sig = dedup_minhash_sig(spark, sf_dir)
-    bands = None
-    for k in range(_N_MINHASH_Q):
-        b = sig.select(
-            F.lit(k).alias("band"), F.col(f"h{k}").alias("sig_v"), "doc_id"
-        )
-        bands = b if bands is None else bands.unionByName(b)
     return (
-        bands.groupBy("band", "sig_v")
+        _sig_bands(sig).groupBy("band", "sig_v")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .where(F.col("n_docs") >= 2)
     )
@@ -1012,6 +1138,25 @@ _EMB_CTE = (
     "generate_subscripts(embedding, 1) AS i FROM embeddings)"
 )
 
+
+def _rerank_sql(cte: str, src: str, k: int, group: str = "1") -> str:
+    """Exact-cosine re-rank oracle tail (dot/na/nb): the candidates in
+    ``src`` (``"cand c"`` or ``"short s"``) scored against query vector 0,
+    top ``k`` by rounded cosine with vec_id tie-break."""
+    alias = src.split()[1]
+    return f"""{cte} AS (
+      SELECT b.vec_id,
+             SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot,
+             SQRT(SUM(CAST(a.x AS DOUBLE) * CAST(a.x AS DOUBLE))) AS na,
+             SQRT(SUM(CAST(b.x AS DOUBLE) * CAST(b.x AS DOUBLE))) AS nb
+      FROM e a
+      JOIN e b ON a.i = b.i AND a.vec_id = 0
+      JOIN {src} ON b.vec_id = {alias}.vec_id
+      GROUP BY {group})
+    SELECT vec_id, CAST(ROUND(dot / (na * nb) * 1e6) AS BIGINT) AS cos_x1e6
+    FROM {cte} ORDER BY cos_x1e6 DESC, vec_id ASC LIMIT {k}"""
+
+
 # Vector math runs as Arrow-batched pandas UDFs (numpy BLAS), NOT interpreted
 # higher-order-function lambdas: F.aggregate/F.zip_with evaluate one
 # interpreted expression tree per array element, ~100x slower than a
@@ -1022,30 +1167,51 @@ import pandas as pd  # noqa: E402
 from pyspark.sql.functions import pandas_udf  # noqa: E402
 
 # pandas_udf registration needs an active session -> create lazily, memoized.
-_UDF_CACHE: dict[str, Callable] = {}
+@functools.cache
+def _norm_udf():
+    @pandas_udf("double")
+    def norm(v: pd.Series) -> pd.Series:
+        m = np.stack(v.to_numpy()).astype("float64")
+        return pd.Series(np.sqrt((m * m).sum(axis=1)))
+
+    return norm
 
 
-def _norm_udf(*cols):
-    if "norm" not in _UDF_CACHE:
-        @pandas_udf("double")
-        def norm(v: pd.Series) -> pd.Series:
-            m = np.stack(v.to_numpy()).astype("float64")
-            return pd.Series(np.sqrt((m * m).sum(axis=1)))
+@functools.cache
+def _dot_udf():
+    @pandas_udf("double")
+    def dot(a: pd.Series, b: pd.Series) -> pd.Series:
+        ma = np.stack(a.to_numpy()).astype("float64")
+        mb = np.stack(b.to_numpy()).astype("float64")
+        return pd.Series((ma * mb).sum(axis=1))
 
-        _UDF_CACHE["norm"] = norm
-    return _UDF_CACHE["norm"](*cols)
+    return dot
 
 
-def _dot_udf(*cols):
-    if "dot" not in _UDF_CACHE:
-        @pandas_udf("double")
-        def dot(a: pd.Series, b: pd.Series) -> pd.Series:
-            ma = np.stack(a.to_numpy()).astype("float64")
-            mb = np.stack(b.to_numpy()).astype("float64")
-            return pd.Series((ma * mb).sum(axis=1))
+def _cos(a: str, b: str):
+    """Exact cosine of two array<double> columns (Arrow-batched numpy)."""
+    return _dot_udf()(a, b) / (_norm_udf()(a) * _norm_udf()(b))
 
-        _UDF_CACHE["dot"] = dot
-    return _UDF_CACHE["dot"](*cols)
+
+def _query_vec(emb: DataFrame) -> DataFrame:
+    """The query vector (vec_id 0) as a one-row ``q_emb`` frame."""
+    return emb.where(F.col("vec_id") == 0).select(
+        F.col("embedding").alias("q_emb")
+    )
+
+
+def _cos_top(cand: DataFrame, k: int, *cols: str) -> DataFrame:
+    """Exact-cosine re-rank: the top ``k`` candidates by rounded cosine of
+    ``embedding`` against ``q_emb``, vec_id tie-break — the Spark twin of
+    ``_rerank_sql``. ``cols`` ride along between vec_id and cos_x1e6."""
+    cos = _cos("embedding", "q_emb")
+    return (
+        cand.select(
+            "vec_id", *cols, F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
+        )
+        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
+        .limit(k)
+    )
 
 
 @_q(
@@ -1061,7 +1227,7 @@ def embed_norms(spark, sf_dir):
     emb = _fan_out(_t(spark, sf_dir, "embeddings"))
     return emb.select(
         "vec_id",
-        F.round(_norm_udf("embedding") * 1e6).cast("bigint").alias("norm_x1e6"),
+        F.round(_norm_udf()("embedding") * 1e6).cast("bigint").alias("norm_x1e6"),
     )
 
 
@@ -1084,20 +1250,8 @@ def embed_topk_cosine(spark, sf_dir):
     Broadcast the query vector; Arrow-batched numpy dot/norm; Spark's
     TakeOrderedAndProject for the top-k (no full sort)."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cand = _fan_out(emb.where(F.col("vec_id") != 0)).crossJoin(F.broadcast(q))
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.select(
-            "vec_id", F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(10)
-    )
+    cand = _fan_out(emb.where(F.col("vec_id") != 0))
+    return _cos_top(cand.crossJoin(F.broadcast(_query_vec(emb))), 10)
 
 
 # =============================================================================
@@ -1151,22 +1305,8 @@ def text_langid(spark, sf_dir):
     """Language-ID heuristic: stopword-list voting with a deterministic
     priority tie-break (en > de > fr > unknown)."""
     toks = _tokens(_t(spark, sf_dir, "documents"))
-    hits = toks.groupBy("doc_id").agg(
-        F.sum(F.col("term").isin("the", "a", "of").cast("int")).alias("en_hits"),
-        F.sum(F.col("term").isin("der", "die", "und").cast("int")).alias("de_hits"),
-        F.sum(F.col("term").isin("le", "la", "et").cast("int")).alias("fr_hits"),
-    )
-    pred = (
-        F.when(
-            (F.col("en_hits") >= F.col("de_hits"))
-            & (F.col("en_hits") >= F.col("fr_hits"))
-            & (F.col("en_hits") > 0),
-            "en",
-        )
-        .when((F.col("de_hits") >= F.col("fr_hits")) & (F.col("de_hits") > 0), "de")
-        .when(F.col("fr_hits") > 0, "fr")
-        .otherwise("unknown")
-    )
+    hits = toks.groupBy("doc_id").agg(*_lang_hit_cols())
+    pred = _lang_pred()
     return hits.select("doc_id", pred.alias("lang_pred"))
 
 
@@ -1712,6 +1852,40 @@ def dedup_embed_cosine(spark, sf_dir):
     is impossible because blocks are hash-balanced. The exhaustive scan is
     the recall baseline; embed_ann_lsh's bucketing is the sub-linear path."""
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def gemm(same, lhs, rhs):
+        ml = np.stack(lhs["embedding"].to_numpy()).astype("float64")
+        mr = np.stack(rhs["embedding"].to_numpy()).astype("float64")
+        ml /= np.linalg.norm(ml, axis=1, keepdims=True)
+        mr /= np.linalg.norm(mr, axis=1, keepdims=True)
+        cos = ml @ mr.T
+        ia, jb = np.nonzero(cos >= 0.35)
+        va = lhs["vec_id"].to_numpy()[ia]
+        vb = rhs["vec_id"].to_numpy()[jb]
+        if same:  # same block appears on both sides: keep lower triangle
+            keep = va < vb
+            ia, jb, va, vb = ia[keep], jb[keep], va[keep], vb[keep]
+        cs = cos[ia, jb]
+        return pd.DataFrame({
+            "vec_a": np.minimum(va, vb),
+            "vec_b": np.maximum(va, vb),
+            "cos_x1e6": np.rint(cs * 1e6).astype("int64"),
+        })
+
+    return _block_pair_grid(
+        spark, emb, gemm, "vec_a long, vec_b long, cos_x1e6 long"
+    )
+
+
+_NB_BLOCKS = 8
+
+
+def _block_pair_grid(spark, emb: DataFrame, tile, schema: str) -> DataFrame:
+    """Block-pair GEMM self-join of (vec_id, embedding): vectors hash into
+    _NB_BLOCKS blocks, each of the B*(B+1)/2 block pairs ships both blocks
+    to one task, and ``tile(same_block, lhs, rhs)`` turns the two blocks'
+    pandas rows into output rows of ``schema``. A pair with an empty side
+    emits nothing."""
     v = emb.withColumn("blk", (F.col("vec_id") % _NB_BLOCKS).cast("int"))
     bp = spark.createDataFrame(
         [(i, j) for i in range(_NB_BLOCKS) for j in range(i, _NB_BLOCKS)],
@@ -1723,40 +1897,38 @@ def dedup_embed_cosine(spark, sf_dir):
     right = v.join(F.broadcast(bp), v["blk"] == bp["pj"]).select(
         "pi", "pj", F.lit("R").alias("side"), "vec_id", "embedding"
     )
+    cols = [c.split()[0] for c in schema.split(", ")]
 
-    def gemm(key, pdf):
-        pi, pj = key
+    def grid(key, pdf):
         lhs = pdf[pdf["side"] == "L"]
         rhs = pdf[pdf["side"] == "R"]
-        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos_x1e6": []})
         if len(lhs) == 0 or len(rhs) == 0:
-            return empty
-        ml = np.stack(lhs["embedding"].to_numpy()).astype("float64")
-        mr = np.stack(rhs["embedding"].to_numpy()).astype("float64")
-        ml /= np.linalg.norm(ml, axis=1, keepdims=True)
-        mr /= np.linalg.norm(mr, axis=1, keepdims=True)
-        cos = ml @ mr.T
-        ia, jb = np.nonzero(cos >= 0.35)
-        va = lhs["vec_id"].to_numpy()[ia]
-        vb = rhs["vec_id"].to_numpy()[jb]
-        if pi == pj:  # same block appears on both sides: keep lower triangle
-            keep = va < vb
-            ia, jb, va, vb = ia[keep], jb[keep], va[keep], vb[keep]
-        cs = cos[ia, jb]
-        return pd.DataFrame({
-            "vec_a": np.minimum(va, vb),
-            "vec_b": np.maximum(va, vb),
-            "cos_x1e6": np.rint(cs * 1e6).astype("int64"),
-        })
+            return pd.DataFrame({c: [] for c in cols})
+        return tile(key[0] == key[1], lhs, rhs)
 
     return (
         left.unionByName(right)
         .groupBy("pi", "pj")
-        .applyInPandas(gemm, "vec_a long, vec_b long, cos_x1e6 long")
+        .applyInPandas(grid, schema)
     )
 
 
-_NB_BLOCKS = 8
+def _block_dsq(same, lhs, rhs, emit) -> None:
+    """Exact int64 squared-L2 distance submatrix of two blocks over
+    round(x*1000) components; ``emit(ids_a, ids_b, d)`` sees it from the
+    left block and, unless both sides are one block, from the right."""
+    ml = np.rint(np.stack(lhs["embedding"].to_numpy()) * 1000.0).astype(np.int64)
+    mr = np.rint(np.stack(rhs["embedding"].to_numpy()) * 1000.0).astype(np.int64)
+    il = lhs["vec_id"].to_numpy()
+    ir = rhs["vec_id"].to_numpy()
+    d = (
+        (ml * ml).sum(axis=1)[:, None]
+        + (mr * mr).sum(axis=1)[None, :]
+        - 2 * (ml @ mr.T)
+    )
+    emit(il, ir, d)
+    if not same:  # the R block's points also need this tile's distances
+        emit(ir, il, d.T)
 
 
 # Deterministic sign-projection hyperplanes (4 planes x 64 dims of +-1 derived
@@ -1778,17 +1950,16 @@ _HP_SQL = ", ".join(
 _PLANES_NP = np.array(_LSH_PLANES)  # (n_planes, 64)
 
 
-def _lsh_bucket_udf(*cols):
-    if "lsh_bucket" not in _UDF_CACHE:
-        @pandas_udf("long")
-        def lsh_bucket(v: pd.Series) -> pd.Series:
-            m = np.stack(v.to_numpy()).astype("float64")
-            bits = (m @ _PLANES_NP.T) > 0  # sign of each plane projection
-            weights = 1 << np.arange(bits.shape[1])
-            return pd.Series((bits * weights).sum(axis=1).astype("int64"))
+@functools.cache
+def _lsh_bucket_udf():
+    @pandas_udf("long")
+    def lsh_bucket(v: pd.Series) -> pd.Series:
+        m = np.stack(v.to_numpy()).astype("float64")
+        bits = (m @ _PLANES_NP.T) > 0  # sign of each plane projection
+        weights = 1 << np.arange(bits.shape[1])
+        return pd.Series((bits * weights).sum(axis=1).astype("int64"))
 
-        _UDF_CACHE["lsh_bucket"] = lsh_bucket
-    return _UDF_CACHE["lsh_bucket"](*cols)
+    return lsh_bucket
 
 
 @_q(
@@ -1810,17 +1981,7 @@ def _lsh_bucket_udf(*cols):
                                 (16384),(32768)) t(v)),
     cand AS (SELECT bk.vec_id FROM buck bk JOIN probes p ON bk.bucket = p.bucket
              WHERE bk.vec_id <> 0),
-    d AS (
-      SELECT b.vec_id,
-             SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot,
-             SQRT(SUM(CAST(a.x AS DOUBLE) * CAST(a.x AS DOUBLE))) AS na,
-             SQRT(SUM(CAST(b.x AS DOUBLE) * CAST(b.x AS DOUBLE))) AS nb
-      FROM e a
-      JOIN e b ON a.i = b.i AND a.vec_id = 0
-      JOIN cand c ON b.vec_id = c.vec_id
-      GROUP BY 1)
-    SELECT vec_id, CAST(ROUND(dot / (na * nb) * 1e6) AS BIGINT) AS cos_x1e6
-    FROM d ORDER BY cos_x1e6 DESC, vec_id ASC LIMIT 5""",
+    {_rerank_sql("d", "cand c", 5)}""",
 )
 def embed_ann_lsh(spark, sf_dir):
     """LSH-bucketed ANN with MULTIPROBE (the scale path next to
@@ -1835,7 +1996,7 @@ def embed_ann_lsh(spark, sf_dir):
     probed buckets."""
     emb = _t(spark, sf_dir, "embeddings")
     bucketed = emb.select(
-        "vec_id", "embedding", _lsh_bucket_udf("embedding").alias("bucket")
+        "vec_id", "embedding", _lsh_bucket_udf()("embedding").alias("bucket")
     )
     flips = F.array(*[F.lit(0)] + [F.lit(1 << j) for j in range(16)])
     q = (
@@ -1850,20 +2011,29 @@ def embed_ann_lsh(spark, sf_dir):
         )
     )
     cand = bucketed.where(F.col("vec_id") != 0).join(F.broadcast(q), on="bucket")
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.select(
-            "vec_id", F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return _cos_top(cand, 5)
 
 
 _IVF_K = 8       # inverted-file cells (deterministic seed centroids)
 _IVF_NPROBE = 2  # cells probed per query
+
+# IVF cell assignment (cents/sims/assign): every vector's nearest seed
+# centroid by rounded cosine, ties to the lowest cent_id.
+_IVF_ASSIGN_CTE = f"""cents AS (SELECT vec_id AS cent_id, i, x FROM e WHERE vec_id < {_IVF_K}),
+    sims AS (
+      SELECT e.vec_id, c.cent_id,
+             CAST(ROUND(SUM(CAST(e.x AS DOUBLE) * CAST(c.x AS DOUBLE))
+               / (SQRT(SUM(CAST(e.x AS DOUBLE) * CAST(e.x AS DOUBLE)))
+                  * SQRT(SUM(CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE))))
+               * 1e6) AS BIGINT) AS cos_x1e6
+      FROM e JOIN cents c ON e.i = c.i
+      GROUP BY 1, 2),
+    assign AS (
+      SELECT vec_id, cent_id FROM (
+        SELECT vec_id, cent_id,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY cos_x1e6 DESC, cent_id ASC) AS rn
+        FROM sims) WHERE rn = 1)"""
 
 
 def _round_half_away(x):
@@ -1906,36 +2076,12 @@ def _assign_cell_udf(cn: "np.ndarray"):
 @_q(
     "embed_ann_ivf",
     f"""{_EMB_CTE},
-    cents AS (SELECT vec_id AS cent_id, i, x FROM e WHERE vec_id < {_IVF_K}),
-    sims AS (
-      SELECT e.vec_id, c.cent_id,
-             CAST(ROUND(SUM(CAST(e.x AS DOUBLE) * CAST(c.x AS DOUBLE))
-               / (SQRT(SUM(CAST(e.x AS DOUBLE) * CAST(e.x AS DOUBLE)))
-                  * SQRT(SUM(CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE))))
-               * 1e6) AS BIGINT) AS cos_x1e6
-      FROM e JOIN cents c ON e.i = c.i
-      GROUP BY 1, 2),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT vec_id, cent_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cos_x1e6 DESC, cent_id ASC) AS rn
-        FROM sims) WHERE rn = 1),
+    {_IVF_ASSIGN_CTE},
     probe AS (SELECT cent_id FROM sims WHERE vec_id = 0
               ORDER BY cos_x1e6 DESC, cent_id ASC LIMIT {_IVF_NPROBE}),
     cand AS (SELECT a.vec_id FROM assign a JOIN probe p USING (cent_id)
              WHERE a.vec_id <> 0),
-    d AS (
-      SELECT b.vec_id,
-             SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot,
-             SQRT(SUM(CAST(a.x AS DOUBLE) * CAST(a.x AS DOUBLE))) AS na,
-             SQRT(SUM(CAST(b.x AS DOUBLE) * CAST(b.x AS DOUBLE))) AS nb
-      FROM e a
-      JOIN e b ON a.i = b.i AND a.vec_id = 0
-      JOIN cand c ON b.vec_id = c.vec_id
-      GROUP BY 1)
-    SELECT vec_id, CAST(ROUND(dot / (na * nb) * 1e6) AS BIGINT) AS cos_x1e6
-    FROM d ORDER BY cos_x1e6 DESC, vec_id ASC LIMIT 10""",
+    {_rerank_sql("d", "cand c", 10)}""",
 )
 def embed_ann_ivf(spark, sf_dir):
     """IVF-style ANN (the coarse-quantizer scale path next to embed_ann_lsh's
@@ -1970,20 +2116,7 @@ def embed_ann_ivf(spark, sf_dir):
     cand = emb.withColumn("cell", assign_cell("embedding")).where(
         F.col("cell").isin(probe_cells) & (F.col("vec_id") != 0)
     )
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return _cos_top(cand.crossJoin(F.broadcast(_query_vec(emb))), 10)
 
 
 # =============================================================================
@@ -2030,19 +2163,9 @@ def text_quality(spark, sf_dir):
     alpha-token ratio (<=300) + in-band stopword-ratio bonus (300) — the
     filter column a pretraining pipeline thresholds on."""
     toks = _tokens(_t(spark, sf_dir, "documents"))
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.length("term")).alias("chars"),
-        F.sum(F.col("term").isin(STOPWORDS).cast("int")).alias("stops"),
-        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
-    )
-    return m.select(
+    return _moments(toks).select(
         "doc_id",
-        F.expr(
-            "CAST(LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens "
-            "+ CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40 "
-            "THEN 300 ELSE 0 END AS BIGINT)"
-        ).alias("quality_x1000"),
+        F.expr(_QUALITY_SQL).alias("quality_x1000"),
     )
 
 
@@ -2827,18 +2950,11 @@ def sample_stratified(spark, sf_dir):
 # exploded into C(n,2) pairs — same df-cap discipline as dedup_shingle_pairs.
 _CC_BUCKET_CAP = 64
 
-_CC_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT {k} AS band, h{k} AS sig_v, doc_id FROM sig"
-    for k in range(_N_MINHASH_Q)
-)
-
-
 @_q(
     "dedup_cc_clusters",
     f"""{_SHINGLE_CTE.replace("WITH ", "WITH RECURSIVE ", 1)},
-    agg AS (SELECT doc_id, list(shingle) AS shingles FROM sh GROUP BY doc_id),
-    sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM agg),
-    bands AS ({_CC_BANDS_SQL}),
+    {_SIG_CTE},
+    bands AS ({_BANDS_SQL}),
     bsz AS (SELECT band, sig_v, COUNT(*) AS n FROM bands GROUP BY band, sig_v),
     bok AS (SELECT b.band, b.sig_v, b.doc_id FROM bands b
             JOIN bsz USING (band, sig_v) WHERE n BETWEEN 2 AND {_CC_BUCKET_CAP}),
@@ -2889,12 +3005,7 @@ def _cc_cluster_map(spark, sf_dir) -> DataFrame:
     # subplan is re-evaluated ~5x (measured 25 s -> 7 s at sf0.1). Same
     # discipline a 100 TB run uses: signatures are written before pairing.
     sig = ensure_minhash_sig(spark, sf_dir)
-    bands = None
-    for k in range(_N_MINHASH_Q):
-        b = sig.select(
-            F.lit(k).alias("band"), F.col(f"h{k}").alias("sig_v"), "doc_id"
-        )
-        bands = b if bands is None else bands.unionByName(b)
+    bands = _sig_bands(sig)
     bsz = bands.groupBy("band", "sig_v").agg(F.count(F.lit(1)).alias("n"))
     bok = (
         bands.join(bsz, ["band", "sig_v"])
@@ -3562,21 +3673,7 @@ _SEM_T = 350000  # keep threshold: rounded cos_x1e6 >= T marks a semantic dup
 @_q(
     "dedup_semantic",
     f"""{_EMB_CTE},
-    cents AS (SELECT vec_id AS cent_id, i, x FROM e WHERE vec_id < {_IVF_K}),
-    sims AS (
-      SELECT e.vec_id, c.cent_id,
-             CAST(ROUND(SUM(CAST(e.x AS DOUBLE) * CAST(c.x AS DOUBLE))
-               / (SQRT(SUM(CAST(e.x AS DOUBLE) * CAST(e.x AS DOUBLE)))
-                  * SQRT(SUM(CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE))))
-               * 1e6) AS BIGINT) AS cos_x1e6
-      FROM e JOIN cents c ON e.i = c.i
-      GROUP BY 1, 2),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT vec_id, cent_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cos_x1e6 DESC, cent_id ASC) AS rn
-        FROM sims) WHERE rn = 1),
+    {_IVF_ASSIGN_CTE},
     pr AS (SELECT a.vec_id AS va, b.vec_id AS vb
            FROM assign a JOIN assign b
              ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id),
@@ -3635,7 +3732,7 @@ def dedup_semantic(spark, sf_dir):
         assigned.select(F.col("vec_id").alias("vb"),
                         F.col("embedding").alias("eb")), "vb"
     )
-    cos = _dot_udf("ea", "eb") / (_norm_udf("ea") * _norm_udf("eb"))
+    cos = _cos("ea", "eb")
     dup = (
         cand.select("vb", F.round(cos * 1e6).cast("bigint").alias("c"))
         .where(F.col("c") >= _SEM_T)
@@ -3982,16 +4079,9 @@ def embed_kmeans(spark, sf_dir):
 _PQ_M = 8    # subspaces (64-dim -> 8 x 8-dim)
 _PQ_KS = 16  # codes per subspace; codebook seed = the first 16 vectors
 
-
-def _pq_sql() -> str:
-    """PQ twin: quantize to int64, split dimensions into M subspaces, code
-    each (vector, subspace) as its nearest seed sub-centroid (exact integer
-    distance, ties to the lowest code), then rank non-query vectors by the
-    asymmetric distance — the sum over subspaces of the QUERY's distance to
-    each vector's code."""
-    d = 64 // _PQ_M
-    return f"""{_EMB_CTE},
-    eq AS (SELECT vec_id, (i - 1) // {d} AS s, i,
+# PQ codes (eq/cb/dsub/codes) plus the query's distance table qtab: int64
+# quantized subvectors coded to their nearest seed sub-centroid.
+_PQ_CODES_CTE = f"""eq AS (SELECT vec_id, (i - 1) // {64 // _PQ_M} AS s, i,
                   CAST(ROUND(CAST(x AS DOUBLE) * 1e6) AS BIGINT) AS xq
            FROM e),
     cb AS (SELECT vec_id AS code, s, i, xq FROM eq WHERE vec_id < {_PQ_KS}),
@@ -4004,7 +4094,17 @@ def _pq_sql() -> str:
         SELECT vec_id, s, code, ROW_NUMBER() OVER (
           PARTITION BY vec_id, s ORDER BY dst ASC, code ASC) AS rn
         FROM dsub) WHERE rn = 1),
-    qtab AS (SELECT s, code, dst FROM dsub WHERE vec_id = 0)
+    qtab AS (SELECT s, code, dst FROM dsub WHERE vec_id = 0)"""
+
+
+def _pq_sql() -> str:
+    """PQ twin: quantize to int64, split dimensions into M subspaces, code
+    each (vector, subspace) as its nearest seed sub-centroid (exact integer
+    distance, ties to the lowest code), then rank non-query vectors by the
+    asymmetric distance — the sum over subspaces of the QUERY's distance to
+    each vector's code."""
+    return f"""{_EMB_CTE},
+    {_PQ_CODES_CTE}
     SELECT c.vec_id, CAST(SUM(q.dst) AS BIGINT) AS adc_dist
     FROM codes c JOIN qtab q ON c.s = q.s AND c.code = q.code
     WHERE c.vec_id <> 0
@@ -4071,62 +4171,24 @@ _IVFPQ_R = 50  # ADC shortlist within the probed cells
 
 
 def _ivfpq_sql() -> str:
-    """IVF-PQ twin: the IVF leg's cell assignment + probe (verbatim from
-    embed_ann_ivf's CTEs) restricts the candidate set; the PQ leg's ADC
-    (verbatim from _pq_sql's CTEs) shortlists within it; exact cosine
-    re-ranks the shortlist."""
-    d = 64 // _PQ_M
+    """IVF-PQ twin: the IVF leg's cell assignment + probe (embed_ann_ivf's
+    _IVF_ASSIGN_CTE) restricts the candidate set; the PQ leg's ADC
+    (_pq_sql's _PQ_CODES_CTE) shortlists within it; exact cosine re-ranks
+    the shortlist."""
     return f"""{_EMB_CTE},
-    cents AS (SELECT vec_id AS cent_id, i, x FROM e WHERE vec_id < {_IVF_K}),
-    sims AS (
-      SELECT e.vec_id, c.cent_id,
-             CAST(ROUND(SUM(CAST(e.x AS DOUBLE) * CAST(c.x AS DOUBLE))
-               / (SQRT(SUM(CAST(e.x AS DOUBLE) * CAST(e.x AS DOUBLE)))
-                  * SQRT(SUM(CAST(c.x AS DOUBLE) * CAST(c.x AS DOUBLE))))
-               * 1e6) AS BIGINT) AS cos_x1e6
-      FROM e JOIN cents c ON e.i = c.i
-      GROUP BY 1, 2),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT vec_id, cent_id,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cos_x1e6 DESC, cent_id ASC) AS rn
-        FROM sims) WHERE rn = 1),
+    {_IVF_ASSIGN_CTE},
     probe AS (SELECT cent_id FROM sims WHERE vec_id = 0
               ORDER BY cos_x1e6 DESC, cent_id ASC LIMIT {_IVF_NPROBE}),
     cand AS (SELECT a.vec_id FROM assign a JOIN probe p USING (cent_id)
              WHERE a.vec_id <> 0),
-    eq AS (SELECT vec_id, (i - 1) // {d} AS s, i,
-                  CAST(ROUND(CAST(x AS DOUBLE) * 1e6) AS BIGINT) AS xq
-           FROM e),
-    cb AS (SELECT vec_id AS code, s, i, xq FROM eq WHERE vec_id < {_PQ_KS}),
-    dsub AS (
-      SELECT eq.vec_id, cb.s, cb.code,
-             CAST(SUM((eq.xq - cb.xq) * (eq.xq - cb.xq)) AS BIGINT) AS dst
-      FROM eq JOIN cb ON eq.i = cb.i GROUP BY 1, 2, 3),
-    codes AS (
-      SELECT vec_id, s, code FROM (
-        SELECT vec_id, s, code, ROW_NUMBER() OVER (
-          PARTITION BY vec_id, s ORDER BY dst ASC, code ASC) AS rn
-        FROM dsub) WHERE rn = 1),
-    qtab AS (SELECT s, code, dst FROM dsub WHERE vec_id = 0),
+    {_PQ_CODES_CTE},
     short AS (
       SELECT c.vec_id, CAST(SUM(q.dst) AS BIGINT) AS adc_dist
       FROM codes c
       JOIN qtab q ON c.s = q.s AND c.code = q.code
       JOIN cand ON c.vec_id = cand.vec_id
       GROUP BY 1 ORDER BY adc_dist ASC, c.vec_id ASC LIMIT {_IVFPQ_R}),
-    dd AS (
-      SELECT b.vec_id,
-             SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot,
-             SQRT(SUM(CAST(a.x AS DOUBLE) * CAST(a.x AS DOUBLE))) AS na,
-             SQRT(SUM(CAST(b.x AS DOUBLE) * CAST(b.x AS DOUBLE))) AS nb
-      FROM e a
-      JOIN e b ON a.i = b.i AND a.vec_id = 0
-      JOIN short s ON b.vec_id = s.vec_id
-      GROUP BY 1)
-    SELECT vec_id, CAST(ROUND(dot / (na * nb) * 1e6) AS BIGINT) AS cos_x1e6
-    FROM dd ORDER BY cos_x1e6 DESC, vec_id ASC LIMIT 10"""
+    {_rerank_sql("dd", "short s", 10)}"""
 
 
 @_q("embed_ivfpq", _ivfpq_sql())
@@ -4166,20 +4228,8 @@ def embed_ivfpq(spark, sf_dir):
         .limit(_IVFPQ_R)
         .select("vec_id")
     )
-    qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cand = emb.join(short, "vec_id", "left_semi").crossJoin(F.broadcast(qv))
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.select(
-            "vec_id", F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(10)
-    )
+    cand = emb.join(short, "vec_id", "left_semi")
+    return _cos_top(cand.crossJoin(F.broadcast(_query_vec(emb))), 10)
 
 
 @_q("embed_pq", _pq_sql())
@@ -4218,38 +4268,14 @@ def _pq_rerank_sql() -> str:
     """Twin of the refine step: the ADC shortlist CTEs are _pq_sql()'s,
     widened to LIMIT R; the shortlist then joins the raw components for the
     exact double-precision cosine (embed_topk_cosine's metric, verbatim)."""
-    d = 64 // _PQ_M
     return f"""{_EMB_CTE},
-    eq AS (SELECT vec_id, (i - 1) // {d} AS s, i,
-                  CAST(ROUND(CAST(x AS DOUBLE) * 1e6) AS BIGINT) AS xq
-           FROM e),
-    cb AS (SELECT vec_id AS code, s, i, xq FROM eq WHERE vec_id < {_PQ_KS}),
-    dsub AS (
-      SELECT eq.vec_id, cb.s, cb.code,
-             CAST(SUM((eq.xq - cb.xq) * (eq.xq - cb.xq)) AS BIGINT) AS dst
-      FROM eq JOIN cb ON eq.i = cb.i GROUP BY 1, 2, 3),
-    codes AS (
-      SELECT vec_id, s, code FROM (
-        SELECT vec_id, s, code, ROW_NUMBER() OVER (
-          PARTITION BY vec_id, s ORDER BY dst ASC, code ASC) AS rn
-        FROM dsub) WHERE rn = 1),
-    qtab AS (SELECT s, code, dst FROM dsub WHERE vec_id = 0),
+    {_PQ_CODES_CTE},
     short AS (
       SELECT c.vec_id
       FROM codes c JOIN qtab q ON c.s = q.s AND c.code = q.code
       WHERE c.vec_id <> 0
       GROUP BY 1 ORDER BY SUM(q.dst) ASC, vec_id ASC LIMIT {_PQ_R}),
-    dots AS (
-      SELECT b.vec_id,
-             SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot,
-             SQRT(SUM(CAST(a.x AS DOUBLE) * CAST(a.x AS DOUBLE))) AS na,
-             SQRT(SUM(CAST(b.x AS DOUBLE) * CAST(b.x AS DOUBLE))) AS nb
-      FROM e a
-      JOIN e b ON a.i = b.i AND a.vec_id = 0
-      JOIN short s ON b.vec_id = s.vec_id
-      GROUP BY b.vec_id)
-    SELECT vec_id, CAST(ROUND(dot / (na * nb) * 1e6) AS BIGINT) AS cos_x1e6
-    FROM dots ORDER BY cos_x1e6 DESC, vec_id ASC LIMIT 10"""
+    {_rerank_sql("dots", "short s", 10, group="b.vec_id")}"""
 
 
 @_q("embed_pq_rerank", _pq_rerank_sql())
@@ -4276,23 +4302,8 @@ def embed_pq_rerank(spark, sf_dir):
         .select("vec_id")
     )
     emb = _t(spark, sf_dir, "embeddings")
-    qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cand = (
-        emb.join(short, "vec_id", "left_semi")
-        .crossJoin(F.broadcast(qv))
-    )
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.select(
-            "vec_id", F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(10)
-    )
+    cand = emb.join(short, "vec_id", "left_semi")
+    return _cos_top(cand.crossJoin(F.broadcast(_query_vec(emb))), 10)
 
 
 # =============================================================================
@@ -5109,17 +5120,7 @@ _LSH2_VALUES = ",".join(f"({v})" for v in _LSH2_MASKS)
                FROM qb, (VALUES {_LSH2_VALUES}) t(v)),
     cand AS (SELECT bk.vec_id FROM buck bk JOIN probes p ON bk.bucket = p.bucket
              WHERE bk.vec_id <> 0),
-    d AS (
-      SELECT b.vec_id,
-             SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot,
-             SQRT(SUM(CAST(a.x AS DOUBLE) * CAST(a.x AS DOUBLE))) AS na,
-             SQRT(SUM(CAST(b.x AS DOUBLE) * CAST(b.x AS DOUBLE))) AS nb
-      FROM e a
-      JOIN e b ON a.i = b.i AND a.vec_id = 0
-      JOIN cand c ON b.vec_id = c.vec_id
-      GROUP BY 1)
-    SELECT vec_id, CAST(ROUND(dot / (na * nb) * 1e6) AS BIGINT) AS cos_x1e6
-    FROM d ORDER BY cos_x1e6 DESC, vec_id ASC LIMIT 10""",
+    {_rerank_sql("d", "cand c", 10)}""",
 )
 def embed_ann_lsh_wide(spark, sf_dir):
     """embed_ann_lsh's recall knob turned up: probe every bucket within
@@ -5136,7 +5137,7 @@ def embed_ann_lsh_wide(spark, sf_dir):
     probed buckets, top-k via TakeOrderedAndProject."""
     emb = _t(spark, sf_dir, "embeddings")
     bucketed = emb.select(
-        "vec_id", "embedding", _lsh_bucket_udf("embedding").alias("bucket")
+        "vec_id", "embedding", _lsh_bucket_udf()("embedding").alias("bucket")
     )
     flips = F.array(*[F.lit(v) for v in _LSH2_MASKS])
     q = (
@@ -5151,16 +5152,7 @@ def embed_ann_lsh_wide(spark, sf_dir):
         )
     )
     cand = bucketed.where(F.col("vec_id") != 0).join(F.broadcast(q), on="bucket")
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.select(
-            "vec_id", F.round(cos * 1e6).cast("bigint").alias("cos_x1e6")
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return _cos_top(cand, 10)
 
 
 # =============================================================================
@@ -5241,23 +5233,9 @@ def events_heavy_hitters(spark, sf_dir):
 _ERB_JX = 500_000
 _ERB_BUCKET_CAP = 64
 
-_ERB_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT {k} AS band, h{k} AS sig_v, doc_id FROM sig"
-    for k in range(_N_MINHASH_Q)
-)
-
-
 @_q(
     "er_blocking_quality",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+    f"""{_SHINGLE_PAIRS_CTE},
     truth AS (
       SELECT p.doc_a, p.doc_b
       FROM pairs p
@@ -5265,9 +5243,8 @@ _ERB_BANDS_SQL = " UNION ALL ".join(
       JOIN sizes sb ON sb.doc_id = p.doc_b
       WHERE p.n_shared >= 2
         AND p.n_shared * 1000000 // (sa.n + sb.n - p.n_shared) >= {_ERB_JX}),
-    agg AS (SELECT doc_id, list(shingle) AS shingles FROM sh GROUP BY doc_id),
-    sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM agg),
-    bands AS ({_ERB_BANDS_SQL}),
+    {_SIG_CTE},
+    bands AS ({_BANDS_SQL}),
     bsz AS (SELECT band, sig_v, COUNT(*) AS n FROM bands GROUP BY 1, 2),
     kept AS (
       SELECT b.band, b.sig_v, b.doc_id FROM bands b
@@ -5318,13 +5295,8 @@ def er_blocking_quality(spark, sf_dir):
         .localCheckpoint(eager=True)
     )
     sig = ensure_minhash_sig(spark, sf_dir)
-    bands = None
-    for k in range(_N_MINHASH_Q):
-        b = sig.select(
-            F.lit(k).alias("band"), F.col(f"h{k}").alias("sig_v"), "doc_id"
-        )
-        bands = b if bands is None else bands.unionByName(b)
-    bands = bands.localCheckpoint(eager=True)  # feeds bsz AND the kept join
+    # feeds bsz AND the kept join
+    bands = _sig_bands(sig).localCheckpoint(eager=True)
     bsz = (
         bands.groupBy("band", "sig_v")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -5371,18 +5343,7 @@ def er_blocking_quality(spark, sf_dir):
 @_q(
     "curate_train_labels",
     f"""{_TOKS_CTE},
-    m AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                 SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)
-                   AS stops,
-                 SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')
-                     THEN 1 ELSE 0 END) AS alpha,
-                 SUM(CASE WHEN term IN ('the', 'a', 'of')
-                     THEN 1 ELSE 0 END) AS en_hits,
-                 SUM(CASE WHEN term IN ('der', 'die', 'und')
-                     THEN 1 ELSE 0 END) AS de_hits,
-                 SUM(CASE WHEN term IN ('le', 'la', 'et')
-                     THEN 1 ELSE 0 END) AS fr_hits
-          FROM toks GROUP BY doc_id),
+    {_moments_cte(_LANG_HITS_SQL)},
     lab AS (SELECT m.doc_id,
                    CAST(LEAST(n_tokens, 200) * 2
                         + alpha * 300 // n_tokens
@@ -5432,40 +5393,11 @@ def curate_train_labels(spark, sf_dir):
     total (label, doc_id)."""
     docs = _t(spark, sf_dir, "documents")
     toks = _tokens(docs)
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.col("term").isin(STOPWORDS).cast("int")).alias("stops"),
-        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
-        F.sum(F.col("term").isin("the", "a", "of").cast("int")).alias(
-            "en_hits"
-        ),
-        F.sum(F.col("term").isin("der", "die", "und").cast("int")).alias(
-            "de_hits"
-        ),
-        F.sum(F.col("term").isin("le", "la", "et").cast("int")).alias(
-            "fr_hits"
-        ),
-    )
+    m = _moments(toks, *_lang_hit_cols())
     lab = m.join(docs.select("doc_id", "lang"), "doc_id").select(
         "doc_id",
-        F.expr(
-            "CAST(LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens "
-            "+ CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40 "
-            "THEN 300 ELSE 0 END AS BIGINT)"
-        ).alias("quality_x1000"),
-        F.when(
-            (F.col("en_hits") >= F.col("de_hits"))
-            & (F.col("en_hits") >= F.col("fr_hits"))
-            & (F.col("en_hits") > 0),
-            F.lit("en"),
-        )
-        .when(
-            (F.col("de_hits") >= F.col("fr_hits")) & (F.col("de_hits") > 0),
-            F.lit("de"),
-        )
-        .when(F.col("fr_hits") > 0, F.lit("fr"))
-        .otherwise(F.lit("unknown"))
-        .alias("lang_pred"),
+        F.expr(_QUALITY_SQL).alias("quality_x1000"),
+        _lang_pred().alias("lang_pred"),
         "lang",
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
         (
@@ -5515,15 +5447,70 @@ def curate_train_labels(spark, sf_dir):
         .orderBy(F.desc("label"), F.asc("doc_id"))
     )
 
-@_q(
-    "events_markov_transitions",
-    """WITH s AS (
+# Event transition pairs (s/t): a LEAD over each user's events in
+# (ts, event_id) order, counted per (from_type, to_type).
+_MKV_T_CTE = """WITH s AS (
       SELECT user_id, event_type AS from_type,
              LEAD(event_type) OVER (PARTITION BY user_id
                                     ORDER BY ts, event_id) AS to_type
       FROM events WHERE user_id IS NOT NULL),
     t AS (SELECT from_type, to_type, COUNT(*) AS n FROM s
-          WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+          WHERE to_type IS NOT NULL GROUP BY from_type, to_type)"""
+
+
+def _transition_counts(spark, sf_dir) -> DataFrame:
+    """(from_type, to_type, n): consecutive event pairs per user in
+    (ts, event_id) order, null users dropped — the Spark twin of
+    _MKV_T_CTE."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        _t(spark, sf_dir, "events")
+        .where("user_id IS NOT NULL")
+        .select(
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
+        )
+        .where(F.col("to_type").isNotNull())
+        .groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _markov_power(cells) -> tuple:
+    """Integer power iteration over collected transition counts: returns
+    (states, count matrix c, row sums r, pi) with pi in millionths after
+    _MKV_ITERS steps. Every term truncates and pi renormalizes to 1e6, as
+    in the oracle's _MKV_CTES; a state with no outgoing transition keeps
+    its mass."""
+    states = sorted(
+        {c["from_type"] for c in cells} | {c["to_type"] for c in cells}
+    )
+    idx = {s: i for i, s in enumerate(states)}
+    k = len(states)
+    c = [[0] * k for _ in range(k)]
+    for row in cells:
+        c[idx[row["from_type"]]][idx[row["to_type"]]] = row["n"]
+    r = [sum(c[i]) for i in range(k)]
+    pi = [1_000_000 // k] * k
+    for _ in range(_MKV_ITERS):
+        nxt = [0] * k
+        for i in range(k):
+            if r[i] == 0:
+                nxt[i] += pi[i]  # absorbing state keeps its mass
+                continue
+            for j in range(k):
+                if c[i][j]:
+                    nxt[j] += (pi[i] * c[i][j]) // r[i]
+        tot = sum(nxt)
+        pi = [v * 1_000_000 // tot for v in nxt]
+    return states, c, r, pi
+
+
+@_q(
+    "events_markov_transitions",
+    f"""{_MKV_T_CTE},
     r AS (SELECT from_type, SUM(n) AS row_n FROM t GROUP BY from_type)
     SELECT t.from_type, t.to_type, CAST(t.n AS BIGINT) AS n,
            CAST(t.n * 1000000 // r.row_n AS BIGINT) AS p_x1e6
@@ -5545,17 +5532,7 @@ def events_markov_transitions(spark, sf_dir):
     grammar-sized (|event_type|^2), and a grammar-sized self-join for row
     normalization. Probability is scaled-integer floor division, exact on
     both engines."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    s = ev.select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    ).where(F.col("to_type").isNotNull())
-    t = s.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    t = _transition_counts(spark, sf_dir)
     r = t.groupBy("from_type").agg(F.sum("n").alias("row_n"))
     return (
         t.join(r, "from_type")
@@ -5628,15 +5605,10 @@ def search_hybrid_rrf(spark, sf_dir):
     from pyspark.sql.window import Window
 
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
     cand = _fan_out(emb.where(F.col("vec_id") != 0)).crossJoin(
-        F.broadcast(q)
+        F.broadcast(_query_vec(emb))
     )
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
+    cos = _cos("embedding", "q_emb")
     vshort = (
         cand.select(
             F.col("vec_id").alias("doc_id"),
@@ -5987,18 +5959,7 @@ _CLF_D = 256  # hashed-feature buckets; the weight table is <= _CLF_D rows
 # bucket weights -> per-doc scores. curate_clf_score appends the score
 # projection; curate_calibration appends the decile-bucketed audit.
 _CLF_SC_CTE = f"""{_TOKS_CTE},
-    m AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                 SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)
-                   AS stops,
-                 SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')
-                     THEN 1 ELSE 0 END) AS alpha,
-                 SUM(CASE WHEN term IN ('the', 'a', 'of')
-                     THEN 1 ELSE 0 END) AS en_hits,
-                 SUM(CASE WHEN term IN ('der', 'die', 'und')
-                     THEN 1 ELSE 0 END) AS de_hits,
-                 SUM(CASE WHEN term IN ('le', 'la', 'et')
-                     THEN 1 ELSE 0 END) AS fr_hits
-          FROM toks GROUP BY doc_id),
+    {_moments_cte(_LANG_HITS_SQL)},
     lab AS (SELECT m.doc_id,
                    CASE WHEN CAST(LEAST(n_tokens, 200) * 2
                              + alpha * 300 // n_tokens
@@ -6076,39 +6037,9 @@ def _clf_doc_scores(spark, sf_dir):
     audit) — one definition, so the two queries can never drift."""
     docs = _t(spark, sf_dir, "documents")
     toks = _tokens(docs)
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.col("term").isin(STOPWORDS).cast("int")).alias("stops"),
-        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
-        F.sum(F.col("term").isin("the", "a", "of").cast("int")).alias(
-            "en_hits"
-        ),
-        F.sum(F.col("term").isin("der", "die", "und").cast("int")).alias(
-            "de_hits"
-        ),
-        F.sum(F.col("term").isin("le", "la", "et").cast("int")).alias(
-            "fr_hits"
-        ),
-    )
-    quality = F.expr(
-        "CAST(LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens "
-        "+ CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40 "
-        "THEN 300 ELSE 0 END AS BIGINT)"
-    )
-    lang_pred = (
-        F.when(
-            (F.col("en_hits") >= F.col("de_hits"))
-            & (F.col("en_hits") >= F.col("fr_hits"))
-            & (F.col("en_hits") > 0),
-            F.lit("en"),
-        )
-        .when(
-            (F.col("de_hits") >= F.col("fr_hits")) & (F.col("de_hits") > 0),
-            F.lit("de"),
-        )
-        .when(F.col("fr_hits") > 0, F.lit("fr"))
-        .otherwise(F.lit("unknown"))
-    )
+    m = _moments(toks, *_lang_hit_cols())
+    quality = F.expr(_QUALITY_SQL)
+    lang_pred = _lang_pred()
     lab = m.join(docs.select("doc_id", "lang"), "doc_id").select(
         "doc_id",
         ((quality >= 600) & (lang_pred == F.col("lang")))
@@ -6324,15 +6255,7 @@ def events_bloom_prune(spark, sf_dir):
 
 @_q(
     "dedup_containment",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
+    f"""{_SHINGLE_PAIRS_CTE}
     SELECT p.doc_a, p.doc_b, CAST(p.n_shared AS BIGINT) AS n_shared,
            CAST(p.n_shared * 1000000 // sa.n AS BIGINT) AS cont_a_x1e6,
            CAST(p.n_shared * 1000000 // sb.n AS BIGINT) AS cont_b_x1e6
@@ -6361,39 +6284,11 @@ def dedup_containment(spark, sf_dir):
 
     Reference analog: none (dedup-family addendum; completes resemblance
     [Jaccard] with containment from the same Broder framework)."""
-    sh = ensure_shingles(spark, sf_dir)
-    keep = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .where(F.col("_df") <= _SHINGLE_DF_CAP)
-        .select("shingle")
-    )
-    sh = sh.join(keep, on="shingle", how="left_semi").localCheckpoint(
+    sh = _df_capped(ensure_shingles(spark, sf_dir)).localCheckpoint(
         eager=True
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= 2)
-    )
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-        "n", "na"
-    )
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-        "n", "nb"
-    )
     return (
-        pairs.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
+        _pair_counts(sh)
         .select(
             "doc_a",
             "doc_b",
@@ -7146,7 +7041,6 @@ def curate_chunk(spark, sf_dir):
 # arithmetic on both engines (epoch-aligned, the alignment F.window uses) —
 # no engine timestamp-zone semantics in the hash path.
 _HOP_US = 1_800_000_000
-_HOP_PER_WIN = 2
 
 
 @_q(
@@ -7315,21 +7209,14 @@ def embed_mrl_overlap(spark, sf_dir):
     TakeOrderedAndProject (top-k partials per partition, never a global
     sort); the final join is 10x10."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
     cand = (
         _fan_out(emb.where(F.col("vec_id") != 0))
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(_query_vec(emb)))
         .withColumn("t_emb", F.slice("embedding", 1, _MRL_DIM))
         .withColumn("qt_emb", F.slice("q_emb", 1, _MRL_DIM))
     )
-    cf = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    ct = _dot_udf("t_emb", "qt_emb") / (
-        _norm_udf("t_emb") * _norm_udf("qt_emb")
-    )
+    cf = _cos("embedding", "q_emb")
+    ct = _cos("t_emb", "qt_emb")
     scored = cand.select(
         "vec_id",
         F.round(cf * 1e6).cast("bigint").alias("cos_full_x1e6"),
@@ -8556,12 +8443,7 @@ def events_abtest(spark, sf_dir):
 @_q(
     "curate_budget_select",
     f"""{_TOKS_CTE},
-    m AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                 SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)
-                   AS stops,
-                 SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')
-                     THEN 1 ELSE 0 END) AS alpha
-          FROM toks GROUP BY doc_id),
+    {_moments_cte()},
     q AS (SELECT doc_id, n_tokens,
                  CAST(LEAST(n_tokens, 200) * 2 + alpha * 300 // n_tokens
                       + CASE WHEN stops * 100 // n_tokens BETWEEN 2 AND 40
@@ -8621,19 +8503,11 @@ def curate_budget_select(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     toks = _tokens(docs)
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.col("term").isin(STOPWORDS).cast("int")).alias("stops"),
-        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
-    )
+    m = _moments(toks)
     q = m.select(
         "doc_id",
         "n_tokens",
-        F.expr(
-            "CAST(LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens "
-            "+ CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40 "
-            "THEN 300 ELSE 0 END AS BIGINT)"
-        ).alias("qual"),
+        F.expr(_QUALITY_SQL).alias("qual"),
     ).localCheckpoint(eager=True)  # feeds budget, histogram, AND boundary
     b = q.agg(F.expr("CAST(SUM(n_tokens) DIV 4 AS BIGINT)").alias("budget"))
     hist = q.groupBy("qual").agg(
@@ -9054,37 +8928,17 @@ def embed_binary_rerank(spark, sf_dir):
         .orderBy(F.asc("hamming"), F.asc("vec_id"))
         .limit(_BH_SHORTLIST)
     )
-    qv = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
+    cand = emb.join(F.broadcast(short), "vec_id").crossJoin(
+        F.broadcast(_query_vec(emb))
     )
-    cand = (
-        emb.join(F.broadcast(short), "vec_id")
-        .crossJoin(F.broadcast(qv))
-    )
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
-    return (
-        cand.select(
-            "vec_id",
-            "hamming",
-            F.round(cos * 1e6).cast("bigint").alias("cos_x1e6"),
-        )
-        .orderBy(F.desc("cos_x1e6"), F.asc("vec_id"))
-        .limit(10)
-    )
+    return _cos_top(cand, 10, "hamming")
 
 
 @_q(
     "text_langid_eval",
     f"""{_TOKS_CTE},
     v AS (SELECT doc_id,
-                 SUM(CASE WHEN term IN ('the', 'a', 'of')
-                     THEN 1 ELSE 0 END) AS en_hits,
-                 SUM(CASE WHEN term IN ('der', 'die', 'und')
-                     THEN 1 ELSE 0 END) AS de_hits,
-                 SUM(CASE WHEN term IN ('le', 'la', 'et')
-                     THEN 1 ELSE 0 END) AS fr_hits
+                 {_LANG_HITS_SQL}
           FROM toks GROUP BY doc_id),
     p AS (SELECT doc_id,
                  CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits
@@ -9120,31 +8974,8 @@ def text_langid_eval(spark, sf_dir):
     Reference analog: none (text-analysis addendum; eval family)."""
     docs = _t(spark, sf_dir, "documents")
     toks = _tokens(docs)
-    hits = toks.groupBy("doc_id").agg(
-        F.sum(F.col("term").isin("the", "a", "of").cast("int")).alias(
-            "en_hits"
-        ),
-        F.sum(F.col("term").isin("der", "die", "und").cast("int")).alias(
-            "de_hits"
-        ),
-        F.sum(F.col("term").isin("le", "la", "et").cast("int")).alias(
-            "fr_hits"
-        ),
-    )
-    pred = (
-        F.when(
-            (F.col("en_hits") >= F.col("de_hits"))
-            & (F.col("en_hits") >= F.col("fr_hits"))
-            & (F.col("en_hits") > 0),
-            "en",
-        )
-        .when(
-            (F.col("de_hits") >= F.col("fr_hits")) & (F.col("de_hits") > 0),
-            "de",
-        )
-        .when(F.col("fr_hits") > 0, "fr")
-        .otherwise("unknown")
-    )
+    hits = toks.groupBy("doc_id").agg(*_lang_hit_cols())
+    pred = _lang_pred()
     p = hits.select("doc_id", pred.alias("lang_pred"))
     cm = (
         p.join(docs.select("doc_id", F.col("lang").alias("lang_true")),
@@ -9959,15 +9790,7 @@ _DEDUP_SWEEP_TS = (500_000, 600_000, 700_000, 800_000, 900_000)
 
 @_q(
     "curate_dedup_sweep",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+    f"""{_SHINGLE_PAIRS_CTE},
     sim AS (
       SELECT p.doc_b,
              MAX(p.n_shared * 1000000 // (sa.n + sb.n - p.n_shared))
@@ -10037,15 +9860,7 @@ def curate_dedup_sweep(spark, sf_dir):
 
 @_q(
     "er_pair_features",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+    f"""{_SHINGLE_PAIRS_CTE},
     jp AS (
       SELECT p.doc_a, p.doc_b, p.n_shared,
              p.n_shared * 1000000 // (sa.n + sb.n - p.n_shared) AS j_x1e6
@@ -10393,13 +10208,7 @@ _MKV_CTES, _MKV_LAST = _mkv_iter_ctes()
 
 @_q(
     "events_markov_stationary",
-    f"""WITH s AS (
-      SELECT user_id, event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS to_type
-      FROM events WHERE user_id IS NOT NULL),
-    t AS (SELECT from_type, to_type, COUNT(*) AS n FROM s
-          WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+    f"""{_MKV_T_CTE},
     r AS (SELECT from_type, SUM(n) AS row_n FROM t GROUP BY from_type),
     {_MKV_CTES}
     SELECT s AS event_type, CAST(v AS BIGINT) AS pi_x1e6
@@ -10426,42 +10235,8 @@ def events_markov_stationary(spark, sf_dir):
 
     Reference analog: none (events addendum; closes the Markov family:
     transitions = the model, stationary = its equilibrium readout)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        _t(spark, sf_dir, "events")
-        .where("user_id IS NOT NULL")
-        .select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .where(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    cells = pairs.collect()  # grammar-sized |types|^2 — model, not data
-    states = sorted(
-        {c["from_type"] for c in cells} | {c["to_type"] for c in cells}
-    )
-    idx = {s: i for i, s in enumerate(states)}
-    k = len(states)
-    c = [[0] * k for _ in range(k)]
-    for row in cells:
-        c[idx[row["from_type"]]][idx[row["to_type"]]] = row["n"]
-    r = [sum(c[i]) for i in range(k)]
-    pi = [1_000_000 // k] * k
-    for _ in range(_MKV_ITERS):
-        nxt = [0] * k
-        for i in range(k):
-            if r[i] == 0:
-                nxt[i] += pi[i]  # absorbing state keeps its mass
-                continue
-            for j in range(k):
-                if c[i][j]:
-                    nxt[j] += (pi[i] * c[i][j]) // r[i]
-        tot = sum(nxt)
-        pi = [v * 1_000_000 // tot for v in nxt]
+    cells = _transition_counts(spark, sf_dir).collect()  # |types|^2 — model
+    states, _, _, pi = _markov_power(cells)
     return spark.createDataFrame(
         sorted(zip(states, pi)), "event_type string, pi_x1e6 bigint"
     )
@@ -11388,13 +11163,7 @@ def text_heaps_law(spark, sf_dir):
 
 @_q(
     "events_entropy_rate",
-    f"""WITH s AS (
-      SELECT user_id, event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS to_type
-      FROM events WHERE user_id IS NOT NULL),
-    t AS (SELECT from_type, to_type, COUNT(*) AS n FROM s
-          WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+    f"""{_MKV_T_CTE},
     r AS (SELECT from_type, SUM(n) AS row_n FROM t GROUP BY from_type),
     {_MKV_CTES},
     hrow AS (SELECT t.from_type,
@@ -11425,42 +11194,9 @@ def events_entropy_rate(spark, sf_dir):
 
     Reference analog: none (events addendum; closes the Markov trio:
     transitions -> stationary -> entropy rate)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        _t(spark, sf_dir, "events")
-        .where("user_id IS NOT NULL")
-        .select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .where(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    cells = pairs.collect()  # grammar-sized — model, not data
-    states = sorted(
-        {c["from_type"] for c in cells} | {c["to_type"] for c in cells}
-    )
-    idx = {s: i for i, s in enumerate(states)}
+    cells = _transition_counts(spark, sf_dir).collect()  # |types|^2 — model
+    states, c, r, pi = _markov_power(cells)
     k = len(states)
-    c = [[0] * k for _ in range(k)]
-    for row in cells:
-        c[idx[row["from_type"]]][idx[row["to_type"]]] = row["n"]
-    r = [sum(c[i]) for i in range(k)]
-    pi = [1_000_000 // k] * k
-    for _ in range(_MKV_ITERS):
-        nxt = [0] * k
-        for i in range(k):
-            if r[i] == 0:
-                nxt[i] += pi[i]
-                continue
-            for j in range(k):
-                if c[i][j]:
-                    nxt[j] += (pi[i] * c[i][j]) // r[i]
-        tot = sum(nxt)
-        pi = [v * 1_000_000 // tot for v in nxt]
     import math
 
     hr = 0.0
@@ -11649,13 +11385,7 @@ def orders_basket_rules(spark, sf_dir):
 
 @_q(
     "events_markov_acc",
-    """WITH s AS (
-      SELECT user_id, event_type AS from_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS to_type
-      FROM events WHERE user_id IS NOT NULL),
-    t AS (SELECT from_type, to_type, COUNT(*) AS n FROM s
-          WHERE to_type IS NOT NULL GROUP BY from_type, to_type),
+    f"""{_MKV_T_CTE},
     pred AS (SELECT from_type, to_type AS pred_type FROM (
                SELECT from_type, to_type,
                       ROW_NUMBER() OVER (PARTITION BY from_type
@@ -11689,19 +11419,8 @@ def events_markov_acc(spark, sf_dir):
     family — measure-your-operator discipline, like embed_ann_eval)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = (
-        _t(spark, sf_dir, "events")
-        .where("user_id IS NOT NULL")
-        .select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .where(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)  # feeds argmax + scoring
-    )
+    # feeds argmax + scoring
+    t = _transition_counts(spark, sf_dir).localCheckpoint(eager=True)
     w_rank = Window.partitionBy("from_type").orderBy(
         F.desc("n"), F.asc("to_type")
     )
@@ -11773,11 +11492,7 @@ def text_lang_mixing(spark, sf_dir):
     Reference analog: none (text addendum; the uncertainty readout over
     text_langid / text_langid_eval's point predictions)."""
     toks = _tokens(_t(spark, sf_dir, "documents"))
-    hits = toks.groupBy("doc_id").agg(
-        F.sum(F.col("term").isin("the", "a", "of").cast("int")).alias("en_hits"),
-        F.sum(F.col("term").isin("der", "die", "und").cast("int")).alias("de_hits"),
-        F.sum(F.col("term").isin("le", "la", "et").cast("int")).alias("fr_hits"),
-    )
+    hits = toks.groupBy("doc_id").agg(*_lang_hit_cols())
     r = hits.select(
         F.greatest("en_hits", "de_hits", "fr_hits").alias("best"),
         (
@@ -11807,17 +11522,9 @@ def text_lang_mixing(spark, sf_dir):
     )
 
 
-@_q(
-    "curate_dup_quality_xtab",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+# Near-dup flag (dup: Jaccard >= 0.5, the later doc of each pair) beside
+# the quality score q, for the curation audits that cross the two.
+_DUP_QUAL_CTE = f"""{_SHINGLE_PAIRS_CTE},
     dup AS (SELECT DISTINCT p.doc_b AS doc_id FROM pairs p
             JOIN sizes sa ON sa.doc_id = p.doc_a
             JOIN sizes sb ON sb.doc_id = p.doc_b
@@ -11826,17 +11533,12 @@ def text_lang_mixing(spark, sf_dir):
                   >= 500000),
     toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
              FROM documents),
-    m AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                 SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)
-                   AS stops,
-                 SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')
-                          THEN 1 ELSE 0 END) AS alpha
-          FROM toks GROUP BY doc_id),
-    q AS (SELECT doc_id,
-                 LEAST(n_tokens, 200) * 2 + alpha * 300 // n_tokens
-                 + CASE WHEN stops * 100 // n_tokens BETWEEN 2 AND 40
-                        THEN 300 ELSE 0 END AS qual
-          FROM m),
+    {_QUAL_CTE}"""
+
+
+@_q(
+    "curate_dup_quality_xtab",
+    f"""{_DUP_QUAL_CTE},
     med AS (SELECT qual AS m FROM (
               SELECT qual, ROW_NUMBER() OVER (ORDER BY qual, doc_id) AS rn,
                      COUNT(*) OVER () AS n
@@ -11880,20 +11582,10 @@ def curate_dup_quality_xtab(spark, sf_dir):
         .withColumn("is_dup", F.lit(1))
     )
     toks = _tokens(docs)
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.col("term").isin(*STOPWORDS).cast("int")).alias("stops"),
-        F.sum(
-            F.col("term").rlike("^[A-Za-z]+$").cast("int")
-        ).alias("alpha"),
-    )
+    m = _moments(toks)
     q = m.select(
         "doc_id",
-        F.expr(
-            "LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens"
-            " + CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40"
-            " THEN 300 ELSE 0 END"
-        ).alias("qual"),
+        F.expr(_QUAL_SQL).alias("qual"),
     ).localCheckpoint(eager=True)  # feeds the median rank AND the cells
     ranked = q.select(
         "qual",
@@ -11925,15 +11617,7 @@ def curate_dup_quality_xtab(spark, sf_dir):
 
 @_q(
     "dedup_minhash_calibration",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+    f"""{_SHINGLE_PAIRS_CTE},
     jp AS (SELECT p.doc_a, p.doc_b,
                   p.n_shared * 1000000 // (sa.n + sb.n - p.n_shared)
                     AS j_x1e6
@@ -12013,34 +11697,7 @@ def dedup_minhash_calibration(spark, sf_dir):
 
 @_q(
     "curate_source_profile",
-    f"""{_SHINGLE_CTE},
-    keep AS (SELECT shingle FROM sh GROUP BY shingle
-             HAVING COUNT(*) <= {_SHINGLE_DF_CAP}),
-    shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shk GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-      FROM shk a JOIN shk b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    dup AS (SELECT DISTINCT p.doc_b AS doc_id FROM pairs p
-            JOIN sizes sa ON sa.doc_id = p.doc_a
-            JOIN sizes sb ON sb.doc_id = p.doc_b
-            WHERE p.n_shared >= 2
-              AND p.n_shared * 1000000 // (sa.n + sb.n - p.n_shared)
-                  >= 500000),
-    toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-             FROM documents),
-    m AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                 SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)
-                   AS stops,
-                 SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')
-                          THEN 1 ELSE 0 END) AS alpha
-          FROM toks GROUP BY doc_id),
-    q AS (SELECT doc_id,
-                 LEAST(n_tokens, 200) * 2 + alpha * 300 // n_tokens
-                 + CASE WHEN stops * 100 // n_tokens BETWEEN 2 AND 40
-                        THEN 300 ELSE 0 END AS qual
-          FROM m)
+    f"""{_DUP_QUAL_CTE}
     SELECT d.source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(q.qual) * 1000 // COUNT(*) AS BIGINT)
@@ -12076,18 +11733,10 @@ def curate_source_profile(spark, sf_dir):
         .withColumn("is_dup", F.lit(1))
     )
     toks = _tokens(docs)
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.col("term").isin(*STOPWORDS).cast("int")).alias("stops"),
-        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
-    )
+    m = _moments(toks)
     q = m.select(
         "doc_id",
-        F.expr(
-            "LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens"
-            " + CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40"
-            " THEN 300 ELSE 0 END"
-        ).alias("qual"),
+        F.expr(_QUAL_SQL).alias("qual"),
     )
     return (
         docs.select("doc_id", "source")
@@ -12164,42 +11813,9 @@ def embed_intrinsic_dim(spark, sf_dir):
 
     Reference analog: none (embedding addendum; the geometry diagnostic
     beside embed_covariance / embed_pca_power's moment view)."""
-    import numpy as np
-    import pandas as pd
-
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    v = emb.withColumn("blk", (F.col("vec_id") % _NB_BLOCKS).cast("int"))
-    bp = spark.createDataFrame(
-        [(i, j) for i in range(_NB_BLOCKS) for j in range(i, _NB_BLOCKS)],
-        "pi int, pj int",
-    )
-    left = v.join(F.broadcast(bp), v["blk"] == bp["pi"]).select(
-        "pi", "pj", F.lit("L").alias("side"), "vec_id", "embedding"
-    )
-    right = v.join(F.broadcast(bp), v["blk"] == bp["pj"]).select(
-        "pi", "pj", F.lit("R").alias("side"), "vec_id", "embedding"
-    )
 
-    def _block_two_nn(key, pdf):
-        pi, pj = key
-        lhs = pdf[pdf["side"] == "L"]
-        rhs = pdf[pdf["side"] == "R"]
-        empty = pd.DataFrame({"i": [], "dsq": []})
-        if len(lhs) == 0 or len(rhs) == 0:
-            return empty
-        ml = np.rint(
-            np.stack(lhs["embedding"].to_numpy()) * 1000.0
-        ).astype(np.int64)
-        mr = np.rint(
-            np.stack(rhs["embedding"].to_numpy()) * 1000.0
-        ).astype(np.int64)
-        il = lhs["vec_id"].to_numpy()
-        ir = rhs["vec_id"].to_numpy()
-        d = (
-            (ml * ml).sum(axis=1)[:, None]
-            + (mr * mr).sum(axis=1)[None, :]
-            - 2 * (ml @ mr.T)
-        )
+    def _block_two_nn(same, lhs, rhs):
         out_i, out_d = [], []
 
         def emit(ids_a, ids_b, dm):
@@ -12216,9 +11832,7 @@ def embed_intrinsic_dim(spark, sf_dir):
                     out_i.append(int(vid))
                     out_d.append(int(t))
 
-        emit(il, ir, d)
-        if pi != pj:  # the R block's points also need this tile's distances
-            emit(ir, il, d.T)
+        _block_dsq(same, lhs, rhs, emit)
         return pd.DataFrame(
             {
                 "i": pd.Series(out_i, dtype="int64"),
@@ -12226,11 +11840,7 @@ def embed_intrinsic_dim(spark, sf_dir):
             }
         )
 
-    cand = (
-        left.unionByName(right)
-        .groupBy("pi", "pj")
-        .applyInPandas(_block_two_nn, "i long, dsq long")
-    )
+    cand = _block_pair_grid(spark, emb, _block_two_nn, "i long, dsq long")
     two = (
         cand.groupBy("i")
         .agg(F.array_sort(F.collect_list("dsq")).alias("ds"))
@@ -12295,42 +11905,9 @@ def embed_hubness(spark, sf_dir):
     Reference analog: none (embedding addendum; with embed_intrinsic_dim
     the pair of geometry diagnostics run before trusting any ANN
     index)."""
-    import numpy as np
-    import pandas as pd
-
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    v = emb.withColumn("blk", (F.col("vec_id") % _NB_BLOCKS).cast("int"))
-    bp = spark.createDataFrame(
-        [(i, j) for i in range(_NB_BLOCKS) for j in range(i, _NB_BLOCKS)],
-        "pi int, pj int",
-    )
-    left = v.join(F.broadcast(bp), v["blk"] == bp["pi"]).select(
-        "pi", "pj", F.lit("L").alias("side"), "vec_id", "embedding"
-    )
-    right = v.join(F.broadcast(bp), v["blk"] == bp["pj"]).select(
-        "pi", "pj", F.lit("R").alias("side"), "vec_id", "embedding"
-    )
 
-    def _block_knn(key, pdf):
-        pi, pj = key
-        lhs = pdf[pdf["side"] == "L"]
-        rhs = pdf[pdf["side"] == "R"]
-        empty = pd.DataFrame({"i": [], "j": [], "dsq": []})
-        if len(lhs) == 0 or len(rhs) == 0:
-            return empty
-        ml = np.rint(
-            np.stack(lhs["embedding"].to_numpy()) * 1000.0
-        ).astype(np.int64)
-        mr = np.rint(
-            np.stack(rhs["embedding"].to_numpy()) * 1000.0
-        ).astype(np.int64)
-        il = lhs["vec_id"].to_numpy()
-        ir = rhs["vec_id"].to_numpy()
-        d = (
-            (ml * ml).sum(axis=1)[:, None]
-            + (mr * mr).sum(axis=1)[None, :]
-            - 2 * (ml @ mr.T)
-        )
+    def _block_knn(same, lhs, rhs):
         oi, oj, od = [], [], []
 
         def emit(ids_a, ids_b, dm):
@@ -12347,9 +11924,7 @@ def embed_hubness(spark, sf_dir):
                     oj.append(int(js[t]))
                     od.append(int(vals[t]))
 
-        emit(il, ir, d)
-        if pi != pj:
-            emit(ir, il, d.T)
+        _block_dsq(same, lhs, rhs, emit)
         return pd.DataFrame(
             {
                 "i": pd.Series(oi, dtype="int64"),
@@ -12358,11 +11933,7 @@ def embed_hubness(spark, sf_dir):
             }
         )
 
-    cand = (
-        left.unionByName(right)
-        .groupBy("pi", "pj")
-        .applyInPandas(_block_knn, "i long, j long, dsq long")
-    )
+    cand = _block_pair_grid(spark, emb, _block_knn, "i long, j long, dsq long")
     from pyspark.sql import Window
 
     w_rank = Window.partitionBy("i").orderBy(F.asc("dsq"), F.asc("j"))
@@ -12760,17 +12331,7 @@ def text_df_drift(spark, sf_dir):
 @_q(
     "curate_uncertain_batch",
     f"""{_TOKS_CTE},
-    m AS (SELECT doc_id, COUNT(*) AS n_tokens,
-                 SUM(CASE WHEN term IN {_STOP_SQL} THEN 1 ELSE 0 END)
-                   AS stops,
-                 SUM(CASE WHEN regexp_matches(term, '^[A-Za-z]+$')
-                          THEN 1 ELSE 0 END) AS alpha
-          FROM toks GROUP BY doc_id),
-    q AS (SELECT doc_id,
-                 LEAST(n_tokens, 200) * 2 + alpha * 300 // n_tokens
-                 + CASE WHEN stops * 100 // n_tokens BETWEEN 2 AND 40
-                        THEN 300 ELSE 0 END AS qual
-          FROM m),
+    {_QUAL_CTE},
     med AS (SELECT qual AS cutoff FROM (
               SELECT qual, ROW_NUMBER() OVER (ORDER BY qual, doc_id) AS rn,
                      COUNT(*) OVER () AS n
@@ -12800,18 +12361,10 @@ def curate_uncertain_batch(spark, sf_dir):
     from pyspark.sql import Window
 
     toks = _tokens(_t(spark, sf_dir, "documents"))
-    m = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.col("term").isin(*STOPWORDS).cast("int")).alias("stops"),
-        F.sum(F.col("term").rlike("^[A-Za-z]+$").cast("int")).alias("alpha"),
-    )
+    m = _moments(toks)
     q = m.select(
         "doc_id",
-        F.expr(
-            "LEAST(n_tokens, 200) * 2 + alpha * 300 DIV n_tokens"
-            " + CASE WHEN stops * 100 DIV n_tokens BETWEEN 2 AND 40"
-            " THEN 300 ELSE 0 END"
-        ).alias("qual"),
+        F.expr(_QUAL_SQL).alias("qual"),
     ).localCheckpoint(eager=True)  # feeds the median rank AND the margins
     ranked = q.select(
         "qual",

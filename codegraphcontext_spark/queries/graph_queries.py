@@ -37,6 +37,7 @@ from .kernels import (
     label_round,
     lazy,
     matvec,
+    memo,
     pin,
     simple_paths,
     small_graph,
@@ -111,6 +112,80 @@ _G_CTE = (
 # reference graph_builder.py:302-329,389-399).
 _CLOSED_PREDS = ("MENTIONS", "LINKS_TO", "HAS_TYPE")
 _CLOSED_SQL = "('MENTIONS', 'LINKS_TO', 'HAS_TYPE')"
+
+# The oracle header for recursive CTEs, one CTE per line.
+_G_REC_CTE = f"""WITH RECURSIVE
+    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
+    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet'))"""
+
+
+def _und_cte(name: str = "und", pad: int = 28) -> str:
+    """The undirected open-relation edge set: one (a < b) row per node pair
+    joined by an open predicate, self-loops dropped. ``pad`` is the column
+    of the GREATEST line (the two oracle layouts in use)."""
+    return (
+        f"{name} AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,\n"
+        f"{' ' * pad}GREATEST(subj_id, obj_id) AS b\n"
+        "            FROM edges\n"
+        f"            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id)"
+    )
+
+
+_UND_CTE = _und_cte()
+
+# The directed open-relation adjacency (the oracle twin of _open_adj), and
+# its symmetrized edge list e2 for the undirected reachability oracles.
+_OPEN_PAIRS_SQL = (
+    "SELECT DISTINCT subj_id, obj_id FROM edges\n"
+    f"            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id"
+)
+_REL_E2_CTE = f"""rel AS ({_OPEN_PAIRS_SQL}),
+    e2 AS (SELECT subj_id AS s, obj_id AS d FROM rel
+           UNION ALL SELECT obj_id AS s, subj_id AS d FROM rel)"""
+
+
+def _open_edges(edges: DataFrame) -> DataFrame:
+    """Edges under an open relation predicate, self-loops dropped."""
+    return edges.where(
+        ~F.col("pred").isin(*_CLOSED_PREDS)
+        & (F.col("subj_id") != F.col("obj_id"))
+    )
+
+
+def _open_triples(edges: DataFrame) -> DataFrame:
+    """Distinct (subj_id, pred, obj_id) facts under open predicates."""
+    return (
+        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
+        .select("subj_id", "pred", "obj_id")
+        .distinct()
+    )
+
+
+def _name_of(names: DataFrame, key: str, alias: str):
+    """Chain step for ``DataFrame.transform``: broadcast-join the
+    (node_id, name) table on ``key`` and keep the name as ``alias``."""
+    return lambda df: df.join(
+        F.broadcast(names.withColumnRenamed("node_id", key)), key
+    ).withColumnRenamed("name", alias)
+
+
+def _undirected(rel: DataFrame) -> DataFrame:
+    """One (a < b) row per node pair of ``rel`` — the Spark twin of
+    ``_und_cte`` when ``rel`` is ``_open_edges(edges)``."""
+    return rel.select(
+        F.least("subj_id", "obj_id").alias("a"),
+        F.greatest("subj_id", "obj_id").alias("b"),
+    ).distinct()
+
+
+def _und_degree(und: DataFrame, name: str = "deg") -> DataFrame:
+    """(v, ``name``): each node's degree in an undirected (a, b) edge set."""
+    return (
+        und.select(F.col("a").alias("v"))
+        .unionByName(und.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
 
 
 @_q(
@@ -342,9 +417,7 @@ def kg_graph_entities_by_type(spark, sf_dir):
 
 @_q(
     "kg_graph_closure",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    f"""{_G_REC_CTE},
     ent AS (SELECT node_id FROM nodes
             WHERE node_type = 'Entity' AND name = 'acme corp'),
     adj AS (SELECT DISTINCT subj_id, obj_id FROM edges
@@ -569,9 +642,7 @@ def kg_graph_edge_sentences(spark, sf_dir):
 
 @_q(
     "kg_graph_call_chain",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    f"""{_G_REC_CTE},
     adj AS (SELECT DISTINCT subj_id, obj_id FROM edges
             WHERE pred NOT IN {_CLOSED_SQL}),
     s AS (SELECT node_id FROM nodes
@@ -967,10 +1038,7 @@ def kg_graph_entity_complexity(spark, sf_dir):
 @_q(
     "kg_graph_triangles",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                            GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_UND_CTE},
     tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
             FROM und e1
             JOIN und e2 ON e2.a = e1.b
@@ -997,23 +1065,8 @@ def kg_graph_triangles(spark, sf_dir):
     same triangles with the naive a<b<c formulation, so the contract test
     proves the orientations equivalent."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    und = _undirected(_open_edges(edges))
+    deg = _und_degree(und)
     # Orient each edge from lower (deg, id) rank to higher. The degree
     # table is O(|V|) — unbounded at web scale — so no forced broadcast
     # hint: AQE broadcasts it while it fits, shuffle-joins beyond that.
@@ -1365,13 +1418,8 @@ def kg_graph_label_prop(spark, sf_dir):
 
 @_q(
     "kg_graph_components",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
-    e2 AS (SELECT subj_id AS s, obj_id AS d FROM rel
-           UNION ALL SELECT obj_id AS s, subj_id AS d FROM rel),
+    f"""{_G_REC_CTE},
+    {_REL_E2_CTE},
     reach(src, dst) AS (
       SELECT s, s FROM (SELECT DISTINCT s FROM e2) u
       UNION
@@ -1407,10 +1455,7 @@ def kg_graph_components(spark, sf_dir):
 
     nodes, edges = ensure_graph(spark, sf_dir)
     rel = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
+        _open_edges(edges)
         .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .distinct()
     )
@@ -1737,14 +1782,7 @@ def _open_witnesses(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(und, w): the undirected open-relation adjacency (s, d) and its
     cap-filtered witness table (z, d, dz) — z's neighbors d with z's degree
     dz attached, hubs above _AA_WITNESS_CAP excluded as witnesses."""
-    rel = (
-        edges.where(
-            (~F.col("pred").isin(*_CLOSED_PREDS))
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select("subj_id", "obj_id")
-        .distinct()
-    )
+    rel = _open_edges(edges).select("subj_id", "obj_id").distinct()
     und = (
         rel.select(F.col("subj_id").alias("s"), F.col("obj_id").alias("d"))
         .union(rel.select(F.col("obj_id").alias("s"), F.col("subj_id").alias("d")))
@@ -1785,8 +1823,7 @@ def aa_suggest(edges: DataFrame, seed_id: str) -> DataFrame:
 @_q(
     "kg_graph_link_predict",
     f"""{_G_CTE},
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    rel AS ({_OPEN_PAIRS_SQL}),
     und AS (SELECT subj_id AS s, obj_id AS d FROM rel
             UNION SELECT obj_id AS s, subj_id AS d FROM rel),
     deg AS (SELECT s AS z, COUNT(*) AS dz FROM und GROUP BY s),
@@ -2200,8 +2237,7 @@ def kg_graph_triads(spark, sf_dir):
     handles hub skew. Counted per-triangle exactly, no enumeration kept."""
     _, edges = ensure_graph(spark, sf_dir)
     adj = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .where(F.col("subj_id") != F.col("obj_id"))
+        _open_edges(edges)
         .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -2232,9 +2268,7 @@ _CLOSENESS_MAXDEPTH = 4
 
 @_q(
     "kg_graph_closeness",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    f"""{_G_REC_CTE},
     dadj AS (SELECT DISTINCT subj_id AS a, obj_id AS b FROM edges
              WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
     adj AS (SELECT a, b FROM dadj UNION SELECT b, a FROM dadj),
@@ -2310,9 +2344,7 @@ _WPATH_HOPS = 4
 
 @_q(
     "kg_graph_weighted_path",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    f"""{_G_REC_CTE},
     adj AS (SELECT subj_id AS a, obj_id AS b,
                    {_WPATH_SCALE} // (1 + SUM(n_occurrences)) AS cost
             FROM edges WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id
@@ -2345,8 +2377,7 @@ def kg_graph_weighted_path(spark, sf_dir):
     combinable. Integer costs end to end."""
     nodes, edges = ensure_graph(spark, sf_dir)
     adj = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .where(F.col("subj_id") != F.col("obj_id"))
+        _open_edges(edges)
         .groupBy(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .agg(
             F.floor(F.lit(_WPATH_SCALE) / (F.lit(1) + F.sum("n_occurrences")))
@@ -2454,8 +2485,7 @@ def kg_graph_truss(spark, sf_dir):
     divergence; sf0.01 converges at round 5 of 6."""
     nodes, edges = ensure_graph(spark, sf_dir)
     dadj = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .where(F.col("subj_id") != F.col("obj_id"))
+        _open_edges(edges)
         .select(F.col("subj_id").alias("s"), F.col("obj_id").alias("o"))
         .distinct()
     )
@@ -2540,12 +2570,7 @@ def kg_triple_pr(spark, sf_dir):
     golden = spark.read.parquet(
         os.path.join(graph_dir(sf_dir), "corpus", "golden_edges.parquet")
     )
-    got = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-        .withColumn("in_got", F.lit(1))
-    )
+    got = _open_triples(edges).withColumn("in_got", F.lit(1))
     exp = golden.distinct().withColumn("in_exp", F.lit(1))
     j = got.join(exp, on=["subj_id", "pred", "obj_id"], how="full_outer").select(
         F.coalesce("in_got", F.lit(0)).alias("in_got"),
@@ -2917,11 +2942,7 @@ def kg_verbalize(spark, sf_dir):
     ents = nodes.where(F.col("node_type") == "Entity").select(
         "node_id", "name"
     )
-    pos = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
+    pos = _open_triples(edges)
     expr = None
     for k, v in _VERB_TEMPLATES:
         expr = (
@@ -3084,8 +3105,7 @@ def kg_graph_bridges(spark, sf_dir):
     node dictionary."""
     nodes, edges = ensure_graph(spark, sf_dir)
     dadj = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .where(F.col("subj_id") != F.col("obj_id"))
+        _open_edges(edges)
         .select(F.col("subj_id").alias("s"), F.col("obj_id").alias("o"))
         .distinct()
     )
@@ -3140,10 +3160,7 @@ def kg_graph_bridges(spark, sf_dir):
 @_q(
     "kg_graph_clustering",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                            GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_UND_CTE},
     deg AS (SELECT v, COUNT(*) AS deg FROM (
               SELECT a AS v FROM und UNION ALL SELECT b FROM und) u
             GROUP BY v),
@@ -3179,24 +3196,9 @@ def kg_graph_clustering(spark, sf_dir):
     resolution, top-k as TakeOrderedAndProject. Ratio is scaled-integer
     (x1e6) with the same floor division on both engines."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds deg, orientation AND wedge join
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    # feeds deg, orientation AND wedge join
+    und = _undirected(_open_edges(edges)).localCheckpoint(eager=True)
+    deg = _und_degree(und)
     da = deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da")
     db = deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db")
     ranked = und.join(da, "a").join(db, "b")
@@ -3323,10 +3325,7 @@ _WALK_HOPS = 3
 @_q(
     "kg_random_walks",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                            GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_UND_CTE},
     adj AS (SELECT a AS v, b AS u FROM und
             UNION ALL SELECT b AS v, a AS u FROM und),
     {", ".join(
@@ -3363,17 +3362,7 @@ def kg_random_walks(spark, sf_dir):
     walks-per-node = extra seed values in the hash, both embarrassingly
     parallel."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-    )
+    und = _undirected(_open_edges(edges))
     adj = (
         und.select(F.col("a").alias("v"), F.col("b").alias("u"))
         .unionByName(und.select(F.col("b").alias("v"), F.col("a").alias("u")))
@@ -3497,10 +3486,7 @@ def kg_entity_churn(spark, sf_dir):
 @_q(
     "kg_graph_assortativity",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                            GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_UND_CTE},
     deg AS (SELECT v, COUNT(*) AS deg FROM (
               SELECT a AS v FROM und UNION ALL SELECT b FROM und) u
             GROUP BY v),
@@ -3541,24 +3527,9 @@ def kg_graph_assortativity(spark, sf_dir):
     (~9e18) holds to ~1e12 symmetrized pairs x deg^2 ~ 1e6; past that the
     moments move to DECIMAL(38,0) with the same trunc-division contract."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds deg AND the pair join
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    # feeds deg AND the pair join
+    und = _undirected(_open_edges(edges)).localCheckpoint(eager=True)
+    deg = _und_degree(und)
     pairs = (
         und.join(
             deg.select(F.col("v").alias("a"), F.col("deg").alias("j")), "a"
@@ -3925,10 +3896,7 @@ def _eig_oracle_sql() -> str:
     k = _EIG_ITERS
     return _unrolled(
         f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                            GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_UND_CTE},
     sym AS (SELECT a AS src, b AS dst FROM und
             UNION ALL SELECT b, a FROM und),
     ids AS (SELECT DISTINCT src AS node_id FROM sym),
@@ -3964,17 +3932,7 @@ def kg_graph_eigenvector(spark, sf_dir):
     its L1 normalisation, a single-row normalizer agg cross-joined back
     (AQE broadcasts it). Driver holds one count."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-    )
+    und = _undirected(_open_edges(edges))
     sym = pin(
         und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -4086,8 +4044,7 @@ def kg_gnn_export(spark, sf_dir):
 @_q(
     "kg_graph_modularity",
     f"""{_G_CTE},
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    rel AS ({_OPEN_PAIRS_SQL}),
     p0 AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
                            GREATEST(subj_id, obj_id) AS b FROM rel),
     ety AS (SELECT node_id, etype FROM nodes WHERE node_type = 'Entity'),
@@ -4140,18 +4097,8 @@ def kg_graph_modularity(spark, sf_dir):
     Reference analog: none (Neo4j has no modularity primitive); the
     natural next question after graph_builder.py's typed-node schema."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    rel = (
-        edges.where(
-            (~F.col("pred").isin(*_CLOSED_PREDS))
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select("subj_id", "obj_id")
-        .distinct()
-    )
-    pairs0 = rel.select(
-        F.least("subj_id", "obj_id").alias("a"),
-        F.greatest("subj_id", "obj_id").alias("b"),
-    ).distinct()
+    rel = _open_edges(edges).select("subj_id", "obj_id").distinct()
+    pairs0 = _undirected(rel)
     ety = nodes.where(F.col("node_type") == "Entity").select(
         "node_id", "etype"
     )
@@ -4210,14 +4157,7 @@ def _open_adj(edges: DataFrame) -> DataFrame:
     graph (closed containment/attribute predicates and self-loops
     excluded), checkpointed once — the shared input of the SCC / bow-tie
     / reachability helpers below."""
-    return pin(
-        edges.where(
-            (~F.col("pred").isin(*_CLOSED_PREDS))
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select("subj_id", "obj_id")
-        .distinct()
-    )
+    return pin(_open_edges(edges).select("subj_id", "obj_id").distinct())
 
 
 # Bounded source/sink trim before the distributed peel: each round drops
@@ -4404,22 +4344,17 @@ def _scc_labels(edges: DataFrame) -> DataFrame:
     ).select("node_id", "scc_id")
 
 
-_SCC_CACHE: dict = {}
-
-
 def ensure_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCC labels of the open-relation graph, materialized ONCE per
     (application, sf tier) — shared by kg_graph_scc and kg_graph_bowtie
     (the ensure_graph discipline applied to the label map). The resolved
-    ensure_graph function rides in the cache key so a test that
+    ensure_graph function rides in the memo key so a test that
     monkeypatches the graph source gets fresh labels, not a stale memo."""
-    key = (spark.sparkContext.applicationId, sf_dir, ensure_graph)
-    df = _SCC_CACHE.get(key)
-    if df is None:
-        _, edges = ensure_graph(spark, sf_dir)
-        df = _scc_labels(edges).localCheckpoint(eager=True)
-        _SCC_CACHE[key] = df
-    return df
+    return memo(
+        spark,
+        (sf_dir, "scc", ensure_graph),
+        lambda: _scc_labels(ensure_graph(spark, sf_dir)[1]),
+    )
 
 
 def _reach_from(adj: DataFrame, seeds: DataFrame, forward: bool) -> DataFrame:
@@ -4456,11 +4391,8 @@ def _reach_from(adj: DataFrame, seeds: DataFrame, forward: bool) -> DataFrame:
 
 @_q(
     "kg_graph_scc",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    f"""{_G_REC_CTE},
+    adj AS ({_OPEN_PAIRS_SQL}),
     r AS (SELECT subj_id AS a, obj_id AS b FROM adj
           UNION
           SELECT r.a, adj.obj_id FROM r JOIN adj ON adj.subj_id = r.b),
@@ -4647,10 +4579,7 @@ def _lpa_prefix_sql() -> str:
 
     return _unrolled(
         f"""{_G_CTE},
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
-    e2 AS (SELECT subj_id AS s, obj_id AS d FROM rel
-           UNION ALL SELECT obj_id AS s, subj_id AS d FROM rel),
+    {_REL_E2_CTE},
     verts AS (SELECT DISTINCT s AS v FROM e2),
     l0 AS (SELECT v, v AS label FROM verts)""",
         step,
@@ -4767,8 +4696,7 @@ def _katz_oracle_sql() -> str:
     k = _KATZ_ITERS
     return _unrolled(
         f"""{_G_CTE},
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    rel AS ({_OPEN_PAIRS_SQL}),
     ids AS (SELECT subj_id AS node_id FROM rel
             UNION SELECT obj_id FROM rel),
     x0 AS (SELECT node_id, {_KATZ_BASE} AS x FROM ids)""",
@@ -5669,11 +5597,7 @@ def kg_pred_functionality(spark, sf_dir):
     CALLS/IMPORTS relationship-type table (graph_builder.py:302-329) is
     schema-declared; over open web relations the profile must be measured."""
     _, edges = ensure_graph(spark, sf_dir)
-    t = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
+    t = _open_triples(edges)
     return (
         t.groupBy("pred")
         .agg(
@@ -5737,11 +5661,7 @@ def kg_entity_summary(spark, sf_dir):
     from pyspark.sql.window import Window
 
     nodes, edges = ensure_graph(spark, sf_dir)
-    t = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
+    t = _open_triples(edges)
     total = t.count()
     po = t.groupBy("pred", "obj_id").agg(F.count(F.lit(1)).alias("cnt"))
     names = nodes.select("node_id", "name")
@@ -5750,16 +5670,8 @@ def kg_entity_summary(spark, sf_dir):
         F.expr(f"CAST({total}L * 1000000L div cnt AS BIGINT)"),
     )
     named = (
-        sc.join(
-            F.broadcast(names.withColumnRenamed("node_id", "subj_id")),
-            "subj_id",
-        )
-        .withColumnRenamed("name", "subj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "obj_id")),
-            "obj_id",
-        )
-        .withColumnRenamed("name", "obj")
+        sc.transform(_name_of(names, "subj_id", "subj"))
+        .transform(_name_of(names, "obj_id", "obj"))
     )
     w = Window.partitionBy("subj").orderBy(
         F.desc("ifreq_x1e6"), F.asc("pred"), F.asc("obj")
@@ -5827,36 +5739,16 @@ def kg_rdf_ntriples(spark, sf_dir):
     instead of exporting rows and serializing driver-side."""
     nodes, edges = ensure_graph(spark, sf_dir)
     names = nodes.select("node_id", "name")
-    t = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
+    t = _open_triples(edges)
     v = (
-        t.join(
-            F.broadcast(names.withColumnRenamed("node_id", "subj_id")),
-            "subj_id",
-        )
-        .withColumnRenamed("name", "subj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "obj_id")),
-            "obj_id",
-        )
-        .withColumnRenamed("name", "obj")
+        t.transform(_name_of(names, "subj_id", "subj"))
+        .transform(_name_of(names, "obj_id", "obj"))
         .select("subj", "pred", "obj")
     )
     ty = (
         edges.where(F.col("pred") == "HAS_TYPE")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "subj_id")),
-            "subj_id",
-        )
-        .withColumnRenamed("name", "subj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "obj_id")),
-            "obj_id",
-        )
-        .withColumnRenamed("name", "obj")
+        .transform(_name_of(names, "subj_id", "subj"))
+        .transform(_name_of(names, "obj_id", "obj"))
         .select("subj", F.lit("HAS_TYPE").alias("pred"), "obj")
         .distinct()
     )
@@ -6056,11 +5948,7 @@ def kg_kge_hard_negatives(spark, sf_dir):
         .groupBy(F.col("subj_id").alias("ent"))
         .agg(F.min("obj_id").alias("etype"))
     )
-    t = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
+    t = _open_triples(edges)
     wc = Window.partitionBy("etype").orderBy(
         F.md5(F.col("ent")).asc(), F.asc("ent")
     )
@@ -6093,21 +5981,9 @@ def kg_kge_hard_negatives(spark, sf_dir):
     return (
         blown.withColumn("rk", F.row_number().over(wp))
         .where(F.col("rk") == 1)
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "subj_id")),
-            "subj_id",
-        )
-        .withColumnRenamed("name", "subj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "obj_id")),
-            "obj_id",
-        )
-        .withColumnRenamed("name", "pos_obj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "cand_id")),
-            "cand_id",
-        )
-        .withColumnRenamed("name", "neg_obj")
+        .transform(_name_of(names, "subj_id", "subj"))
+        .transform(_name_of(names, "obj_id", "pos_obj"))
+        .transform(_name_of(names, "cand_id", "neg_obj"))
         .select("subj", "pred", "pos_obj", "neg_obj")
         .orderBy(F.asc("subj"), F.asc("pred"), F.asc("pos_obj"))
     )
@@ -6172,16 +6048,8 @@ def kg_fact_sources(spark, sf_dir):
     )
     names = nodes.select("node_id", "name")
     return (
-        a.join(
-            F.broadcast(names.withColumnRenamed("node_id", "subj_id")),
-            "subj_id",
-        )
-        .withColumnRenamed("name", "subj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "obj_id")),
-            "obj_id",
-        )
-        .withColumnRenamed("name", "obj")
+        a.transform(_name_of(names, "subj_id", "subj"))
+        .transform(_name_of(names, "obj_id", "obj"))
         .select("subj", "pred", "obj", "n_sites", "n_urls", "sources")
         .orderBy(F.asc("subj"), F.asc("pred"), F.asc("obj"))
     )
@@ -6388,21 +6256,9 @@ def kg_gnn_neighbor_sample(spark, sf_dir):
     u = hop1.unionByName(hop2)
     names = nodes.select("node_id", "name")
     return (
-        u.join(
-            F.broadcast(names.withColumnRenamed("node_id", "seed")),
-            "seed",
-        )
-        .withColumnRenamed("name", "seed_name")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "src")),
-            "src",
-        )
-        .withColumnRenamed("name", "src_name")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "dst")),
-            "dst",
-        )
-        .withColumnRenamed("name", "dst_name")
+        u.transform(_name_of(names, "seed", "seed_name"))
+        .transform(_name_of(names, "src", "src_name"))
+        .transform(_name_of(names, "dst", "dst_name"))
         .select(
             F.col("seed_name").alias("seed"),
             F.col("hop").cast("bigint").alias("hop"),
@@ -6554,9 +6410,7 @@ def kg_pipeline_lineage(spark, sf_dir):
 
 @_q(
     "kg_entity_subgraph",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
+    f"""{_G_REC_CTE},
     seedn AS (SELECT node_id FROM nodes
               WHERE node_type = 'Entity' AND name = 'acme corp'),
     t AS (SELECT DISTINCT subj_id, pred, obj_id FROM edges
@@ -6594,11 +6448,7 @@ def kg_entity_subgraph(spark, sf_dir):
     semi-join probes of the edge table against the broadcast reach set —
     the hub's neighborhood, not the corpus, bounds every intermediate."""
     nodes, edges = ensure_graph(spark, sf_dir)
-    t = pin(
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-    )
+    t = pin(_open_triples(edges))
     und = t.select(
         F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
     ).unionByName(
@@ -6624,16 +6474,8 @@ def kg_entity_subgraph(spark, sf_dir):
             ),
             "obj_id",
         )
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "subj_id")),
-            "subj_id",
-        )
-        .withColumnRenamed("name", "subj")
-        .join(
-            F.broadcast(names.withColumnRenamed("node_id", "obj_id")),
-            "obj_id",
-        )
-        .withColumnRenamed("name", "obj")
+        .transform(_name_of(names, "subj_id", "subj"))
+        .transform(_name_of(names, "obj_id", "obj"))
         .select(
             "subj",
             "pred",
@@ -6688,12 +6530,7 @@ def kg_triple_pr_by_pred(spark, sf_dir):
     golden = spark.read.parquet(
         os.path.join(graph_dir(sf_dir), "corpus", "golden_edges.parquet")
     )
-    got = (
-        edges.where(~F.col("pred").isin(*_CLOSED_PREDS))
-        .select("subj_id", "pred", "obj_id")
-        .distinct()
-        .withColumn("in_got", F.lit(1))
-    )
+    got = _open_triples(edges).withColumn("in_got", F.lit(1))
     exp = golden.distinct().withColumn("in_exp", F.lit(1))
     j = got.join(
         exp, on=["subj_id", "pred", "obj_id"], how="full_outer"
@@ -6866,10 +6703,7 @@ def kg_graph_brokerage(spark, sf_dir):
     alongside kg_graph_triangles / kg_graph_butterflies."""
     nodes, edges = ensure_graph(spark, sf_dir)
     adj = (
-        edges.where(
-            (~F.col("pred").isin(*_CLOSED_PREDS))
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
+        _open_edges(edges)
         .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .distinct()
     )
@@ -6903,11 +6737,8 @@ def kg_graph_brokerage(spark, sf_dir):
 
 @_q(
     "kg_graph_bowtie",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    f"""{_G_REC_CTE},
+    adj AS ({_OPEN_PAIRS_SQL}),
     r AS (SELECT subj_id AS a, obj_id AS b FROM adj
           UNION
           SELECT r.a, adj.obj_id FROM r JOIN adj ON adj.subj_id = r.b),
@@ -7025,11 +6856,8 @@ def kg_graph_bowtie(spark, sf_dir):
 
 @_q(
     "kg_graph_neighborhood",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    f"""{_G_REC_CTE},
+    adj AS ({_OPEN_PAIRS_SQL}),
     r AS (SELECT subj_id AS a, obj_id AS b, 1 AS d FROM adj
           UNION ALL
           SELECT r.a, adj.obj_id, r.d + 1
@@ -7126,8 +6954,7 @@ _ANF_ALPHA_DEN = 1000
 _ANF_HOPS = 4
 
 _ANF_ADJ_SQL = f"""
-    adj AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    adj AS ({_OPEN_PAIRS_SQL}),
     verts AS (SELECT subj_id AS v FROM adj UNION SELECT obj_id FROM adj),
     s0 AS (SELECT v,
                   h % {_ANF_M} AS bucket,
@@ -7428,10 +7255,7 @@ _RC_KS = (1, 2, 4, 8, 16, 32)  # degree thresholds in the rich-club sweep
 @_q(
     "kg_graph_richclub",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                            GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_UND_CTE},
     inc AS (SELECT a AS v FROM und UNION ALL SELECT b FROM und),
     deg AS (SELECT v, COUNT(*) AS deg FROM inc GROUP BY v),
     ks AS (SELECT UNNEST(ARRAY{list(_RC_KS)}) AS k),
@@ -7469,24 +7293,9 @@ def kg_graph_richclub(spark, sf_dir):
     Reference analog: none (graph-analytics addendum alongside
     kg_graph_assortativity / kg_graph_kcore)."""
     _, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds degree AND the dmin joins
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    # feeds degree AND the dmin joins
+    und = _undirected(_open_edges(edges)).localCheckpoint(eager=True)
+    deg = _und_degree(und)
     ks = spark.createDataFrame([(k,) for k in _RC_KS], "k int")
     hist_n = deg.groupBy("deg").agg(F.count(F.lit(1)).alias("cn"))
     nk = (
@@ -7639,10 +7448,7 @@ def rule_frame(edges: DataFrame, limit: int = 30) -> DataFrame:
     kg_rule_mining (graph cache) and the CLI `rules` query type (a
     committed workdir's edge table)."""
     f = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
+        _open_edges(edges)
         .select(
             F.col("subj_id").alias("x"), "pred", F.col("obj_id").alias("y")
         )
@@ -7756,10 +7562,7 @@ def kg_path_rules(spark, sf_dir):
     from pyspark.sql import Window
 
     f = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
+        _open_edges(edges)
         .select(
             F.col("subj_id").alias("x"), "pred", F.col("obj_id").alias("y")
         )
@@ -7917,10 +7720,7 @@ _PL_XMIN = 4  # Hill-estimator tail cutoff (degrees >= xmin)
 @_q(
     "kg_graph_powerlaw",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                   GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_und_cte(pad=19)},
     inc AS (SELECT a AS v FROM und UNION ALL SELECT b FROM und),
     deg AS (SELECT v, COUNT(*) AS d FROM inc GROUP BY v),
     h AS (SELECT d, COUNT(*) AS cnt FROM deg GROUP BY d),
@@ -7952,23 +7752,8 @@ def kg_graph_powerlaw(spark, sf_dir):
     summary over kg_graph_degree_dist's raw histogram, companion of
     kg_graph_richclub's hub-interlink sweep)."""
     _, edges = ensure_graph(spark, sf_dir)
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und = _undirected(_open_edges(edges))
+    deg = _und_degree(und, "d")
     h = deg.groupBy("d").agg(F.count(F.lit(1)).alias("cnt"))
     tail = h.where(F.col("d") >= _PL_XMIN).agg(
         F.sum("cnt").alias("n_tail"),
@@ -8106,10 +7891,7 @@ def kg_crosslingual_pairs(spark, sf_dir):
 @_q(
     "kg_graph_degree_gini",
     f"""{_G_CTE},
-    und AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                   GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_und_cte(pad=19)},
     inc AS (SELECT a AS v FROM und UNION ALL SELECT b FROM und),
     deg AS (SELECT v, COUNT(*) AS d FROM inc GROUP BY v),
     ranked AS (SELECT d,
@@ -8144,23 +7926,8 @@ def kg_graph_degree_gini(spark, sf_dir):
     _, edges = ensure_graph(spark, sf_dir)
     from pyspark.sql import Window
 
-    und = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und = _undirected(_open_edges(edges))
+    deg = _und_degree(und, "d")
     ranked = deg.select(
         "d",
         F.row_number()
@@ -8291,10 +8058,7 @@ _LP_EVAL_K = 50  # prediction budget scored against the holdout
 @_q(
     "kg_link_predict_eval",
     f"""{_G_CTE},
-    rel AS (SELECT DISTINCT LEAST(subj_id, obj_id) AS a,
-                   GREATEST(subj_id, obj_id) AS b
-            FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
+    {_und_cte("rel", pad=19)},
     hold AS (SELECT a, b FROM rel
              WHERE substr(md5(a || '|' || b), 1, 1) IN ('0', '1')),
     kept AS (SELECT a, b FROM rel
@@ -8347,15 +8111,7 @@ def kg_link_predict_eval(spark, sf_dir):
     kg_graph_link_predict)."""
     _, edges = ensure_graph(spark, sf_dir)
     rel = (
-        edges.where(
-            (~F.col("pred").isin(*_CLOSED_PREDS))
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
-        .select(
-            F.least("subj_id", "obj_id").alias("a"),
-            F.greatest("subj_id", "obj_id").alias("b"),
-        )
-        .distinct()
+        _undirected(_open_edges(edges))
         .withColumn(
             "in_hold",
             F.substring(F.md5(F.concat_ws("|", "a", "b")), 1, 1).isin(
@@ -8464,13 +8220,8 @@ _ROB_BLOCKS, _ROB_SELECTS = _rob_oracle_sql()
 
 @_q(
     "kg_graph_robustness",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
-    e2 AS (SELECT subj_id AS s, obj_id AS d FROM rel
-           UNION ALL SELECT obj_id AS s, subj_id AS d FROM rel),
+    f"""{_G_REC_CTE},
+    {_REL_E2_CTE},
     verts AS (SELECT DISTINCT s AS v FROM e2),
     deg AS (SELECT s AS v, COUNT(DISTINCT d) AS dg FROM e2 GROUP BY s),
     hubs AS (SELECT v, ROW_NUMBER() OVER (ORDER BY dg DESC, v ASC) AS hr
@@ -8503,10 +8254,7 @@ def kg_graph_robustness(spark, sf_dir):
 
     _, edges = ensure_graph(spark, sf_dir)
     rel = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
+        _open_edges(edges)
         .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .distinct()
         .localCheckpoint(eager=True)  # feeds degree + every removal level
@@ -8598,13 +8346,8 @@ _ROB_R_BLOCKS, _ROB_R_SELECTS = _rob_rand_oracle_sql()
 
 @_q(
     "kg_graph_random_robustness",
-    f"""WITH RECURSIVE
-    nodes AS (SELECT * FROM read_parquet('{_ORACLE_WD}/nodes/data/*.parquet')),
-    edges AS (SELECT * FROM read_parquet('{_ORACLE_WD}/edges/data/*.parquet')),
-    rel AS (SELECT DISTINCT subj_id, obj_id FROM edges
-            WHERE pred NOT IN {_CLOSED_SQL} AND subj_id <> obj_id),
-    e2 AS (SELECT subj_id AS s, obj_id AS d FROM rel
-           UNION ALL SELECT obj_id AS s, subj_id AS d FROM rel),
+    f"""{_G_REC_CTE},
+    {_REL_E2_CTE},
     verts AS (SELECT DISTINCT s AS v FROM e2),
     rnd AS (SELECT v, ROW_NUMBER() OVER (ORDER BY md5(v) ASC, v ASC)
                    AS rr
@@ -8635,10 +8378,7 @@ def kg_graph_random_robustness(spark, sf_dir):
 
     _, edges = ensure_graph(spark, sf_dir)
     rel = (
-        edges.where(
-            ~F.col("pred").isin(*_CLOSED_PREDS)
-            & (F.col("subj_id") != F.col("obj_id"))
-        )
+        _open_edges(edges)
         .select(F.col("subj_id").alias("a"), F.col("obj_id").alias("b"))
         .distinct()
         .localCheckpoint(eager=True)

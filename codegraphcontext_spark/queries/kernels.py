@@ -4,8 +4,9 @@ One implementation each of the mechanisms the graph operators are built
 from: a multi-source frontier BFS, a path-carrying simple-path search, one
 sparse mat-vec step (PageRank, HITS, eigenvector and Katz are all this
 step joined against an edge table), an L1 normalisation, one synchronous
-label-propagation round, and the generator for the unrolled ``c{i}``/
-``r{i}`` CTE chains the DuckDB oracles use for fixed-round iterations.
+label-propagation round, the generator for the unrolled ``c{i}``/
+``r{i}`` CTE chains the DuckDB oracles use for fixed-round iterations,
+and ``memo``, the session memo that pins a shared intermediate once.
 
 Small-graph leg: ``small_graph`` fetches an adjacency of at most
 ``CGC_SCC_SMALL_CUTOVER`` distinct edges to the driver once, as Arrow, and
@@ -57,6 +58,22 @@ def pin(df: DataFrame) -> DataFrame:
 def lazy(df: DataFrame) -> DataFrame:
     """Checkpoint per-round state lazily."""
     return df.localCheckpoint(eager=False)
+
+
+_MEMO: dict = {}
+
+
+def memo(spark, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    """Session memo for a shared intermediate: ``build()`` pinned once per
+    (application id, *key), the same frame returned on every later call.
+    Callers put the loader they resolve (the table reader, the graph
+    source) in ``key``, so a monkeypatched loader gets a fresh build
+    instead of a stale frame. Entries live as long as the process."""
+    k = (spark.sparkContext.applicationId, *key)
+    df = _MEMO.get(k)
+    if df is None:
+        df = _MEMO[k] = pin(build())
+    return df
 
 
 def iterate(

@@ -6,9 +6,8 @@ from pyspark.sql import functions as F
 
 from codegraphcontext_spark.queries.driver_queries import (
     SPARK_QUERIES,
-    _dot_udf,
+    _cos,
     _fan_out,
-    _norm_udf,
     _t,
 )
 
@@ -45,9 +44,7 @@ def test_lsh_bucket_locality_and_multiprobe_recall(spark):
     emb = _t(spark, SF_DIR, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     cand = _fan_out(emb.where(F.col("vec_id") != 0)).crossJoin(F.broadcast(q))
-    cos = _dot_udf("embedding", "q_emb") / (
-        _norm_udf("embedding") * _norm_udf("q_emb")
-    )
+    cos = _cos("embedding", "q_emb")
     mean_all = (
         cand.select(F.round(cos * 1e6).cast("bigint").alias("c"))
         .agg(F.avg("c"))

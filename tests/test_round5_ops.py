@@ -183,12 +183,28 @@ def test_brokerage_capped_semantics_cross_engine(spark):
     assert ("h", (cap * (cap - 1) // 2) * (1000000 // 1)) in got
 
 
-def test_scc_query_memoized_per_session(spark):
+def test_scc_query_memoized_per_session(spark, monkeypatch):
     """ensure_scc returns the same materialization for repeat calls —
-    kg_graph_scc and kg_graph_bowtie share one label computation."""
+    kg_graph_scc and kg_graph_bowtie share one label computation. Both
+    session-memo paths (ensure_scc and the dedup family's ensure_* seams)
+    key on the loader they resolve, so a monkeypatched loader gets a
+    fresh build instead of the stale frame."""
+    from codegraphcontext_spark.queries import driver_queries as dq
+
     a = gq.ensure_scc(spark, SF)
+    assert gq.ensure_scc(spark, SF) is a
+    s = dq.ensure_shingles(spark, SF)
+    assert dq.ensure_shingles(spark, SF) is s
+
+    real_graph, real_t = gq.ensure_graph, dq._t
+    monkeypatch.setattr(gq, "ensure_graph", lambda sp, d: real_graph(sp, d))
+    monkeypatch.setattr(dq, "_t", lambda sp, d, name: real_t(sp, d, name))
     b = gq.ensure_scc(spark, SF)
-    assert a is b
+    assert b is not a
+    assert gq.ensure_scc(spark, SF) is b
+    t = dq.ensure_shingles(spark, SF)
+    assert t is not s
+    assert dq.ensure_shingles(spark, SF) is t
 
 
 def test_anf_hll_registers_equal_exact_set_sketch(spark):
