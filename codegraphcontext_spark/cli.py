@@ -694,7 +694,9 @@ def cmd_status(args) -> int:
     rebuilt records which tail did it, ``globals``: ``"scoped"`` (canon
     kept, the delta's mentions relinked; linked and edge_occurrences then
     also carry ``rewritten_files`` / ``linked_files``) or
-    ``"recomputed"``."""
+    ``"recomputed"``. nodes and edges record which branch rolled them up,
+    ``rollup``: ``"pyarrow"`` (on the driver, below the runner's merge
+    cutover) or ``"spark"``."""
     import os
 
     stages = []

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..datagen.vocab import CANON_JACCARD_THRESHOLD
@@ -187,10 +188,16 @@ def connected_components(
             if ra != rb:
                 lo, hi = min(ra, rb), max(ra, rb)
                 parent[hi] = lo  # min-label root, same as the loop's fixpoint
-        spark = edges.sparkSession
-        rows = [(s, find(s)) for s in set(parent)]
-        labels_df = spark.createDataFrame(rows, "surface string, label string") \
-            if rows else spark.createDataFrame([], "surface string, label string")
+        # an Arrow table makes a LocalRelation (no Python worker re-pickles
+        # the rows on every action, as a list-built frame's scan does)
+        surfaces = sorted(parent)
+        labels_df = edges.sparkSession.createDataFrame(
+            pa.table({
+                "surface": pa.array(surfaces, pa.string()),
+                "label": pa.array([find(s) for s in surfaces], pa.string()),
+            }),
+            "surface string, label string",
+        )
         return (
             vertices.join(F.broadcast(labels_df), on="surface", how="left")
             .select(

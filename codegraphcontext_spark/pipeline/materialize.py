@@ -33,6 +33,11 @@ CALLS properties (line_number, args[], full_call_name),
       rows per key and "show me every sentence where A FOUNDED B" is a
       point lookup here instead of a re-derivation from checkpoint="all"
       intermediates.
+
+Below the runner's merge cutover the runner rolls nodes and edges up on the
+driver instead (``graph_nodes_table`` / ``edges_table``, pyarrow twins of
+``graph_nodes`` / ``edges_from_occurrences``; the tests hold the two
+equal). The Spark functions stay the scale path.
 """
 
 from __future__ import annotations
@@ -173,3 +178,61 @@ def edges_from_occurrences(occurrences: DataFrame) -> DataFrame:
         F.col("_prov.url").alias("first_url"),
         F.col("_prov.sent_id").alias("first_sent_id"),
     )
+
+
+def graph_nodes_table(docs, canon, links):
+    """``graph_nodes`` over Arrow tables: docs(url, lang), canon(entity_id,
+    label, etype) and links(domain) -> the node table's columns, unsorted
+    and not yet cast to the Spark plan's schema."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def part(node_id, node_type, name, etype=None, lang=None):
+        n = len(node_id)
+        return pa.table({
+            "node_id": node_id,
+            "node_type": pa.array([node_type] * n, pa.string()),
+            "name": name,
+            "etype": pa.nulls(n, pa.string()) if etype is None else etype,
+            "lang": pa.nulls(n, pa.string()) if lang is None else lang,
+        })
+
+    # min() over strings compares UTF-8 bytes, as Spark's does
+    ents = canon.group_by("entity_id").aggregate([("label", "min"), ("etype", "min")])
+    domains = pc.unique(links.column("domain"))
+    etypes = pc.unique(canon.column("etype"))
+    return pa.concat_tables([
+        part(docs.column("url"), "Page", docs.column("url"), lang=docs.column("lang")),
+        part(ents.column("entity_id"), "Entity", ents.column("label_min"),
+             ents.column("etype_min")),
+        part(domains, "Domain", domains),
+        # a null etype gives a null id, as Spark's concat does
+        part(pc.binary_join_element_wise("type:", etypes, ""), "Type", etypes, etypes),
+    ])
+
+
+def edges_table(occurrences):
+    """``edges_from_occurrences`` over an Arrow table: one row per (subj_id,
+    pred, obj_id) with the count of its occurrence rows and the minimum
+    (url, sent_id) as first provenance (nulls first, as Spark's struct
+    ordering has them)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = ["subj_id", "pred", "obj_id"]
+    first = pc.ScalarAggregateOptions(skip_nulls=False)
+    rolled = (
+        occurrences.sort_by(
+            [(c, "ascending") for c in (*keys, "url", "sent_id")],
+            null_placement="at_start",
+        )
+        # "first" follows input order only on a single-threaded group_by
+        .group_by(keys, use_threads=False)
+        .aggregate([([], "count_all"), ("url", "first", first), ("sent_id", "first", first)])
+    )
+    return pa.table({
+        **{k: rolled.column(k) for k in keys},
+        "n_occurrences": rolled.column("count_all"),
+        "first_url": rolled.column("url_first"),
+        "first_sent_id": rolled.column("sent_id_first"),
+    })

@@ -40,6 +40,23 @@ merges ``linked`` and ``edge_occurrences`` bucket by bucket the same way
 (``run_incremental``); an ``edge_occurrences`` manifest without
 ``n_buckets`` sends the fold down the full recompute, which re-buckets it.
 
+Graph-tail contract: every build, fold and delete ends by committing nodes
+and edges through ``_commit_graph``, after ``edge_occurrences``. Its inputs
+are docs, canon, links and edge_occurrences. When all four are committed
+under the current fingerprint and their part files together hold at most
+``_MERGE_MAX_BYTES``, the driver reads the columns it needs with pyarrow and
+rolls the two tables up there (``graph_nodes_table``, ``edges_table``),
+starting no Spark job. Each table is cast to the schema of the Spark plan it
+stands in for (``graph_nodes`` / ``edges_from_occurrences``; ``.schema`` is
+analysis only), sorted by the stage's ``_LAYOUT_SORT`` key and written as
+one part file, with Spark's footer schema key, into ``<stage>/data_new``
+(a crashed attempt's leftover is cleared first). ``_swap_in`` then makes it
+``data``, and lineage and manifest follow as in ``_commit``: nodes is
+committed whole before edges starts. Above the cutover, or when an input is
+not committed (canon and links are fused under checkpoint="minimal"), the
+Spark commits run instead. The nodes and edges manifests name the branch in
+``rollup``: ``"pyarrow"`` or ``"spark"``.
+
 Reads of a committed stage go through ``read_stage``: the Spark schema the
 writer stored in a part file's footer (key
 ``org.apache.spark.sql.parquet.row.metadata``) is read on the driver with
@@ -69,8 +86,9 @@ from .canon import canonicalize_entities, norm_expr
 from .linking import build_dictionary, link_mentions, mentions_long
 from .materialize import (
     edges_from_occurrences,
+    edges_table,
     graph_nodes,
-    materialize_graph,
+    graph_nodes_table,
     occurrences,
 )
 from .segment import segment_stage
@@ -114,6 +132,14 @@ _MERGE_MAX_BYTES = 128 << 20
 
 # the url-keyed global stages a canon-stable fold merges bucket by bucket
 _RELINKED = ("linked", "edge_occurrences")
+
+# the graph tail's inputs and the columns its driver rollup reads of each
+_GRAPH_INPUTS = {
+    "docs": ["url", "lang"],
+    "canon": ["entity_id", "label", "etype"],
+    "links": ["domain"],
+    "edge_occurrences": ["subj_id", "pred", "obj_id", "url", "sent_id"],
+}
 
 # which path the last narrow-stage swap of a run_incremental / run_delete in
 # this process took: "bucket-merge" or "spark-swap" (the tests pin both)
@@ -370,25 +396,119 @@ class PipelineRunner:
         if stage in self._LAYOUT_SORT:
             df = df.sortWithinPartitions(*self._LAYOUT_SORT[stage])
         df.write.mode("overwrite").parquet(out)
-        # a bucket merge that crashed mid-assembly and was retried down a
-        # full rewrite leaves its data_new behind; nothing else reads it
+        # a bucket merge or driver rollup that crashed mid-assembly and was
+        # retried down a Spark write leaves its data_new behind; nothing
+        # else reads it
         shutil.rmtree(os.path.join(d, "data_new"), ignore_errors=True)
-        committed = read_stage(self.spark, out)
+        if by_url:
+            fields["n_buckets"] = n_buckets
+        return self._record_commit(stage, t0, fields)
+
+    def _record_commit(self, stage: str, t0: float, fields: dict) -> DataFrame:
+        """Lineage + manifest of a stage whose data just landed in its
+        ``data`` directory (``t0``: when its commit started); returns the
+        committed frame."""
+        d = self._dir(stage)
+        committed = self._load(stage)
         n = self._write_lineage(d)
-        wall_ms = int((time.time() - t0) * 1000)
         manifest = {
             "stage": stage,
             "input_fingerprint": self._fingerprint(),
             "n_rows": n,
-            "wall_ms": wall_ms,
+            "wall_ms": int((time.time() - t0) * 1000),
             "extractor_version": EXTRACTOR_VERSION,
             **fields,
         }
-        if by_url:
-            manifest["n_buckets"] = n_buckets
         self._write_json_atomic(os.path.join(d, "manifest.json"), manifest)
         self.metrics[stage] = manifest
         return committed
+
+    def _commit_graph(
+        self, docs: DataFrame, canon: DataFrame, links: DataFrame,
+        occ: DataFrame, **fields,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Commit nodes and edges: the graph tail of every build, fold and
+        delete (contract in the module docstring). ``fields`` go into both
+        manifests, with ``rollup`` naming the branch taken."""
+        plans = {
+            "nodes": graph_nodes(docs, canon, links),
+            "edges": edges_from_occurrences(occ),
+        }
+        inputs = self._graph_inputs()
+        if inputs is None:
+            return tuple(
+                self._commit(s, df, by_url=False, rollup="spark", **fields)
+                for s, df in plans.items()
+            )
+        tables = {
+            "nodes": graph_nodes_table(inputs["docs"], inputs["canon"], inputs["links"]),
+            "edges": edges_table(inputs["edge_occurrences"]),
+        }
+        return tuple(
+            self._commit_table(s, tables[s], df, rollup="pyarrow", **fields)
+            for s, df in plans.items()
+        )
+
+    def _graph_inputs(self) -> dict | None:
+        """The graph tail's inputs (``_GRAPH_INPUTS``) as Arrow tables read
+        from their part files, or None when the Spark branch must run: an
+        input not committed under the current fingerprint (a stage fused
+        under checkpoint="minimal"), one without part files, or part files
+        holding more than _MERGE_MAX_BYTES in all."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = {}
+        for stage in _GRAPH_INPUTS:
+            data = os.path.join(self._dir(stage), "data")
+            if not self._committed(stage) or not os.path.isdir(data):
+                return None
+            files[stage] = [os.path.join(data, f) for f in _part_files(data)]
+            if not files[stage]:
+                return None
+        if sum(os.stat(f).st_size for fs in files.values() for f in fs) > _MERGE_MAX_BYTES:
+            return None
+        return {
+            s: pa.concat_tables(
+                [pq.read_table(f, columns=_GRAPH_INPUTS[s]) for f in fs],
+                promote_options="permissive",
+            )
+            for s, fs in files.items()
+        }
+
+    def _commit_table(
+        self, stage: str, table, plan: DataFrame, **fields
+    ) -> DataFrame:
+        """Commit an Arrow table as ``_commit`` would commit ``plan``, the
+        Spark plan it stands in for: cast to the plan's schema (analysis
+        only, no job), sorted by the stage's layout key, written by pyarrow
+        with Spark's footer schema key into ``data_new`` (a crashed
+        attempt's leftover is cleared first), swapped in by ``_swap_in``,
+        then lineage and manifest. One part file, not url-bucketed."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        t0 = time.time()
+        tmp = os.path.join(self._dir(stage), "data_new")
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        # Spark's own compact schema JSON (key order as the JVM writes it)
+        footer = json.dumps(plan.schema.jsonValue(), separators=(",", ":"))
+        schema = to_arrow_schema(plan.schema).with_metadata({
+            _SPARK_SCHEMA_KEY: footer, b"org.apache.spark.version": self.spark.version,
+        })
+        table = table.select(schema.names).cast(schema)
+        if stage in self._LAYOUT_SORT:
+            table = table.sort_by(
+                [(c, "ascending") for c in self._LAYOUT_SORT[stage]],
+                null_placement="at_start",
+            )
+        pq.write_table(
+            table,
+            os.path.join(tmp, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+        )
+        self._swap_in(stage)
+        return self._record_commit(stage, t0, fields)
 
     def _write_lineage(self, stage_dir: str) -> int:
         """Per-partition lineage rows (partition_id, n_rows) from the parquet
@@ -579,15 +699,13 @@ class PipelineRunner:
             for s in graph_stages:
                 self.metrics[s] = {"stage": s, "resumed": True}
         else:
-            nodes, edges, occ = materialize_graph(
-                docs, triples, linked, canon, links
-            )
-            nodes = self._commit("nodes", nodes, by_url=False)
             # occurrences first: edges is its rollup, derived from the
             # committed parquet so the resolution joins run exactly once.
             # Url-bucketed, so a canon-stable fold can merge it by bucket.
-            occ = self._commit("edge_occurrences", occ)
-            edges = self._commit("edges", edges_from_occurrences(occ), by_url=False)
+            occ = self._commit(
+                "edge_occurrences", occurrences(triples, linked, canon, links)
+            )
+            nodes, edges = self._commit_graph(docs, canon, links, occ)
 
         return {
             "docs": docs, "sentences": sentences, "triples": triples,
@@ -629,9 +747,12 @@ class PipelineRunner:
         bak = os.path.join(d, "data_old")
         if os.path.isdir(bak):  # leftover backup from a healed crash
             shutil.rmtree(bak)
-        os.rename(old, bak)
+        had_data = os.path.isdir(old)  # not on a stage's first commit
+        if had_data:
+            os.rename(old, bak)
         os.rename(tmp, old)
-        shutil.rmtree(bak)
+        if had_data:
+            shutil.rmtree(bak)
         self.spark.catalog.refreshByPath(old)
 
     def _swap_write(self, stage: str, df: DataFrame, n_buckets: int) -> dict:
@@ -815,10 +936,13 @@ class PipelineRunner:
         leaves canon unchanged (``_canon_stable``), the tail is scoped:
         canon's files stay, only the delta's mentions are linked, linked and
         edge_occurrences are merged bucket by bucket, and nodes and edges
-        are rebuilt from the committed stages (O(delta + graph)). Otherwise
-        ``_recompute_globals`` rebuilds all five from the committed narrow
-        stages, which re-links every mention. A retry after a crash always
-        recomputes. ``LAST_GLOBALS_PATH`` names the path taken.
+        are rolled up again from the committed stages (O(delta + graph)).
+        Otherwise ``_recompute_globals`` rebuilds all five from the
+        committed narrow stages, which re-links every mention. A retry
+        after a crash always recomputes. ``LAST_GLOBALS_PATH`` names the
+        path taken. Either way nodes and edges come from the graph tail
+        (module docstring): rolled up on the driver below _MERGE_MAX_BYTES,
+        by Spark above it.
 
         Replay semantics (positional mutation signatures): re-running the
         MOST RECENTLY recorded mutation with nothing after it is a no-op
@@ -1008,12 +1132,11 @@ class PipelineRunner:
             link_mentions(mentions_long(triples, defs), build_dictionary(canon)),
             n_buckets=n, **tag,
         )
-        nodes, edges, occ = materialize_graph(docs, triples, linked, canon, links)
-        nodes = self._commit("nodes", nodes, by_url=False, **tag)
-        occ = self._commit("edge_occurrences", occ, n_buckets=n, **tag)
-        edges = self._commit(
-            "edges", edges_from_occurrences(occ), by_url=False, **tag
+        occ = self._commit(
+            "edge_occurrences", occurrences(triples, linked, canon, links),
+            n_buckets=n, **tag,
         )
+        nodes, edges = self._commit_graph(docs, canon, links, occ, **tag)
         return self._outputs(
             docs=docs, triples=triples, defs=defs, links=links, canon=canon,
             linked=linked, nodes=nodes, edges=edges, edge_occurrences=occ,
@@ -1091,8 +1214,8 @@ class PipelineRunner:
         occurrence rows derived, both from the small frames of ``adds``
         (the delta's narrow-stage rows, Arrow); ``linked`` and
         ``edge_occurrences`` are merged bucket by bucket (``files``: per
-        stage, bucket -> touched part files); nodes and edges are rebuilt
-        by Spark from the committed stages. Equal to
+        stage, bucket -> touched part files); nodes and edges are rolled up
+        again from the committed stages by the graph tail. Equal to
         ``_recompute_globals``: with canon unchanged, every url's linked
         and occurrence rows depend only on that url's own rows."""
         global LAST_GLOBALS_PATH
@@ -1117,12 +1240,7 @@ class PipelineRunner:
         docs, links, occ = (
             self._load(s) for s in ("docs", "links", "edge_occurrences")
         )
-        nodes = self._commit(
-            "nodes", graph_nodes(docs, canon, links), by_url=False, globals="scoped"
-        )
-        edges = self._commit(
-            "edges", edges_from_occurrences(occ), by_url=False, globals="scoped"
-        )
+        nodes, edges = self._commit_graph(docs, canon, links, occ, globals="scoped")
         return self._outputs(
             docs=docs, links=links, canon=canon, nodes=nodes, edges=edges,
             edge_occurrences=occ,

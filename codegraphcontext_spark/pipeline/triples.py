@@ -41,14 +41,19 @@ def patterns_df(spark: SparkSession) -> DataFrame:
     """The broadcastable predicate pattern table — one row per
     (lang, predicate): a language pack is pattern ROWS, not code (the
     per-language parser analog, reference graph_builder.py:58-61 +
-    import_extractor.py:58-110)."""
+    import_extractor.py:58-110). Built from an Arrow table, so the frame is
+    a ``LocalRelation``: a Python list would make it a ``Scan ExistingRDD``
+    whose every action re-pickles the rows through Python workers."""
+    import pyarrow as pa
+
     rows = [
         (lang, p, pred_phrase(p, phrase, lang), list(st), list(ot))
         for lang in EXTRACTION_LANGS
         for p, phrase, st, ot in PREDICATES
     ]
+    names = ["plang", "pred", "phrase", "subj_types", "obj_types"]
     return spark.createDataFrame(
-        rows,
+        pa.table([pa.array(col) for col in zip(*rows)], names=names),
         "plang string, pred string, phrase string, "
         "subj_types array<string>, obj_types array<string>",
     )

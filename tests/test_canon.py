@@ -90,6 +90,36 @@ def test_connected_components_chain(spark, monkeypatch, cutover, path):
     assert canon_mod.LAST_CC_PATH == path
 
 
+def _leaves(df) -> list[str]:
+    """Class names of the leaves of ``df``'s analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+@pytest.mark.parametrize("pairs", [[("b", "c"), ("a", "b")], []], ids=["pairs", "empty"])
+def test_driver_built_tables_are_local_relations(spark, monkeypatch, pairs):
+    """The pattern table and the union-find labels (with merge pairs or
+    none) are built from Arrow: their plans are LocalRelations, not the
+    Scan ExistingRDD a Python list makes, whose every action runs Python
+    workers to re-pickle the rows."""
+    import pyarrow as pa
+
+    from codegraphcontext_spark.pipeline.triples import patterns_df
+
+    monkeypatch.delenv("CGC_CC_SMALL_CUTOVER", raising=False)
+    assert _leaves(patterns_df(spark)) == ["LocalRelation"]
+    v = spark.createDataFrame(pa.table({"surface": ["a", "b", "c", "d"]}))
+    e = spark.createDataFrame(
+        pa.table({"a": [a for a, _ in pairs], "b": [b for _, b in pairs]},
+                 schema=pa.schema([("a", pa.string()), ("b", pa.string())])),
+    )
+    labels = connected_components(v, e)
+    assert set(_leaves(labels)) == {"LocalRelation"}
+    assert labels.schema.simpleString() == "struct<surface:string,label:string>"
+    expect = {"a": "a", "b": "a", "c": "a", "d": "d"} if pairs else {s: s for s in "abcd"}
+    assert {r.surface: r.label for r in labels.collect()} == expect
+
+
 def test_canon_deterministic_across_parallelism(spark, pipeline_out):
     """Same clusters regardless of partitioning (no first-seen nondeterminism):
     re-run canonicalization over a deliberately re-partitioned defs input."""

@@ -38,6 +38,11 @@ def test_minimal_commits_only_core_stages(minimal_run):
     assert committed == {"docs", "linked", "nodes", "edges", "edge_occurrences"}
     fused = {k for k, v in runner.metrics.items() if v.get("fused")}
     assert fused == {"sentences", "triples", "defs", "links", "canon"}
+    # canon and links have no files to roll up on the driver: the graph
+    # tail takes the Spark commits
+    assert {s: runner.metrics[s]["rollup"] for s in ("nodes", "edges")} == {
+        "nodes": "spark", "edges": "spark",
+    }
 
 
 def test_minimal_resumes(spark, corpus_dir, minimal_run):

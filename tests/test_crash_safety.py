@@ -17,7 +17,7 @@ import pytest
 import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import PipelineRunner
 
-from .conftest import stage_rows
+from .conftest import rollups, stage_rows
 
 PREFIX = "https://site1"
 
@@ -232,6 +232,53 @@ def test_build_survives_crash_in_stage_write(
     _assert_readable(spark, pages, wd)
     clean = PipelineRunner(spark, pages, base_wd).run()
     assert stage_rows(PipelineRunner(spark, pages, wd).run()) == stage_rows(clean)
+
+
+def _crash_before_edges_swap(monkeypatch):
+    """The graph tail dies after nodes was swapped in and committed, with
+    edges' data_new assembled but not yet swapped in."""
+    real = PipelineRunner._swap_in
+
+    def swap_in(self, stage):
+        if stage == "edges":
+            monkeypatch.setattr(PipelineRunner, "_swap_in", real)
+            raise OSError("injected crash between the nodes and edges swaps")
+        return real(self, stage)
+
+    monkeypatch.setattr(PipelineRunner, "_swap_in", swap_in)
+
+
+def _crash_mid_nodes_write(monkeypatch):
+    """The driver-side graph rollup dies writing nodes' data_new, leaving a
+    torn part file there."""
+    _crash_mid_bucket_merge(monkeypatch, "nodes")
+
+
+def _no_data_new(wd) -> bool:
+    return not any(
+        os.path.isdir(os.path.join(wd, s, "data_new")) for s in os.listdir(wd)
+    )
+
+
+@pytest.mark.parametrize("inject", [_crash_before_edges_swap, _crash_mid_nodes_write])
+def test_build_survives_crash_in_graph_tail(
+    spark, base_build, tmp_path_factory, monkeypatch, inject
+):
+    """A build whose driver-side graph rollup dies between the nodes and
+    edges swaps, or while writing nodes, leaves the workdir readable; a
+    fresh runner's build clears the leftover data_new and equals a clean
+    build on every stage."""
+    pages, base_wd = base_build
+    wd = str(tmp_path_factory.mktemp("crash_graph_tail") / "wd")
+    inject(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        PipelineRunner(spark, pages, wd).run()
+    assert not _no_data_new(wd)
+    _assert_readable(spark, pages, wd)
+    retried = PipelineRunner(spark, pages, wd).run()
+    assert _no_data_new(wd)
+    assert rollups(wd) == dict.fromkeys(("nodes", "edges"), "pyarrow")
+    assert stage_rows(retried) == stage_rows(PipelineRunner(spark, pages, base_wd).run())
 
 
 @pytest.mark.parametrize("inject", [_crash_manifest_write, _crash_lineage_write])
@@ -523,15 +570,17 @@ def _crash_mid_occurrence_merge(monkeypatch):
     [
         _crash_before_occurrence_merge, _crash_mid_occurrence_merge,
         _crash_after_canon_refresh, _crash_between_swap_renames,
+        _crash_before_edges_swap, _crash_mid_nodes_write,
     ],
 )
 def test_scoped_fold_crash_retries_by_recompute(
     spark, base_build, stable_delta, clean_stable_fold, tmp_path_factory,
     monkeypatch, inject,
 ):
-    """A canon-stable fold that crashes in its scoped tail, or in a narrow
-    swap before it, is retried from _pending.json down the full recompute
-    (a crash can leave canon advanced and linked behind); the retry leaves
+    """A canon-stable fold that crashes in its scoped tail (its graph
+    rollup included), or in a narrow swap before it, is retried from
+    _pending.json down the full recompute (a crash can leave canon
+    advanced and linked behind, or nodes ahead of edges); the retry leaves
     no half-assembled data_new and equals an uninterrupted fold on every
     stage."""
     pages, wd = _clone(base_build, tmp_path_factory, "crash_scoped")
@@ -543,8 +592,7 @@ def test_scoped_fold_crash_retries_by_recompute(
     retried = PipelineRunner(spark, pages, wd).run_incremental(stable_delta)
     assert runner_mod.LAST_GLOBALS_PATH == "recomputed"
     assert not os.path.exists(os.path.join(wd, "_pending.json"))
-    left = [s for s in os.listdir(wd) if os.path.isdir(os.path.join(wd, s, "data_new"))]
-    assert not left
+    assert _no_data_new(wd)
     assert stage_rows(retried) == clean_stable_fold
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import PipelineRunner
 
-from .conftest import stage_rows
+from .conftest import BRANCHES, after_swap, rollups, stage_rows
 
 PREFIX = "https://site1"  # matches site1, site10..site19, site100 — ~10% of pages
 
@@ -40,8 +40,9 @@ def filtered_sets(spark, filtered_corpus, tmp_path_factory):
     return stage_rows(PipelineRunner(spark, filtered_corpus, wd_ref).run())
 
 
+@BRANCHES
 def test_delete_equals_filtered_build(
-    spark, corpus_dir, filtered_sets, tmp_path_factory, fold_path
+    spark, corpus_dir, filtered_sets, tmp_path_factory, fold_path, graph_rollup
 ):
     wd_del = str(tmp_path_factory.mktemp("wd_del"))
 
@@ -50,8 +51,11 @@ def test_delete_equals_filtered_build(
     deleted = runner.run_delete(PREFIX)
     assert runner_mod.LAST_FOLD_PATH == fold_path
     assert runner_mod.LAST_GLOBALS_PATH == "recomputed"
+    assert rollups(wd_del) == dict.fromkeys(("nodes", "edges"), graph_rollup)
 
-    assert stage_rows(deleted) == filtered_sets
+    assert after_swap(stage_rows(deleted), fold_path) == after_swap(
+        filtered_sets, fold_path
+    )
     # no Page node under the prefix survives
     assert (
         deleted["nodes"]

@@ -98,3 +98,46 @@ def test_edge_occurrences_roll_up_to_edges(spark, pipeline_out):
     edges = pipeline_out["edges"].select(*rolled.columns)
     assert edges.exceptAll(rolled).count() == 0
     assert rolled.exceptAll(edges).count() == 0
+
+
+def test_driver_rollup_matches_spark_rollup_on_edge_cases(spark):
+    """The pyarrow twins of ``graph_nodes`` and ``edges_from_occurrences``
+    give the Spark functions' rows where the two could part: a null etype
+    (a null Type id), labels whose minimum differs between UTF-8 byte order
+    and a locale collation, duplicate domains, and provenance ties broken
+    on sent_id with a null sent_id sorting first."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    from codegraphcontext_spark.pipeline.materialize import (
+        edges_from_occurrences, edges_table, graph_nodes, graph_nodes_table,
+    )
+
+    s = pa.string()
+    docs = pa.table({"url": ["u1", "u2"], "lang": ["en", None]})
+    canon = pa.table({
+        "entity_id": ["e1", "e1", "e2", "e3"],
+        "label": ["zeta", "Äther", "beta", "b"],
+        "etype": ["ORG", "ORG", None, "PER"],
+    }, schema=pa.schema([("entity_id", s), ("label", s), ("etype", s)]))
+    links = pa.table({"domain": ["a.com", "a.com", "b.org"]})
+    occ = pa.table({
+        "subj_id": ["u1", "u1", "u1", "u2", "e1"],
+        "pred": ["MENTIONS", "MENTIONS", "MENTIONS", "LINKS_TO", "HAS_TYPE"],
+        "obj_id": ["e1", "e1", "e1", "a.com", None],
+        "url": ["u1", "u1", "u2", "u2", "u1"],
+        "sent_id": pa.array([3, None, 0, 0, 2], pa.int32()),
+    }, schema=pa.schema([
+        ("subj_id", s), ("pred", s), ("obj_id", s), ("url", s), ("sent_id", pa.int32()),
+    ]))
+
+    def rows(table):
+        return Counter(tuple(r.values()) for r in table.to_pylist())
+
+    frames = [spark.createDataFrame(t) for t in (docs, canon, links, occ)]
+    for spark_plan, twin in (
+        (graph_nodes(*frames[:3]), graph_nodes_table(docs, canon, links)),
+        (edges_from_occurrences(frames[3]), edges_table(occ)),
+    ):
+        assert rows(twin.select(spark_plan.columns)) == rows(spark_plan.toArrow())

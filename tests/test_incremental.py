@@ -30,7 +30,7 @@ from codegraphcontext_spark.pipeline.runner import (
     url_bucket,
 )
 
-from .conftest import stage_rows
+from .conftest import BRANCHES, after_swap, rollups, stage_rows
 
 # the stages a fold rebuilds after the narrow ones, on either global path
 _GLOBALS = ("canon", "linked", "nodes", "edges", "edge_occurrences")
@@ -77,18 +77,21 @@ def full_sets(full_build):
     return stage_rows(full_build)
 
 
+@BRANCHES
 def test_incremental_equals_full(
-    spark, split_corpus, full_sets, tmp_path_factory, fold_path
+    spark, split_corpus, full_sets, tmp_path_factory, fold_path, graph_rollup
 ):
     base_p, delta_p = split_corpus
     wd_incr = str(tmp_path_factory.mktemp("wd_incr"))
 
     incr_runner = PipelineRunner(spark, base_p, wd_incr)
     incr_runner.run()
+    assert rollups(wd_incr) == dict.fromkeys(("nodes", "edges"), graph_rollup)
     incr = incr_runner.run_incremental(delta_p)
     assert runner_mod.LAST_FOLD_PATH == fold_path
+    assert rollups(wd_incr) == dict.fromkeys(("nodes", "edges"), graph_rollup)
 
-    assert stage_rows(incr) == full_sets
+    assert after_swap(stage_rows(incr), fold_path) == after_swap(full_sets, fold_path)
 
 
 def test_incremental_idempotent(spark, split_corpus, tmp_path_factory):
@@ -245,6 +248,9 @@ def test_bucket_layout_and_hard_links(
     assert {s: shown[s]["globals"] for s in _GLOBALS} == dict.fromkeys(
         _GLOBALS, "scoped"
     )
+    # and which branch rolled nodes and edges up
+    assert {s: shown[s]["rollup"] for s in ("nodes", "edges")} == rollups(wd)
+    assert rollups(wd) == dict.fromkeys(("nodes", "edges"), "pyarrow")
 
 
 def _clone(wd, tmp_path_factory, name):
@@ -337,13 +343,16 @@ def relink_full(spark, relink_inputs, tmp_path_factory):
 
 
 @pytest.mark.parametrize("delta", ["stable", "new_surface"])
+@BRANCHES
 def test_fold_global_path_equals_full(
-    spark, relink_inputs, relink_full, tmp_path_factory, fold_path, delta
+    spark, relink_inputs, relink_full, tmp_path_factory, fold_path, graph_rollup,
+    delta,
 ):
     """A bucket-merge fold whose delta leaves canon unchanged takes the
     scoped global tail; one whose delta defines a new surface, or any
     Spark-swap fold, recomputes the global stages. Every stage equals a
-    full build either way, and every global manifest names the path."""
+    full build either way, whichever branch rolls nodes and edges up, and
+    every global manifest names the path."""
     pages, base_wd = relink_inputs["base"]
     wd = _clone(base_wd, tmp_path_factory, f"wd_relink_{delta}")
     out = PipelineRunner(spark, pages, wd).run_incremental(relink_inputs[delta])
@@ -353,7 +362,10 @@ def test_fold_global_path_equals_full(
     assert {s: _manifest(wd, s)["globals"] for s in _GLOBALS} == dict.fromkeys(
         _GLOBALS, path
     )
-    assert stage_rows(out) == relink_full[delta]
+    assert rollups(wd) == dict.fromkeys(("nodes", "edges"), graph_rollup)
+    assert after_swap(stage_rows(out), fold_path) == after_swap(
+        relink_full[delta], fold_path
+    )
     _assert_bucketed(spark, wd, _manifest(wd, "docs")["n_buckets"])
 
 
@@ -395,7 +407,10 @@ def test_legacy_workdir_takes_spark_swap_then_bucket_merge(
     assert runner_mod.LAST_FOLD_PATH == "bucket-merge"
     assert all(_manifest(wd, s)["n_buckets"] == 5 for s in _NARROW + _RELINKED)
     _assert_bucketed(spark, wd, 5)
-    assert stage_rows(out) == full_sets
+    # the first fold's Spark swap wrote the footers the merge keeps
+    assert after_swap(stage_rows(out), "spark-swap") == after_swap(
+        full_sets, "spark-swap"
+    )
 
 
 def test_bucket_merge_keeps_int96_timestamps(spark, tmp_path):

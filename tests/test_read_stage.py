@@ -9,13 +9,19 @@ build reuses the classes the first one compiled."""
 from __future__ import annotations
 
 import itertools
+import json
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import StructType
 
+import codegraphcontext_spark.pipeline.runner as runner_mod
 from codegraphcontext_spark.pipeline.runner import STAGES, PipelineRunner, read_stage
+
+from .conftest import rollups
 
 _GROUPS = itertools.count()
 
@@ -48,6 +54,67 @@ def built(spark, pages, tmp_path_factory) -> str:
     wd = str(tmp_path_factory.mktemp("read_stage_wd"))
     PipelineRunner(spark, pages, wd).run()
     return wd
+
+
+@pytest.fixture(scope="module")
+def spark_rolled(spark, pages, tmp_path_factory) -> str:
+    """The same build with the graph tail forced down the Spark commits
+    (cutover 0); returns its workdir."""
+    wd = str(tmp_path_factory.mktemp("read_stage_spark_rolled"))
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(runner_mod, "_MERGE_MAX_BYTES", 0)
+        PipelineRunner(spark, pages, wd).run()
+    return wd
+
+
+def _footer_schemas(data_dir) -> set:
+    """(Spark footer schema key, physical Arrow fields) of each part file."""
+    out = set()
+    for name in os.listdir(data_dir):
+        if name.startswith("part-"):
+            f = pq.ParquetFile(os.path.join(data_dir, name))
+            fields = tuple((x.name, str(x.type), x.nullable) for x in f.schema_arrow)
+            out.add((f.metadata.metadata[runner_mod._SPARK_SCHEMA_KEY], fields))
+    return out
+
+
+def test_driver_rolled_graph_reads_like_spark_written(spark, built, spark_rolled):
+    """nodes and edges rolled up on the driver carry the footer schema key
+    and the physical columns a Spark commit writes, nullability included
+    (node_type and n_occurrences are required), so read_stage opens them
+    with the same StructType, starting no job, and their rows are the
+    Spark commit's."""
+    assert rollups(built) == dict.fromkeys(("nodes", "edges"), "pyarrow")
+    assert rollups(spark_rolled) == dict.fromkeys(("nodes", "edges"), "spark")
+    required = {"nodes": "node_type", "edges": "n_occurrences"}
+    for stage, column in required.items():
+        dirs = [os.path.join(wd, stage, "data") for wd in (built, spark_rolled)]
+        driver, spark_written = (_footer_schemas(d) for d in dirs)
+        assert len(driver) == 1 and driver == spark_written, stage
+        (key, _), = driver
+        assert not StructType.fromJson(json.loads(key))[column].nullable
+        frames = []
+        for d in dirs:
+            df, n_jobs = _jobs(spark, lambda: read_stage(spark, d))
+            assert n_jobs == 0, stage
+            frames.append(df)
+        assert frames[0].schema == frames[1].schema, stage
+        assert frames[0].exceptAll(frames[1]).count() == 0, stage
+        assert frames[1].exceptAll(frames[0]).count() == 0, stage
+
+
+def test_graph_tail_below_cutover_starts_no_job(spark, pages, built, tmp_path):
+    """Below the cutover the graph tail reads its committed inputs and
+    writes nodes and edges on the driver without a Spark job."""
+    wd = str(tmp_path / "wd")
+    shutil.copytree(built, wd)
+    runner = PipelineRunner(spark, pages, wd)
+    inputs = [runner._load(s) for s in ("docs", "canon", "links", "edge_occurrences")]
+    (nodes, edges), n_jobs = _jobs(spark, lambda: runner._commit_graph(*inputs))
+    assert n_jobs == 0
+    assert rollups(wd) == dict.fromkeys(("nodes", "edges"), "pyarrow")
+    assert nodes.count() == runner.metrics["nodes"]["n_rows"] > 0
+    assert edges.count() == runner.metrics["edges"]["n_rows"] > 0
 
 
 def test_repeat_build_reuses_generated_code(spark, pages, built, tmp_path):

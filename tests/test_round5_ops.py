@@ -96,6 +96,54 @@ def test_queries_do_not_import_cli():
     assert not offenders, offenders
 
 
+def test_pipeline_builds_no_frame_from_python_rows():
+    """The pipeline never hands ``createDataFrame`` a list, tuple, set or
+    comprehension literal, directly or through a name its function binds
+    to one: such a frame is a ``Scan ExistingRDD`` whose every action
+    re-pickles its rows through Python workers, where an Arrow table gives
+    a ``LocalRelation``."""
+    import ast
+    import pathlib
+
+    from codegraphcontext_spark import pipeline
+
+    literals = (
+        ast.List, ast.Tuple, ast.Set, ast.ListComp, ast.SetComp, ast.GeneratorExp,
+    )
+
+    def calls(scope):
+        """(createDataFrame call, its data argument) under ``scope``."""
+        for node in ast.walk(scope):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                yield node, node.args[0] if node.args else next(
+                    (k.value for k in node.keywords if k.arg == "data"), None
+                )
+
+    offenders = set()
+    for path in sorted(pathlib.Path(pipeline.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node, data in calls(tree):
+            if isinstance(data, literals):
+                offenders.add(f"{path.name}:{node.lineno}")
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            bound = {
+                t.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and isinstance(n.value, literals)
+                for t in n.targets if isinstance(t, ast.Name)
+            }
+            for node, data in calls(fn):
+                if isinstance(data, ast.Name) and data.id in bound:
+                    offenders.add(f"{path.name}:{node.lineno}")
+    assert not offenders, sorted(offenders)
+
+
 def test_scc_bowtie_anf_leave_no_cached_plan(spark):
     """kg_graph_scc, kg_graph_bowtie and kg_graph_anf_hll checkpoint their
     intermediates instead of persist()ing them, so the session's cache
